@@ -57,10 +57,15 @@ object Normalize {
       if (convertToUtc) from_utc_timestamp(to_utc_timestamp(c, tzId), tzId) =!= c
       else lit(false)
 
-    val pickupUtc = toUtc(col("pickup_ts"))
-    val dropoffUtc = toUtc(col("dropoff_ts"))
-    val flagU = upper(col("flag_trimmed"))
-    val flagNorm = when(flagU === "N", "No").when(flagU === "Y", "Yes")
+    // one projection computes the UTC instants and the normalized flag; the
+    // errors and travel time reference those attributes
+    val flagU = upper(col(ParseValidate.FlagTrimmedCol))
+    val converted = df.withColumns(Map(
+      "pickup_utc" -> toUtc(col("pickup_ts")),
+      "dropoff_utc" -> toUtc(col("dropoff_ts")),
+      "store_and_fwd_flag" -> when(flagU === "N", "No").when(flagU === "Y", "Yes")))
+    val pickupUtc = col("pickup_utc")
+    val dropoffUtc = col("dropoff_utc")
 
     val err = when(col(ParseValidate.ParseErrorCol).isNotNull, lit(null).cast("string"))
       .otherwise(coalesce(
@@ -70,15 +75,13 @@ object Normalize {
         when(inDstGap(col("dropoff_ts")),
           concat(lit("invalid tpep_dropoff_datetime: nonexistent local time '"),
             col("dropoff_ts").cast("string"), lit("'"))),
-        when(flagNorm.isNull,
-          concat(lit("invalid store_and_fwd_flag value: '"), col("flag_trimmed"), lit("'"))),
+        when(col("store_and_fwd_flag").isNull,
+          concat(lit("invalid store_and_fwd_flag value: '"),
+            col(ParseValidate.FlagTrimmedCol), lit("'"))),
         when(dropoffUtc < pickupUtc,
           lit("domain validation failed: dropoff is earlier than pickup"))))
 
-    df.withColumns(Map(
-      "pickup_utc" -> pickupUtc,
-      "dropoff_utc" -> dropoffUtc,
-      "store_and_fwd_flag" -> flagNorm,
+    converted.withColumns(Map(
       "travel_time_seconds" ->
         (unix_timestamp(dropoffUtc) - unix_timestamp(pickupUtc)).cast("int"),
       NormErrorCol -> err))

@@ -28,7 +28,11 @@ import CsvSource.rawCol
   *
   * Everything is native Column expressions (try_to_timestamp / try_cast /
   * when) — zero UDFs, so the whole stage stays inside WholeStageCodegen
-  * and Catalyst can push/prune around it.
+  * and Catalyst can push/prune around it. The stage is three projections
+  * — trimmed fields, typed values, errors — so each field is trimmed and
+  * parsed once per row: the 14-format lenient timestamp parse appears
+  * once per timestamp column in the optimized plan (PlanAuditSpec pins
+  * this), and the errors reuse the parsed values.
   */
 object ParseValidate {
 
@@ -74,58 +78,62 @@ object ParseValidate {
 
   private def empty(c: Column): Column = c.isNull || c === ""
 
-  /** Append typed columns + `parse_error` to a CsvSource DataFrame. */
+  /** Append typed columns + `parse_error` to a CsvSource DataFrame. The
+    * errors reference the trimmed and typed attributes of the projections
+    * below them; one projection would embed every parse twice, once for
+    * the value and once for its error test. */
   def parse(df: DataFrame, fmt: Option[String] = None): DataFrame = {
-    def t(field: String): Column = trim(col(rawCol(field)))
+    val fields = CsvSource.RequiredColumns
+    def t(field: String): Column = col(trimmedCol(field))
+    val intFields = Seq("passenger_count", "PULocationID", "DOLocationID")
+    def long(field: String): Column = col(s"_long_$field")
 
-    val pickupT = t("tpep_pickup_datetime")
-    val dropoffT = t("tpep_dropoff_datetime")
-    val pcT = t("passenger_count")
-    val distT = t("trip_distance")
-    val flagT = t("store_and_fwd_flag")
-    val puT = t("PULocationID")
-    val doT = t("DOLocationID")
-    val fareT = t("fare_amount")
-    val tipT = t("tip_amount")
+    val trimmed = df.withColumns(
+      fields.map(f => trimmedCol(f) -> trim(col(rawCol(f)))).toMap)
+    val typed = trimmed.withColumns(Map(
+      "pickup_ts" -> parseTs(t("tpep_pickup_datetime"), fmt),
+      "dropoff_ts" -> parseTs(t("tpep_dropoff_datetime"), fmt),
+      "trip_distance" -> parseDecimal(t("trip_distance"), 9, 3),
+      "fare_amount" -> parseDecimal(t("fare_amount"), 10, 2),
+      "tip_amount" -> parseDecimal(t("tip_amount"), 10, 2)) ++
+      intFields.map(f => s"_long_$f" -> parseIntStrict(t(f))))
 
-    val pickupTs = parseTs(pickupT, fmt)
-    val dropoffTs = parseTs(dropoffT, fmt)
-    val pc = parseIntStrict(pcT)
-    val dist = parseDecimal(distT, 9, 3)
-    val pu = parseIntStrict(puT)
-    val dOv = parseIntStrict(doT)
-    val fare = parseDecimal(fareT, 10, 2)
-    val tip = parseDecimal(tipT, 10, 2)
+    val pc = long("passenger_count")
+    val dist = col("trip_distance")
+    val fare = col("fare_amount")
+    val tip = col("tip_amount")
 
-    def fieldError(field: String, trimmed: Column, bad: Column): Column =
-      when(empty(trimmed), lit(s"$field value is missing or empty"))
-        .when(bad, concat(lit(s"invalid $field value: '"), trimmed, lit("'")))
+    def fieldError(field: String, bad: Column): Column =
+      when(empty(t(field)), lit(s"$field value is missing or empty"))
+        .when(bad, concat(lit(s"invalid $field value: '"), t(field), lit("'")))
 
     // First-error-wins: a when-chain evaluates in declaration order, so the
     // field order above is the error precedence (TripRowParserService.cs:34-139).
     val err = coalesce(
-      fieldError("tpep_pickup_datetime", pickupT, pickupTs.isNull),
-      fieldError("tpep_dropoff_datetime", dropoffT, dropoffTs.isNull),
-      fieldError("passenger_count", pcT, pc.isNull || pc < 0 || pc > 255),
-      fieldError("trip_distance", distT, dist.isNull || dist < 0),
-      fieldError("store_and_fwd_flag", flagT, lit(false)),
-      fieldError("PULocationID", puT, dOvBad(pu)),
-      fieldError("DOLocationID", doT, dOvBad(dOv)),
-      fieldError("fare_amount", fareT, fare.isNull || fare < 0),
-      fieldError("tip_amount", tipT, tip.isNull || tip < 0))
+      fieldError("tpep_pickup_datetime", col("pickup_ts").isNull),
+      fieldError("tpep_dropoff_datetime", col("dropoff_ts").isNull),
+      fieldError("passenger_count", pc.isNull || pc < 0 || pc > 255),
+      fieldError("trip_distance", dist.isNull || dist < 0),
+      fieldError("store_and_fwd_flag", lit(false)),
+      fieldError("PULocationID", dOvBad(long("PULocationID"))),
+      fieldError("DOLocationID", dOvBad(long("DOLocationID"))),
+      fieldError("fare_amount", fare.isNull || fare < 0),
+      fieldError("tip_amount", tip.isNull || tip < 0))
 
-    df.withColumns(Map(
-      "pickup_ts" -> pickupTs,
-      "dropoff_ts" -> dropoffTs,
+    typed.withColumns(Map(
       "passenger_count" -> pc.cast("int"),
-      "trip_distance" -> dist,
-      "flag_trimmed" -> flagT,
-      "pulocation_id" -> dOv2Int(pu),
-      "dolocation_id" -> dOv2Int(dOv),
-      "fare_amount" -> fare,
-      "tip_amount" -> tip,
+      "pulocation_id" -> dOv2Int(long("PULocationID")),
+      "dolocation_id" -> dOv2Int(long("DOLocationID")),
       ParseErrorCol -> err))
+      .drop(fields.map(trimmedCol).filter(_ != FlagTrimmedCol) ++
+        intFields.map(f => s"_long_$f"): _*)
   }
+
+  /** The trimmed store_and_fwd_flag; [[Normalize]] maps it to No/Yes. */
+  val FlagTrimmedCol = "flag_trimmed"
+
+  private def trimmedCol(field: String): String =
+    if (field == "store_and_fwd_flag") FlagTrimmedCol else s"_trimmed_$field"
 
   /** int.TryParse bounds: outside Int32 → parse failure. */
   private def dOvBad(v: Column): Column =

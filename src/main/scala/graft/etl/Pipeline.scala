@@ -7,11 +7,11 @@ import org.apache.spark.storage.StorageLevel
   * (TaxiEtl/TaxiEtl.Application/Services/TripEtlPipelineService.cs:58-194).
   *
   * The reference's per-row pull loop becomes one lazily-planned DataFrame
-  * DAG with three consumers: the inserted-rows sink, the duplicates sink,
-  * and the stats aggregation. The annotated frame is persisted once
-  * (MEMORY_AND_DISK) so the three actions share a single scan+parse+window
-  * computation instead of recomputing it — the Spark analog of the
-  * reference streaming the file exactly once. At cluster scale the same
+  * DAG with three consumers: the inserted-rows sink, the duplicates sink
+  * and the six counters. The annotated frame is persisted once
+  * (MEMORY_AND_DISK) and read by two actions: the inserted-rows write,
+  * which also yields the counters through an `Observation` attached ahead
+  * of its filter, and the duplicates write. At cluster scale the same
   * structure holds; the persist spills to disk instead of OOMing.
   */
 object Pipeline {
@@ -40,13 +40,14 @@ object Pipeline {
   }
 
   /** Run the full ETL: write inserted rows + duplicates side output, return
-    * the six counters. */
+    * the six counters (observed during the inserted-rows write). */
   def run(spark: SparkSession, config: EtlConfig): Stats.EtlStats = {
     val annotated = annotate(spark, config).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      Sinks.writeInserted(annotated, config.insertedPath)
+      val (observed, counters) = Stats.observe(annotated)
+      Sinks.writeInserted(observed, config.insertedPath)
       Sinks.writeDuplicates(annotated, config.duplicatesCsvPath)
-      Stats.compute(annotated)
+      counters()
     } finally annotated.unpersist()
   }
 }

@@ -22,11 +22,15 @@ import CsvSource.rawCol
   */
 object Sinks {
 
+  /** The dedup key columns as (annotated name, dbo.Trips name): the
+    * first three columns of the trips table. */
+  val tripKeyCols: Seq[(String, String)] = Seq(
+    "pickup_utc" -> "tpep_pickup_datetime",
+    "dropoff_utc" -> "tpep_dropoff_datetime",
+    "passenger_count" -> "passenger_count")
+
   /** Target-table columns in dbo.Trips order (script.sql:33-44). */
-  private val tripCols = Seq(
-    col("pickup_utc").as("tpep_pickup_datetime"),
-    col("dropoff_utc").as("tpep_dropoff_datetime"),
-    col("passenger_count"),
+  private val tripCols = tripKeyCols.map { case (a, t) => col(a).as(t) } ++ Seq(
     col("trip_distance"),
     col("store_and_fwd_flag"),
     col("pulocation_id").as("PULocationID"),
@@ -42,7 +46,7 @@ object Sinks {
   def selectTripColumns(df: DataFrame): DataFrame = df.select(tripCols: _*)
 
   def insertedRows(annotated: DataFrame): DataFrame =
-    selectTripColumns(annotated.filter(Stats.statusCol === "inserted"))
+    selectTripColumns(annotated.filter(Stats.isInserted()))
 
   def writeInserted(annotated: DataFrame, path: String): Unit =
     insertedRows(annotated).write.mode(SaveMode.Overwrite).parquet(path)
@@ -65,7 +69,7 @@ object Sinks {
         CsvSource.RequiredColumns.map(c => col(rawCol(c)).as(c)): _*)
 
   def duplicateRows(annotated: DataFrame): DataFrame =
-    selectDuplicateColumns(annotated.filter(Stats.statusCol === "duplicate"))
+    selectDuplicateColumns(annotated.filter(Stats.isDuplicate()))
 
   /** Append-across-runs, like the reference: CsvDuplicateTripWriter.cs:56-109
     * opens duplicates.csv in append mode and writes the header only when

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** A1 — the six run counters, computed in ONE aggregation pass over the
@@ -27,45 +27,70 @@ object Stats {
       inserted: Long,
       duplicatesFileRows: Long)
 
-  /** Row status derived from the annotation columns; usable as a column in
-    * relational results too. */
+  private def cnt(c: Column): Column = count(when(c, 1))
+
+  private def valid: Column =
+    col(ParseValidate.ParseErrorCol).isNull && col(Normalize.NormErrorCol).isNull
+
+  /** A valid row that loses first-wins dedup. `seen` marks rows whose key
+    * an earlier micro-batch already inserted (the streaming sink's
+    * cross-batch state); a single batch run has none. */
+  def isDuplicate(seen: Column = lit(false)): Column =
+    valid && (seen || col(Dedup.DupRankCol) > 1)
+
+  /** A valid row that wins first-wins dedup and is written to the trips sink. */
+  def isInserted(seen: Column = lit(false)): Column =
+    valid && !seen && col(Dedup.DupRankCol) === 1
+
+  /** Row status derived from the annotation columns, for relational
+    * results; the duplicate and inserted labels are [[isDuplicate]] and
+    * [[isInserted]]. */
   def statusCol: Column =
     when(col(ParseValidate.ParseErrorCol).isNotNull, "invalid_parse")
       .when(col(Normalize.NormErrorCol).isNotNull, "invalid_normalize")
-      .when(col(Dedup.DupRankCol) > 1, "duplicate")
-      .otherwise("inserted")
+      .when(isDuplicate(), "duplicate")
+      .when(isInserted(), "inserted")
 
-  private def cnt(c: Column): Column = count(when(c, 1))
+  /** Names of the five aggregates of [[counters]], in [[EtlStats]] order. */
+  private val CounterNames: Seq[String] =
+    Seq("total", "parsed", "invalid", "duplicates", "inserted")
+
+  /** The five counter aggregates over an annotated frame — the one
+    * definition behind [[compute]], [[asDataFrame]], the batch pipeline's
+    * observed write and the streaming sink's per-batch deltas. */
+  def counters(seen: Column = lit(false)): Seq[Column] = Seq(
+    count(lit(1)),
+    cnt(col(ParseValidate.ParseErrorCol).isNull),
+    cnt(!valid),
+    cnt(isDuplicate(seen)),
+    cnt(isInserted(seen))).zip(CounterNames).map { case (c, n) => c.as(n) }
+
+  private def fromMetrics(m: Map[String, Any]): EtlStats = {
+    val Seq(total, parsed, invalid, duplicates, inserted) =
+      CounterNames.map(n => m(n).asInstanceOf[Long])
+    EtlStats(total, parsed, invalid, duplicates, inserted,
+      duplicatesFileRows = duplicates)
+  }
+
+  /** `df` with the [[counters]] attached as an `Observation`, so the first
+    * action over it yields them from the same pass; the returned function
+    * waits for that action and returns the counters. */
+  def observe(df: DataFrame, seen: Column = lit(false)): (DataFrame, () => EtlStats) = {
+    val observation = Observation()
+    val cs = counters(seen)
+    (df.observe(observation, cs.head, cs.tail: _*), () => fromMetrics(observation.get))
+  }
 
   /** Single-pass aggregation to the six counters. */
   def compute(annotated: DataFrame): EtlStats = {
-    val parseErr = col(ParseValidate.ParseErrorCol).isNotNull
-    val normErr = col(Normalize.NormErrorCol).isNotNull
-    val dup = !parseErr && !normErr && col(Dedup.DupRankCol) > 1
-    val ins = !parseErr && !normErr && col(Dedup.DupRankCol) === 1
-    val r = annotated.agg(
-      count(lit(1)).as("total"),
-      cnt(!parseErr).as("parsed"),
-      cnt(parseErr || normErr).as("invalid"),
-      cnt(dup).as("duplicates"),
-      cnt(ins).as("inserted")).head()
-    EtlStats(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-      duplicatesFileRows = r.getLong(3))
+    val cs = counters()
+    fromMetrics(annotated.agg(cs.head, cs.tail: _*).head().getValuesMap[Any](CounterNames))
   }
 
   /** The same six counters as a single-row DataFrame (for the driver's
     * relational correctness checks). */
   def asDataFrame(annotated: DataFrame): DataFrame = {
-    val parseErr = col(ParseValidate.ParseErrorCol).isNotNull
-    val normErr = col(Normalize.NormErrorCol).isNotNull
-    val dup = !parseErr && !normErr && col(Dedup.DupRankCol) > 1
-    val ins = !parseErr && !normErr && col(Dedup.DupRankCol) === 1
-    annotated.agg(
-      count(lit(1)).as("total"),
-      cnt(!parseErr).as("parsed"),
-      cnt(parseErr || normErr).as("invalid"),
-      cnt(dup).as("duplicates"),
-      cnt(ins).as("inserted"),
-      cnt(dup).as("duplicates_file"))
+    val cs = counters()
+    annotated.agg(cs.head, cs.tail :+ cnt(isDuplicate()).as("duplicates_file"): _*)
   }
 }

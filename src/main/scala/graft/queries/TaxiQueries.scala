@@ -41,7 +41,7 @@ object TaxiQueries {
   private def fmtTs(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
   private def trips(spark: SparkSession): DataFrame =
-    annotated(spark).filter(Stats.statusCol === "inserted").select(
+    annotated(spark).filter(Stats.isInserted()).select(
       fmtTs(col("pickup_utc")).as("pickup_utc"),
       fmtTs(col("dropoff_utc")).as("dropoff_utc"),
       col("passenger_count").cast("long").as("passenger_count"),

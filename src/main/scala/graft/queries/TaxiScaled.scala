@@ -203,7 +203,7 @@ object TaxiScaled {
     Stats.asDataFrame(annotated(spark, sfDir))
 
   private def trips(spark: SparkSession, sfDir: String): DataFrame =
-    annotated(spark, sfDir).filter(Stats.statusCol === "inserted").select(
+    annotated(spark, sfDir).filter(Stats.isInserted()).select(
       fmtTs(col("pickup_utc")).as("pickup_utc"),
       fmtTs(col("dropoff_utc")).as("dropoff_utc"),
       col("passenger_count").cast("long").as("passenger_count"),

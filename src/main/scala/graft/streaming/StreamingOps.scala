@@ -99,9 +99,8 @@ object StreamingOps {
     * analog of [[graft.etl.Stats.EtlStats]], filled incrementally by
     * [[taxiStreamBatchProcessor]]. foreachBatch callbacks run serially on
     * the driver, so LongAdder here is belt-and-suspenders THREAD safety
-    * only — it does nothing for batch REPLAY: a checkpoint restart that
-    * re-runs a batch re-counts it (see the processor's at-least-once
-    * caveat). */
+    * only; replay safety comes from the processor's commit log (a
+    * committed batch is never counted twice). */
   final class TaxiStreamCounters {
     import java.util.concurrent.atomic.LongAdder
     val total = new LongAdder
@@ -475,7 +474,7 @@ object StreamingOps {
 
   /** Micro-batches at or below this row count get their batch-sized join
     * sides broadcast (the per-batch fixed-cost optimization: no exchange
-    * stages, state streams through as block reads). ABOVE it — a
+    * stages, the state streams through as a scan). ABOVE it — a
     * backlogged source's catch-up batch can be arbitrarily large — the
     * planner's shuffle join is the safe path: broadcasting a
     * multi-million-row batch hits driver memory and the broadcast size
@@ -508,6 +507,14 @@ object StreamingOps {
     fs.exists(dir) && fs.listStatus(dir).exists(f =>
       f.isFile && !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith(".") && f.getLen > 0)
+
+  /** Partitions that rewrite `dirs` as ~128 MB files (at least one). */
+  private def coalescedParts(fs: org.apache.hadoop.fs.FileSystem,
+      dirs: Seq[String]): Int = {
+    val bytes = dirs.map(d =>
+      fs.getContentSummary(new org.apache.hadoop.fs.Path(d)).getLength).sum
+    math.max(1, math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
+  }
 
   /** Directories of the committed read view under an output root: every
     * `range=` dir (ranges hold only committed data by construction) plus
@@ -586,13 +593,9 @@ object StreamingOps {
         empty.foreach(b => fs.delete(new Path(s"$root/batch_id=$b"), true))
         if (ids.size >= 2) {
           val dirs = ids.map(b => s"$root/batch_id=$b")
-          val bytes = dirs.map(d =>
-            fs.getContentSummary(new Path(d)).getLength).sum
-          val parts = math.max(1,
-            math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
           val tmp = new Path(root, s".tmp_range_${ids.head}_${ids.last}")
           fs.delete(tmp, true)
-          spark.read.parquet(dirs: _*).coalesce(parts)
+          spark.read.parquet(dirs: _*).coalesce(coalescedParts(fs, dirs))
             .write.parquet(tmp.toString)
           val dst = new Path(root, s"$RangePrefix${ids.head}-${ids.last}")
           // dst can pre-exist only if its absorbed dirs still do (deletes
@@ -606,9 +609,9 @@ object StreamingOps {
   }
 
   /** The foreachBatch half of full stream/batch parity: every micro-batch
-    * feeds the reference pipeline's THREE consumers (inserted table,
-    * duplicates side file, six counters — the batch shape is
-    * `Pipeline.run`'s three actions over one persisted frame).
+    * feeds the reference pipeline's three consumers (inserted table,
+    * duplicates side file, six counters), as [[graft.etl.Pipeline.run]]
+    * does for one file.
     *
     * First-wins dedup across an unbounded stream = within-batch first-wins
     * (the batch window on the ordinal, reused as-is) + a cross-batch
@@ -617,9 +620,31 @@ object StreamingOps {
     * replayed in file order this reproduces the batch pipeline's winners
     * EXACTLY, ordinal for ordinal.
     *
+    * Per micro-batch, in order (the `faultPoint` after each step in
+    * brackets):
+    *  1. the inserted rows are written to `batch_id=<b>` under the trips
+    *     table; an `Observation` attached ahead of the inserted filter
+    *     yields the five counter deltas from that same pass (a batch with
+    *     no rows removes the directory and commits nothing)
+    *     [after-inserted];
+    *  2. the seen-keys increment — the key projection of the directory
+    *     just written — is appended to the [[KeyedStreamState]], unless
+    *     the batch inserted nothing [after-seen];
+    *  3. a batch with duplicates writes them to the duplicates side-state
+    *     [after-dupstate] and rebuilds the duplicates CSV from the
+    *     committed side-state (the first batch also writes the empty file)
+    *     [after-csv];
+    *  4. the commit marker publishes, carrying the deltas [after-marker];
+    *  5. post-commit maintenance, each step amortized over several
+    *     batches: commit-log roll-up, seen-keys compaction
+    *     (`compact-after-snap:seen`, `compact-after-snapshots`) and
+    *     trips-output compaction.
+    * The micro-batch is not persisted, so adaptive execution sizes every
+    * write's partitions to the batch; a batch with duplicates recomputes
+    * the micro-batch once more for its duplicate rows.
+    *
     * Failure semantics are EXACTLY-ONCE under crash + checkpoint-restart
-    * replay (the r7 verdict's one open correctness gap), by batchId
-    * versioning instead of a transaction:
+    * replay, by batchId versioning instead of a transaction:
     *  - every data write is an idempotent OVERWRITE of a per-batch
     *    directory (`batch_id=<b>` under the inserted table, the seen-keys
     *    state, and the duplicates side-state), so re-running a batch
@@ -636,28 +661,15 @@ object StreamingOps {
     *    counter deltas; a replay of a batch whose marker exists is a
     *    complete no-op, and counters bootstrap from the marker log on
     *    restart — so a fresh [[TaxiStreamCounters]] passed to a restarted
-    *    stream converges to the batch pipeline's exact golden stats.
+    *    stream converges to the batch pipeline's exact golden stats;
+    *  - maintenance runs only after the marker, so a crash inside it
+    *    replays as a no-op, and it never deletes a file that the batch
+    *    still reads.
     * Every crash point therefore lands in one of two states: before the
     * marker (the whole batch re-runs; every write idempotent) or after it
     * (the whole batch is skipped). StreamingOpsSpec kills the processor at
-    * each write boundary and asserts golden-stats + kept-set parity.
-    *
-    * Scale notes: the seen-keys state is a [[KeyedStreamState]] since
-    * r10 — in-memory localCheckpointed increments with the parquet
-    * directories demoted to a commit-filtered changelog read once at
-    * restart. Before, every micro-batch re-read the WHOLE accumulated
-    * seen-keys parquet, so per-batch state cost grew linearly with
-    * stream age (the r5 MinHash problem, finally fixed on the flagship
-    * stream too). At production scale the same role is a transactional
-    * keyed store; the commit protocol above is exactly the one those
-    * stores implement (write-versioned data + an atomic commit publish),
-    * so the plan and the semantics carry over unchanged. The state
-    * changelog dirs compact to a snapshot + tail on disk
-    * ([[KeyedStreamState]] since r10); the committed-id set still grows
-    * one marker per batch — markers gate the INSERTED table's read view
-    * too, so compacting them needs a low-watermark + tail scheme (the
-    * usual checkpoint compaction), which only changes marker storage,
-    * not the protocol.
+    * each fault point and asserts counter, kept-key and duplicates-file
+    * parity with the batch pipeline.
     *
     * `epoch` scopes this stream start's committed-batch ids
     * ([[CommitLog.pack]]) so a fresh-checkpoint restart over an existing
@@ -665,39 +677,21 @@ object StreamingOps {
     * committed ids; [[runTaxiEtlStream]] resolves it from the checkpoint
     * dir via [[CommitLog.resolveEpoch]].
     *
-    * `faultPoint` is test instrumentation: a hook invoked with a named
-    * crash site (`after-inserted`, `after-seen`, `after-dupstate`,
-    * `after-csv`, `after-marker`) that the crash-replay spec uses to
-    * throw mid-batch; production callers leave the default no-op. */
+    * `faultPoint` is test instrumentation: a hook invoked with the named
+    * crash sites above that the crash-replay spec uses to throw mid-batch;
+    * production callers leave the default no-op. */
   def taxiStreamBatchProcessor(
       insertedPath: String,
       duplicatesCsvPath: String,
       seenKeysPath: String,
       counters: TaxiStreamCounters,
       epoch: Long = 0L,
-      faultPoint: String => Unit = _ => ()): TaxiBatchSink = {
-    val p = new TaxiStreamProcessor(insertedPath, duplicatesCsvPath,
-      seenKeysPath, counters, epoch, faultPoint)
-    new TaxiBatchSink(p)
-  }
-
-  /** The foreachBatch function form of the taxi sink WITH an explicit
-    * lifecycle: the processor's seen-keys state holds localCheckpoint
-    * blocks, so a caller that stops the stream must [[close]] (as
-    * [[runTaxiEtlStream]] does via query termination) or the blocks
-    * outlive the stream until JVM exit. Extends Function2 so existing
-    * `sink(df, id)` call sites are unchanged. */
-  final class TaxiBatchSink private[streaming] (
-      p: TaxiStreamProcessor) extends ((DataFrame, Long) => Unit)
-      with AutoCloseable {
-    def apply(df: DataFrame, id: Long): Unit = p.apply(df, id)
-    def close(): Unit = p.close()
-  }
+      faultPoint: String => Unit = _ => ()): (DataFrame, Long) => Unit =
+    new TaxiStreamProcessor(insertedPath, duplicatesCsvPath,
+      seenKeysPath, counters, epoch, faultPoint).apply _
 
   /** The class form of [[taxiStreamBatchProcessor]] (same protocol and
-    * scaladoc contract) — exposes `close()` to release the seen-keys
-    * state blocks, which [[runTaxiEtlStream]] wires to query
-    * termination. */
+    * scaladoc contract); its state bootstraps on the first batch. */
   private[streaming] final class TaxiStreamProcessor(
       insertedPath: String,
       duplicatesCsvPath: String,
@@ -705,9 +699,10 @@ object StreamingOps {
       counters: TaxiStreamCounters,
       epoch: Long = 0L,
       faultPoint: String => Unit = _ => ()) {
-    import graft.etl.{Dedup, Normalize, ParseValidate, Sinks}
+    import graft.etl.{Dedup, Sinks, Stats}
+    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SaveMode
-    private val keyCols = Seq("pickup_utc", "dropoff_utc", "passenger_count")
+    private val keyCols = Sinks.tripKeyCols.map(_._1)
     private val dupStatePath = duplicatesCsvPath + "._state"
     // committed-batch ids, bootstrapped from the marker log on first
     // invocation (restart recovery) and maintained live afterwards; the
@@ -719,29 +714,32 @@ object StreamingOps {
       newIds(id) || committedBase.contains(id)
     private var log: CommitLog = null
     private var state: KeyedStreamState = null
-    def close(): Unit = if (state != null) state.close()
+
+    /** Nothing to release: the state lives in its parquet directories.
+      * Kept only for the reference-CSV specs in StreamingOpsSpec, its sole
+      * callers; remove it together with their calls. */
+    def close(): Unit = ()
+
+    private def addCounters(d: Array[Long]): Unit = {
+      counters.total.add(d(0)); counters.parsed.add(d(1))
+      counters.invalid.add(d(2)); counters.duplicates.add(d(3))
+      counters.inserted.add(d(4))
+    }
 
     def apply(batchIn: DataFrame, rawBatchId: Long): Unit = {
       val batchId = CommitLog.pack(epoch, rawBatchId)
       val spark = batchIn.sparkSession
+      val fs = new Path(insertedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (log == null) {
         log = new CommitLog(spark, insertedPath)
         val cm = log.committed()
-        val d = cm.deltaSums.padTo(5, 0L)
-        counters.total.add(d(0)); counters.parsed.add(d(1))
-        counters.invalid.add(d(2)); counters.duplicates.add(d(3))
-        counters.inserted.add(d(4))
+        addCounters(cm.deltaSums.padTo(5, 0L))
         committedBase = cm
-        // the seen-keys state is a [[KeyedStreamState]] changelog since
-        // r10 (table dir `<seenKeysPath>/seen/batch_id=N`): before, every
-        // micro-batch RE-READ the whole accumulated seen-keys parquet —
-        // per-batch state cost grew with stream age, the exact r5 MinHash
-        // problem. Pre-r10 trees stored batches directly under
-        // `<seenKeysPath>/batch_id=N`; that layout would silently
-        // bootstrap EMPTY (previously seen keys re-admitted), so it is
-        // detected and refused, as in KeyedStreamState itself.
-        val sp = new org.apache.hadoop.fs.Path(seenKeysPath)
-        val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // the seen-keys state lives under `<seenKeysPath>/seen/`; keys
+        // stored directly under `<seenKeysPath>/batch_id=N` (an older
+        // layout) would bootstrap EMPTY and re-admit every seen key, so
+        // that layout is refused, as in KeyedStreamState itself
+        val sp = new Path(seenKeysPath)
         if (fs.exists(sp)) {
           val stray = fs.listStatus(sp).iterator.map(_.getPath.getName)
             .filter(_.startsWith("batch_id=")).toSeq
@@ -755,91 +753,81 @@ object StreamingOps {
         state = new KeyedStreamState(spark, seenKeysPath, Seq("seen"),
           cm, faultPoint)
       }
-      if (!isCommitted(batchId) && !batchIn.isEmpty) {
-        // sources without a real ordinal (directory streams have no global
-        // file order) get a per-batch arrival surrogate — synthesized HERE
-        // because monotonically_increasing_id is rejected on streaming
-        // frames but fine on the materialized micro-batch
-        val batch0 =
-          if (batchIn.columns.contains(graft.etl.CsvSource.LineNumberCol)) batchIn
-          else batchIn.withColumn(graft.etl.CsvSource.LineNumberCol,
-            monotonically_increasing_id())
-        val annotated = Dedup.withFirstWins(batch0)
-        // COMMIT-FILTERED state: keys appended by a crashed, not-yet-
-        // committed batch attempt are invisible (the bootstrap reads only
-        // committed batch_id dirs), so the replay classifies rows exactly
-        // as the first attempt did. Keys are unique across committed
-        // batches by construction (only unseen winners append), so no
-        // distinct() is needed.
-        val seen =
-          if (state.isEmpty) annotated.select(keyCols.map(col): _*).limit(0)
-          else state.table("seen")
-        val withSeen = annotated
-          .join(seen.withColumn("_seen", lit(true)), keyCols, "left")
-          .persist()
-        try {
-          val parseErr = col(ParseValidate.ParseErrorCol).isNotNull
-          val normErr = col(Normalize.NormErrorCol).isNotNull
-          val valid = !parseErr && !normErr
-          val dup = valid &&
-            (coalesce(col("_seen"), lit(false)) || col(Dedup.DupRankCol) > 1)
-          val ins = valid && !coalesce(col("_seen"), lit(false)) &&
-            col(Dedup.DupRankCol) === 1
-          def cnt(c: org.apache.spark.sql.Column) = count(when(c, 1))
-          val r = withSeen.agg(count(lit(1)), cnt(!parseErr),
-            cnt(parseErr || normErr), cnt(dup), cnt(ins)).head()
-          val deltas = Array(r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4))
-          // idempotent per-batch overwrites, marker last
-          Sinks.selectTripColumns(withSeen.filter(ins))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$insertedPath/batch_id=$batchId")
-          faultPoint("after-inserted")
-          state.append(batchId, Map(
-            "seen" -> withSeen.filter(ins).select(keyCols.map(col): _*)))
-          faultPoint("after-seen")
-          val dupRows = Sinks.selectDuplicateColumns(withSeen.filter(dup))
-          // dup side-state dirs exist only for batches that HAD duplicates
-          // (an empty-frame parquet write leaves no schema to read back);
-          // a batch's dup count is deterministic, so replay writes — or
-          // skips — the same directory
-          if (deltas(3) > 0)
-            dupRows.write.mode(SaveMode.Overwrite)
-              .parquet(s"$dupStatePath/batch_id=$batchId")
-          faultPoint("after-dupstate")
-          // deterministic rebuild from committed side-state + this batch:
-          // append order = (batch_id, LineNumber), the same file a true
-          // per-batch append in commit order would have produced. Skipped
-          // when this batch changes nothing and the file already exists.
-          val hfs = new org.apache.hadoop.fs.Path(duplicatesCsvPath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (deltas(3) > 0 ||
-              !hfs.exists(new org.apache.hadoop.fs.Path(duplicatesCsvPath))) {
-            val dupDirs = presentBatchIds(hfs,
-                new org.apache.hadoop.fs.Path(dupStatePath))
-              .filter(b => isCommitted(b) || b == batchId).toSeq.sorted
-              .map(b => s"$dupStatePath/batch_id=$b")
-            val dupAll =
-              if (dupDirs.isEmpty) dupRows.limit(0).withColumn("batch_id", lit(0L))
-              else spark.read.option("basePath", dupStatePath).parquet(dupDirs: _*)
-            Sinks.overwriteSingleCsv(
-              dupAll.orderBy(col("batch_id"), col("LineNumber").cast("long"))
-                .drop("batch_id"),
-              duplicatesCsvPath)
-          }
-          faultPoint("after-csv")
-          log.commit(batchId, deltas)
-          faultPoint("after-marker")
-          newIds += batchId
-          counters.total.add(deltas(0)); counters.parsed.add(deltas(1))
-          counters.invalid.add(deltas(2)); counters.duplicates.add(deltas(3))
-          counters.inserted.add(deltas(4))
-          // post-commit, so a crash mid-compaction replays as a no-op
-          log.compact(KeyedStreamState.CompactEvery)
-          compactOutput(spark, insertedPath, isCommitted,
-            KeyedStreamState.CompactEvery)
-        } finally withSeen.unpersist()
+      if (isCommitted(batchId)) return
+      // sources without a real ordinal (directory streams have no global
+      // file order) get a per-batch arrival surrogate — synthesized HERE
+      // because monotonically_increasing_id is rejected on streaming
+      // frames but fine on the micro-batch, and deterministic when the
+      // duplicate path recomputes it over the same input splits
+      val batch0 =
+        if (batchIn.columns.contains(graft.etl.CsvSource.LineNumberCol)) batchIn
+        else batchIn.withColumn(graft.etl.CsvSource.LineNumberCol,
+          monotonically_increasing_id())
+      val annotated = Dedup.withFirstWins(batch0)
+      // COMMIT-FILTERED state: keys appended by a crashed, not-yet-
+      // committed batch attempt are invisible (the bootstrap reads only
+      // committed batch_id dirs), so the replay classifies rows exactly
+      // as the first attempt did. Keys are unique across committed
+      // batches by construction (only unseen winners append), so no
+      // distinct() is needed. `withSeen` captures the state's scan as of
+      // this batch's start, so the duplicate path's recomputation reads
+      // the same keys after this batch's own append.
+      val withSeen =
+        if (state.isEmpty) annotated.withColumn("_seen", lit(false))
+        else annotated.join(
+          state.table("seen").withColumn("_seen", lit(true)), keyCols, "left")
+      val seen = coalesce(col("_seen"), lit(false))
+
+      // idempotent per-batch overwrites, marker last
+      val insertedDir = s"$insertedPath/batch_id=$batchId"
+      val (observed, counted) = Stats.observe(withSeen, seen)
+      Sinks.selectTripColumns(observed.filter(Stats.isInserted(seen)))
+        .write.mode(SaveMode.Overwrite).parquet(insertedDir)
+      val d = counted()
+      if (d.total == 0) { fs.delete(new Path(insertedDir), true); return }
+      val deltas = Array(d.total, d.parsed, d.invalid, d.duplicates, d.inserted)
+      faultPoint("after-inserted")
+      if (d.inserted > 0)
+        state.append(batchId, Map("seen" -> spark.read.parquet(insertedDir).select(
+          Sinks.tripKeyCols.map { case (a, t) => col(t).as(a) }: _*)))
+      faultPoint("after-seen")
+      // dup side-state dirs exist only for batches that HAD duplicates
+      // (an empty-frame parquet write leaves no schema to read back); a
+      // batch's dup count is deterministic, so replay writes — or skips —
+      // the same directory
+      val dupRows = Sinks.selectDuplicateColumns(withSeen.filter(Stats.isDuplicate(seen)))
+      if (d.duplicates > 0)
+        dupRows.write.mode(SaveMode.Overwrite)
+          .parquet(s"$dupStatePath/batch_id=$batchId")
+      faultPoint("after-dupstate")
+      // deterministic rebuild from committed side-state + this batch:
+      // append order = (batch_id, LineNumber), the same file a true
+      // per-batch append in commit order would have produced. Skipped
+      // when this batch changes nothing and the file already exists.
+      if (d.duplicates > 0 || !fs.exists(new Path(duplicatesCsvPath))) {
+        val dupDirs = presentBatchIds(fs, new Path(dupStatePath))
+          .filter(b => isCommitted(b) || b == batchId).toSeq.sorted
+          .map(b => s"$dupStatePath/batch_id=$b")
+        val dupAll =
+          if (dupDirs.isEmpty) dupRows.limit(0).withColumn("batch_id", lit(0L))
+          else spark.read.option("basePath", dupStatePath).parquet(dupDirs: _*)
+        // the file is one part: sorting inside the single partition orders
+        // it without a global sort's sampling job
+        Sinks.overwriteSingleCsv(
+          dupAll.coalesce(1)
+            .sortWithinPartitions(col("batch_id"), col("LineNumber").cast("long"))
+            .drop("batch_id"),
+          duplicatesCsvPath)
       }
+      faultPoint("after-csv")
+      log.commit(batchId, deltas)
+      faultPoint("after-marker")
+      newIds += batchId
+      addCounters(deltas)
+      log.compact(KeyedStreamState.CompactEvery)
+      state.compactIfDue()
+      compactOutput(spark, insertedPath, isCommitted,
+        KeyedStreamState.CompactEvery)
     }
   }
 
@@ -857,13 +845,11 @@ object StreamingOps {
       config.insertedPath, config.duplicatesCsvPath, seenKeysPath, counters,
       epoch = CommitLog.resolveEpoch(
         rawLines.sparkSession, checkpointDir, config.insertedPath))
-    val query = annotateTaxiLines(rawLines, config, columnIndex)
+    annotateTaxiLines(rawLines, config, columnIndex)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(proc.apply _)
       .start()
-    closeOnTermination(rawLines.sparkSession, query, () => proc.close())
-    query
   }
 
   final case class KeyedCount(key: String, n: Long, total: Double)
@@ -934,172 +920,166 @@ object StreamingOps {
       }
   }
 
-  /** Block-manager-backed keyed state for the MinHash ingest stream —
-    * the r5 verdict's "real keyed state store" item. The band table and
-    * kept-doc shingles live as localCheckpointed in-memory increments
-    * (an LSM shape: one increment per batch, compacted every
-    * [[KeyedStreamState.CompactEvery]] batches so the scan count stays
-    * bounded and superseded blocks are released); the parquet state
-    * directories are demoted to a CHANGELOG — written per batch for
-    * durability, re-read only once at restart (bootstrap), never on the
-    * hot path — and compaction folds through to disk as a
-    * `_snapshot=<upTo>` dir + batch tail (see [[compact]]), so the
-    * directory count and restart probes stay bounded instead of growing
-    * with stream age. Before this, every micro-batch re-read the
-    * ENTIRE accumulated state from parquet (~40 jobs/batch, 21 docs/s at
-    * sf0.1 — PERF.md r5).
+  /** Keyed state for the exactly-once stream sinks (the taxi seen-keys and
+    * the ingest-dedup band/shingle/unit tables), kept as a parquet
+    * changelog: per table, a `batch_id=<b>` directory per appended batch
+    * plus at most one `_snapshot=<upTo>` directory that folds every
+    * committed batch up to `upTo`. [[append]] writes each increment once
+    * and keeps its directory; [[table]] is ONE parquet scan over the
+    * table's current directories, so the scan's partition count follows
+    * the file packing of a few small directories instead of growing with
+    * every absorbed batch, and nothing is held in the block manager.
+    *
+    * A restart bootstraps by listing the same directories,
+    * COMMIT-FILTERED: only `batch_id=<b>` directories whose batch has a
+    * published marker in the caller's CommitLog enter the state, so a
+    * crash between table writes leaves uncommitted debris directories that
+    * the filter never reads and the replayed batch overwrites. A batch
+    * with nothing to add leaves no directory — absence is data.
+    *
+    * [[compactIfDue]] runs post-commit, every
+    * [[KeyedStreamState.CompactEvery]] appends: each table is rewritten as
+    * one coalesced `_snapshot=<upTo>` directory, and the directories it
+    * folds are deleted, so the directory count and restart probes stay
+    * bounded by CompactEvery+1 per table. Running it after the marker
+    * keeps it off the in-flight batch's reads: a batch's recomputed frames
+    * still scan the directories listed when the batch began.
     *
     * At cluster scale this role is played by a transactional keyed store
     * (RocksDB state store behind flatMapGroupsWithState, or a MERGE-able
     * table): the interface — keyed lookup + per-batch append — is
     * exactly what those serve, and the changelog/bootstrap split mirrors
     * their WAL + snapshot recovery. The in-batch CC step is why the
-    * orchestration stays foreachBatch rather than a chained stateful
-    * operator: connected components is iterative, which no single
-    * streaming operator expresses. */
+    * ingest orchestration stays foreachBatch rather than a chained
+    * stateful operator: connected components is iterative, which no
+    * single streaming operator expresses. */
   private[streaming] final class KeyedStreamState(
       spark: org.apache.spark.sql.SparkSession, statePath: String,
       tables: Seq[String], committed: CommitLog.Committed,
       faultPoint: String => Unit = _ => ()) {
-    import org.apache.spark.sql.{GraftBridge, SaveMode}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.{Observation, SaveMode}
     import KeyedStreamState.SnapPrefix
-    private val fs = new org.apache.hadoop.fs.Path(statePath)
+    private val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private var incs: Map[String, Vector[DataFrame]] =
-      tables.map(_ -> Vector.empty[DataFrame]).toMap
-    private var sinceCompact = 0
-    // highest batch id whose committed changelog content is folded into
-    // `incs` — the cover point a disk snapshot is stamped with
-    private var maxIncludedId: Long = -1L
-    // restart bootstrap: one changelog read per table, COMMIT-FILTERED —
-    // only `batch_id=<b>` directories whose batch has a published marker
-    // in the caller's CommitLog enter the state (r8's torn-changelog
-    // quarantine is gone because torn states are now unrepresentable:
-    // a crash between table writes leaves uncommitted debris directories
-    // that the filter never reads and the replayed batch overwrites).
-    // A batch with nothing to add wrote no directory — absence is data.
-    locally {
-      // ONE listStatus per table serves three reads: the legacy-layout
-      // check, snapshot discovery, and batch-tail presence (no per-id
-      // fs.exists loop — probe cost is one RPC per table however old the
-      // stream is). Per table: newest `_snapshot=<upTo>` dir (if any) +
-      // committed batch dirs ABOVE its cover point. Tables are handled
-      // independently because a crash mid-compaction can leave one table
-      // snapshotted and another not — each table's (snapshot, tail) pair
-      // is self-consistent, and the ids<=upTo filter makes superseded
-      // batch dirs (cleanup not yet run) invisible rather than
-      // double-counted.
-      val dirs = tables.map { t =>
-        val tp = new org.apache.hadoop.fs.Path(s"$statePath/$t")
-        val names =
-          if (!fs.exists(tp)) Seq.empty[String]
-          else fs.listStatus(tp).iterator.map(_.getPath.getName).toSeq
-        // refuse a state tree this bootstrap cannot see: content under a
-        // table dir that is not `batch_id=` versioned (the pre-r9 flat
-        // changelog layout) would silently bootstrap EMPTY —
-        // previously-kept docs re-admitted as novel. Fail loudly with
-        // the upgrade path.
-        val stray = names.filterNot(n => n.startsWith("batch_id=") ||
-          n.startsWith(".") || n.startsWith("_"))
-        if (stray.nonEmpty) throw new IllegalStateException(
-          s"state table $statePath/$t holds non-batch_id content " +
-            s"(${stray.mkString(", ")}) — a legacy flat changelog this " +
-            "bootstrap would silently ignore. Rebuild the state from " +
-            "the kept output, or wipe the state dir to start empty.")
-        val snapUpTo = names.filter(_.startsWith(SnapPrefix))
-          .map(_.stripPrefix(SnapPrefix).toLong).foldLeft(-1L)(math.max)
-        val snapDirs =
-          if (snapUpTo < 0) Seq.empty
-          else Seq(s"$statePath/$t/$SnapPrefix$snapUpTo")
-        val present = names.filter(_.startsWith("batch_id="))
-          .map(_.stripPrefix("batch_id=").toLong).toSet
-        t -> (snapDirs ++
-          present.toSeq.filter(b => b > snapUpTo && committed.contains(b)).sorted
-            .map(b => s"$statePath/$t/batch_id=$b"))
-      }
-      maxIncludedId = committed.maxId
-      incs = dirs.map { case (t, ps) =>
-        t -> (if (ps.isEmpty) Vector.empty[DataFrame]
-              else Vector(spark.read.parquet(ps: _*).localCheckpoint()))
-      }.toMap
-    }
+    // highest batch id whose committed changelog content is in `dirs` —
+    // the cover point a disk snapshot is stamped with
+    private var maxIncludedId: Long = committed.maxId
+    // per table: ONE listStatus serves the legacy-layout check, snapshot
+    // discovery and batch-tail presence (no per-id fs.exists loop). Per
+    // table: newest `_snapshot=<upTo>` dir (if any) + committed batch dirs
+    // ABOVE its cover point. Tables are handled independently because a
+    // crash mid-compaction can leave one table snapshotted and another
+    // not — each table's (snapshot, tail) pair is self-consistent, and the
+    // ids<=upTo filter makes superseded batch dirs (cleanup not yet run)
+    // invisible rather than double-counted.
+    private var dirs: Map[String, Vector[String]] = tables.map { t =>
+      val tp = new Path(s"$statePath/$t")
+      val names =
+        if (!fs.exists(tp)) Seq.empty[String]
+        else fs.listStatus(tp).iterator.map(_.getPath.getName).toSeq
+      // refuse a state tree this bootstrap cannot see: content under a
+      // table dir that is not `batch_id=` versioned (the older flat
+      // changelog layout) would silently bootstrap EMPTY —
+      // previously-kept docs re-admitted as novel. Fail loudly with the
+      // upgrade path.
+      val stray = names.filterNot(n => n.startsWith("batch_id=") ||
+        n.startsWith(".") || n.startsWith("_"))
+      if (stray.nonEmpty) throw new IllegalStateException(
+        s"state table $statePath/$t holds non-batch_id content " +
+          s"(${stray.mkString(", ")}) — a legacy flat changelog this " +
+          "bootstrap would silently ignore. Rebuild the state from " +
+          "the kept output, or wipe the state dir to start empty.")
+      val snapUpTo = names.filter(_.startsWith(SnapPrefix))
+        .map(_.stripPrefix(SnapPrefix).toLong).foldLeft(-1L)(math.max)
+      val snapDirs =
+        if (snapUpTo < 0) Vector.empty
+        else Vector(s"$statePath/$t/$SnapPrefix$snapUpTo")
+      val present = names.filter(_.startsWith("batch_id="))
+        .map(_.stripPrefix("batch_id=").toLong)
+      t -> (snapDirs ++
+        present.filter(b => b > snapUpTo && committed.contains(b)).sorted
+          .map(b => s"$statePath/$t/batch_id=$b"))
+    }.toMap
+    private var scans = Map.empty[String, DataFrame]
+    // appends since the last snapshot, counted from the bootstrapped tail so
+    // that a stream restarting more often than CompactEvery still compacts
+    private var sinceCompact = dirs(tables.head).count(_.contains("/batch_id="))
 
     // head-table emptiness stands for the whole state: every table's rows
     // derive from the same kept, shingled/banded documents, so the tables
     // are empty or non-empty together (asserted by append)
-    def isEmpty: Boolean = incs(tables.head).isEmpty
-    /** Union of checkpoint scans — block reads, no recompute. */
-    def table(name: String): DataFrame = incs(name).reduce(_ unionAll _)
+    def isEmpty: Boolean = dirs(tables.head).isEmpty
 
-    /** Checkpoint the increments (one materialization), then OVERWRITE
-      * this batch's changelog directories with the SAME materialized
-      * blocks — the plan is never run twice, and a checkpoint-replay of
-      * the batch replaces its own debris instead of appending twice.
-      * Empty increments write no directory (an empty parquet write has no
-      * schema to read back) and add no in-memory increment. The caller
-      * publishes the commit marker AFTER this returns — until then the
-      * written directories are invisible to any restart. */
+    /** One parquet scan over the table's snapshot + tail directories. */
+    def table(name: String): DataFrame = scans.getOrElse(name, {
+      val df = spark.read.parquet(dirs(name): _*)
+      scans += name -> df
+      df
+    })
+
+    /** OVERWRITE this batch's changelog directory of every table with its
+      * increment — one write per table, the plan runs once — and add the
+      * directories to the state. Each write observes its own row count; an
+      * increment of zero rows is empty: its directory (which still holds
+      * the writer's schema-only part file) is removed and adds nothing.
+      * The caller publishes the commit marker AFTER this returns — until
+      * then the written directories are invisible to any restart. */
     def append(batchId: Long, updates: Map[String, DataFrame]): Unit = {
       require(updates.keySet == tables.toSet,
         s"append must cover ${tables.mkString(",")}, got ${updates.keys.mkString(",")}")
-      // compaction runs BEFORE this batch is merged: at that point every
-      // id <= maxIncludedId is COMMITTED (the caller published batch
-      // b-1's marker before this call — a failed commit kills the query,
-      // and a restart re-bootstraps commit-filtered), so a disk snapshot
-      // can never capture uncommitted rows
-      if (sinceCompact >= KeyedStreamState.CompactEvery) compact()
-      val cps = updates.map { case (t, df) => t -> df.localCheckpoint() }
-      val (nonEmpty, empty) = cps.partition { case (_, df) => !df.isEmpty }
+      val written = updates.map { case (t, df) =>
+        val dir = s"$statePath/$t/batch_id=$batchId"
+        val rows = Observation()
+        df.observe(rows, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(dir)
+        t -> (dir, rows.get("n").asInstanceOf[Long])
+      }
+      val (nonEmpty, empty) = written.partition { case (_, (_, n)) => n > 0 }
       require(nonEmpty.isEmpty || nonEmpty.size == tables.size,
         s"state tables diverged on emptiness: kept ${nonEmpty.keys.mkString(",")}")
-      empty.values.foreach(GraftBridge.unpersistLocalCheckpoint(_))
-      nonEmpty.foreach { case (t, df) =>
-        df.write.mode(SaveMode.Overwrite)
-          .parquet(s"$statePath/$t/batch_id=$batchId")
-      }
-      incs = incs.map { case (t, v) =>
-        t -> nonEmpty.get(t).fold(v)(v :+ _)
-      }
+      empty.values.foreach { case (d, _) => fs.delete(new Path(d), true) }
+      nonEmpty.foreach { case (t, (d, _)) => dirs += t -> (dirs(t) :+ d) }
+      scans --= nonEmpty.keys
       maxIncludedId = math.max(maxIncludedId, batchId)
       sinceCompact += 1
     }
 
-    /** Collapse the in-memory increments to one block per table AND fold
-      * the same collapse through to DISK: the collapsed table is written
-      * to `_snap_tmp`, atomically renamed to `_snapshot=<upTo>` (both
-      * `_`-prefixed — invisible to the legacy-stray check and to
-      * whole-tree parquet readers), and only then are the superseded
-      * `batch_id=<b<=upTo>` dirs and older snapshots deleted. On-disk
-      * dir count and restart fs probes are therefore bounded by
-      * [[KeyedStreamState.CompactEvery]]+1 per table instead of growing
-      * with stream age (the r9 ADVICE growth item, previously only
-      * documented). Crash-safe at every point: before a rename the old
-      * dirs are intact; after it the bootstrap reads the snapshot and
+    /** Post-commit maintenance: [[compact]] once CompactEvery appends have
+      * accumulated. Callers invoke it only after publishing the marker of
+      * the last append, so every id <= maxIncludedId is committed and a
+      * snapshot can never capture uncommitted rows. */
+    def compactIfDue(): Unit =
+      if (sinceCompact >= KeyedStreamState.CompactEvery) compact()
+
+    /** Rewrite each table as ONE snapshot: the table's scan, coalesced to
+      * ~128 MB files, is written to `_snap_tmp`, atomically renamed to
+      * `_snapshot=<upTo>` (both `_`-prefixed — invisible to the
+      * legacy-stray check and to whole-tree parquet readers), and only
+      * then are the superseded `batch_id=<b<=upTo>` dirs and older
+      * snapshots deleted. Crash-safe at every point: before a rename the
+      * old dirs are intact; after it the bootstrap reads the snapshot and
       * ignores ids <= upTo, so surviving superseded dirs are debris that
       * the NEXT compaction deletes (the cleanup scan matches on-disk
       * names, not in-memory bookkeeping). Cost: one O(state) parquet
-      * write per table every CompactEvery batches, amortizing to
-      * O(state/CompactEvery) per batch — the same LSM trade the
-      * in-memory collapse already pays. */
+      * write per table every CompactEvery appends. */
     private def compact(): Unit = {
-      val olds = incs.values.flatten.toSeq
       val upTo = maxIncludedId
-      incs = incs.map { case (t, v) =>
-        t -> (if (v.isEmpty) v else Vector(table(t).localCheckpoint()))
-      }
-      for (t <- tables; v = incs(t); if v.nonEmpty) {
-        val tmp = new org.apache.hadoop.fs.Path(s"$statePath/$t/_snap_tmp")
-        v.head.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val dst = new org.apache.hadoop.fs.Path(
-          s"$statePath/$t/$SnapPrefix$upTo")
+      for (t <- tables; if dirs(t).nonEmpty) {
+        val tmp = new Path(s"$statePath/$t/_snap_tmp")
+        table(t).coalesce(coalescedParts(fs, dirs(t)))
+          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        val dst = new Path(s"$statePath/$t/$SnapPrefix$upTo")
         if (fs.exists(dst)) fs.delete(dst, true)
         if (!fs.rename(tmp, dst)) throw new java.io.IOException(
           s"cannot publish state snapshot $dst")
+        dirs += t -> Vector(dst.toString)
+        scans -= t
         faultPoint(s"compact-after-snap:$t")
       }
       faultPoint("compact-after-snapshots")
       for (t <- tables) {
-        val tp = new org.apache.hadoop.fs.Path(s"$statePath/$t")
+        val tp = new Path(s"$statePath/$t")
         if (fs.exists(tp)) fs.listStatus(tp).foreach { s =>
           val n = s.getPath.getName
           val stale =
@@ -1112,20 +1092,13 @@ object StreamingOps {
         }
       }
       sinceCompact = 0
-      olds.foreach(GraftBridge.unpersistLocalCheckpoint(_))
-    }
-
-    /** Release every state block (stream teardown). */
-    def close(): Unit = {
-      incs.values.flatten.foreach(GraftBridge.unpersistLocalCheckpoint(_))
-      incs = tables.map(_ -> Vector.empty[DataFrame]).toMap
     }
   }
 
   private[streaming] object KeyedStreamState {
-    /** Compaction period: scan count is bounded by this, and compaction
-      * cost (one O(state) re-materialization + parquet snapshot write)
-      * amortizes to O(state/8) per batch — the LSM trade. */
+    /** Compaction period: the directories a table scan lists are bounded
+      * by this + 1, and compaction cost (one O(state) parquet snapshot
+      * write) amortizes to O(state/8) per batch — the LSM trade. */
     val CompactEvery = 8
     /** On-disk snapshot dir name prefix, `_snapshot=<upTo>`: covers every
       * committed batch id <= upTo; bootstrap reads it plus only the
@@ -1143,7 +1116,7 @@ object StreamingOps {
     * Per micro-batch, using the SAME building blocks as the batch path:
     * shingle the batch (one projection), band it (32x4 MinHash LSH),
     * equi-join bands against the kept-document band STATE
-    * ([[KeyedStreamState]] — in-memory keyed state with a parquet changelog)
+    * ([[KeyedStreamState]] — keyed state kept as a parquet changelog)
     * for cross-batch candidates, verify candidates only
     * (candidate-driven inverted-index Jaccard over the batch shingles
     * plus the CANDIDATE kept docs' shingles — semi-join scoped, so
@@ -1163,12 +1136,10 @@ object StreamingOps {
       threshold: Double = 0.6): org.apache.spark.sql.streaming.StreamingQuery = {
     val proc = new MinhashDedupProcessor(statePath, keptPath, threshold,
       epoch = CommitLog.resolveEpoch(docs.sparkSession, checkpointDir, keptPath))
-    val query = docs.writeStream
+    docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(proc.apply _)
       .start()
-    closeOnTermination(docs.sparkSession, query, () => proc.close())
-    query
   }
 
   /** [[runMinhashDedupStream]] with the Gopher quality gate ahead of the
@@ -1240,27 +1211,6 @@ object StreamingOps {
         .select(col("doc_id"), col("blob")),
       statePath, keptPath, checkpointDir, maxHamming)
 
-  /** Release a processor's state blocks when its query terminates — a
-    * session that stops/restarts the stream (redeploy loop, the restart
-    * tests) would otherwise strand the full keyed state per stopped
-    * instance until JVM exit (each restart bootstraps a fresh store). */
-  private def closeOnTermination(
-      spark: org.apache.spark.sql.SparkSession,
-      query: org.apache.spark.sql.streaming.StreamingQuery,
-      close: () => Unit): Unit = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          close()
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-  }
-
   /** The kept-documents/vectors table of an ingest-dedup stream restricted
     * to COMMITTED batches — the exactly-once read view (the sibling of
     * [[committedTrips]]). Batches that kept nothing wrote no directory, so
@@ -1298,7 +1248,6 @@ object StreamingOps {
     private var committedBase: CommitLog.Committed = null
     private var newIds = Set.empty[Long]
     private var log: CommitLog = null
-    def close(): Unit = if (state != null) state.close()
     def apply(batch: DataFrame, rawBatchId: Long): Unit = {
       val batchId = CommitLog.pack(epoch, rawBatchId)
       if (log == null) {
@@ -1346,7 +1295,7 @@ object StreamingOps {
     val scratch = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // r10: the same per-batch fixed-cost surgery the emb processor got in
     // r7 — micro-batch join sides broadcast (the state side streams
-    // through as block reads, no exchange), empty fast paths for the
+    // through as a scan, no exchange), empty fast paths for the
     // no-dup common case, and the hot-key guard gated on batch size. ONE
     // deliberate difference from the emb path: every candidate-pair frame
     // keeps its distinct() — jaccardForCandidates COUNTS intersection
@@ -1471,6 +1420,7 @@ object StreamingOps {
       faultPoint("after-marker")
       // post-commit, so a crash mid-compaction replays as a no-op
       log.compact(KeyedStreamState.CompactEvery)
+      state.compactIfDue()
       compactOutput(batch.sparkSession, keptPath,
         { lazy val c = log.committed(); id => c.contains(id) },
         KeyedStreamState.CompactEvery)
@@ -1518,12 +1468,10 @@ object StreamingOps {
       statePath, keptPath, threshold, bands, rowsPerBand, seed,
       epoch = CommitLog.resolveEpoch(
         vectors.sparkSession, checkpointDir, keptPath))
-    val query = vectors.writeStream
+    vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(proc.apply _)
       .start()
-    closeOnTermination(vectors.sparkSession, query, () => proc.close())
-    query
   }
 
   /** The foreachBatch half of [[runEmbDedupStream]] — the same
@@ -1538,7 +1486,6 @@ object StreamingOps {
     private var newIds = Set.empty[Long]
     private var log: CommitLog = null
     private var hps: Array[Array[Double]] = null
-    def close(): Unit = if (state != null) state.close()
     def apply(batch: DataFrame, rawBatchId: Long): Unit = {
       val batchId = CommitLog.pack(epoch, rawBatchId)
       if (log == null) {
@@ -1601,7 +1548,7 @@ object StreamingOps {
     //  1. the batch side of every join is micro-batch-sized — broadcast
     //     it, so candidate generation/verification plans as broadcast
     //     joins (no exchange stages) while the STATE side still only
-    //     streams through as block reads;
+    //     streams through as a scan;
     //  2. the cross-batch candidate frame is consumed inside one action
     //     (no separate cand checkpoint);
     //  3. empty fast paths: an ingest batch with no cross-batch dups
@@ -1712,6 +1659,7 @@ object StreamingOps {
       faultPoint("after-marker")
       // post-commit, so a crash mid-compaction replays as a no-op
       log.compact(KeyedStreamState.CompactEvery)
+      state.compactIfDue()
       compactOutput(batch.sparkSession, keptPath,
         { lazy val c = log.committed(); id => c.contains(id) },
         KeyedStreamState.CompactEvery)
@@ -1753,12 +1701,10 @@ object StreamingOps {
     val proc = new MediaDedupProcessor(statePath, keptPath, maxHamming,
       epoch = CommitLog.resolveEpoch(
         docs.sparkSession, checkpointDir, keptPath))
-    val query = docs.writeStream
+    docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(proc.apply _)
       .start()
-    closeOnTermination(docs.sparkSession, query, () => proc.close())
-    query
   }
 
   /** The foreachBatch half of [[runMediaDedupStream]] — same commit
@@ -1770,7 +1716,6 @@ object StreamingOps {
     private var committedBase: CommitLog.Committed = null
     private var newIds = Set.empty[Long]
     private var log: CommitLog = null
-    def close(): Unit = if (state != null) state.close()
     def apply(batch: DataFrame, rawBatchId: Long): Unit = {
       val batchId = CommitLog.pack(epoch, rawBatchId)
       if (log == null) {
@@ -1888,6 +1833,7 @@ object StreamingOps {
       faultPoint("after-marker")
       // post-commit, so a crash mid-compaction replays as a no-op
       log.compact(KeyedStreamState.CompactEvery)
+      state.compactIfDue()
       compactOutput(batch.sparkSession, keptPath,
         { lazy val c = log.committed(); id => c.contains(id) },
         KeyedStreamState.CompactEvery)

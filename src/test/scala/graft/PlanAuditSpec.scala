@@ -122,6 +122,30 @@ class PlanAuditSpec extends SparkSpec {
       s"expected exactly one shuffle (the dedup window key):\n$p")
   }
 
+  /** Pipeline.annotate over seeded taxi lines (no reference CSV needed). */
+  private def seededAnnotate(): DataFrame = {
+    val csv = graft.etl.TaxiLines.writeCsv(tmpDir("taxiplan"), graft.etl.TaxiLines(200, 3L))
+    Pipeline.annotate(spark, EtlConfig(
+      inputCsvPath = csv, duplicatesCsvPath = "", insertedPath = ""))
+  }
+
+  test("taxi pipeline over seeded lines: dedup is the only shuffle in the annotated plan") {
+    val p = plan(seededAnnotate())
+    assert("Exchange".r.findAllIn(p).length == 1,
+      s"expected exactly one shuffle (the dedup window key):\n$p")
+  }
+
+  test("taxi annotate plan parses each timestamp column once") {
+    // the lenient parse is a 14-format coalesce; the optimized plan must
+    // hold one such chain per timestamp column, not one per reference
+    import org.apache.spark.sql.catalyst.expressions.GetTimestamp
+    val optimized = seededAnnotate().queryExecution.optimizedPlan
+    val parses = optimized.collect { case node =>
+      node.expressions.map(_.collect { case g: GetTimestamp => g }.size).sum
+    }.sum
+    assert(parses == 2 * 14, s"$parses GetTimestamp nodes:\n$optimized")
+  }
+
   test("scaled taxi pipeline: dedup is the only shuffle; curation ops stay equi/window-only") {
     // the sharded scale path must keep the pinned path's plan property:
     // parse/normalize are pure projections, the first-wins window is the

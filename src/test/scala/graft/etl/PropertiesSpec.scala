@@ -91,7 +91,7 @@ class PropertiesSpec extends SparkSpec {
       val ann = Dedup.withFirstWins(Normalize.normalize(ParseValidate.parse(
         rawDf(rows.map(r =>
           Seq(r.pickup, r.dropoff, r.pc, r.dist, r.fl, r.pu, r.dol, r.fare, r.tip))))))
-      val winners = ann.filter(Stats.statusCol === "inserted")
+      val winners = ann.filter(Stats.isInserted())
       val re = Dedup.withFirstWins(winners.drop(Dedup.DupRankCol))
       assert(re.filter(
         org.apache.spark.sql.functions.col(Dedup.DupRankCol) > 1).count() == 0)

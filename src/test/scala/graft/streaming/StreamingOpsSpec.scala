@@ -229,6 +229,235 @@ class StreamingOpsSpec extends SparkSpec {
     assert(dupCsv.columns.head == "LineNumber")
   }
 
+  /** The taxi stream twins' input: seeded lines numbered in file order,
+    * and what `Pipeline.run` makes of the same lines as one headed CSV —
+    * its counters, its trips rows and its duplicates-file lines. */
+  private final class TaxiBatchRun(val lines: Seq[(Long, String)],
+      val stats: graft.etl.Stats.EtlStats, val trips: Seq[String], val dupCsv: Seq[String])
+
+  private def taxiBatchRun(n: Int, seed: Long): TaxiBatchRun = {
+    val lines = graft.etl.TaxiLines(n, seed)
+    val dir = tmpDir("taxibatch")
+    val stats = graft.etl.Pipeline.run(spark, graft.etl.EtlConfig(
+      inputCsvPath = graft.etl.TaxiLines.writeCsv(dir, lines),
+      duplicatesCsvPath = s"$dir/duplicates", insertedPath = s"$dir/trips"))
+    // the input mix the twins exist for: parse- and normalize-invalid
+    // rows, and duplicates
+    assert(stats.parsed < stats.total && stats.invalid > stats.total - stats.parsed &&
+      stats.duplicates > 0, s"seeded mix lacks a row class: $stats")
+    new TaxiBatchRun(lines.zipWithIndex.map { case (l, i) => (i + 1L, l) }, stats,
+      rowStrings(spark.read.parquet(s"$dir/trips")), csvPartLines(s"$dir/duplicates"))
+  }
+
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  private def csvPartLines(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size == 1, s"expected one part file in $dir, got $parts")
+    java.nio.file.Files.readAllLines(parts.head).asScala.toSeq
+  }
+
+  private val canonicalIdx = graft.etl.CsvSource.RequiredColumns.zipWithIndex.toMap
+
+  test("taxi stream over seeded lines: three consumers match Pipeline.run") {
+    implicit val sqlCtx = spark.sqlContext
+    val batch = taxiBatchRun(300, seed = 7L)
+    val out = tmpDir("taxistreamseeded")
+    val config = graft.etl.EtlConfig(inputCsvPath = "",
+      duplicatesCsvPath = s"$out/duplicates", insertedPath = s"$out/trips")
+    val counters = new StreamingOps.TaxiStreamCounters
+    val input = MemoryStream[(Long, String)]
+    val q = StreamingOps.runTaxiEtlStream(input.toDS().toDF("line_number", "value"),
+      config, canonicalIdx, s"$out/seen_keys", counters, s"$out/ckpt")
+    try {
+      // three micro-batches in file order: duplicate groups straddle the
+      // boundaries, so the cross-batch seen-keys state decides them
+      batch.lines.grouped(100).foreach { chunk =>
+        input.addData(chunk)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(counters.snapshot == batch.stats)
+    assert(rowStrings(StreamingOps.committedTrips(spark, config.insertedPath)) == batch.trips)
+    assert(csvPartLines(config.duplicatesCsvPath) == batch.dupCsv)
+  }
+
+  test("taxi sink over seeded lines is exactly-once: crash at every fault point, replay matches Pipeline.run") {
+    import StreamingOps.KeyedStreamState.SnapPrefix
+    val batch = taxiBatchRun(300, seed = 11L)
+    val config = graft.etl.EtlConfig(inputCsvPath = "",
+      duplicatesCsvPath = "", insertedPath = "")
+    // ten micro-batches annotated EXACTLY as the streaming query would
+    // annotate them — a checkpoint restart redelivers the same (frame,
+    // batchId), which invoking the processor directly models
+    val batches = batch.lines.grouped(30).toSeq.zipWithIndex.map { case (chunk, b) =>
+      (b.toLong, StreamingOps.annotateTaxiLines(
+        chunk.toDF("line_number", "value"), config, canonicalIdx))
+    }
+    val out = tmpDir("taxieoseeded")
+    val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
+    // every batch's first attempt crashes at one of the five write
+    // boundaries (each boundary is hit twice over the ten batches); the
+    // post-commit seen-keys compaction crashes once, wherever it first runs
+    val sites = Seq("after-inserted", "after-seen", "after-dupstate",
+      "after-csv", "after-marker")
+    val compactSite = "compact-after-snapshots"
+    var armed: Option[String] = None
+    var compactArmed = true
+    def processor(counters: StreamingOps.TaxiStreamCounters) =
+      new StreamingOps.TaxiStreamProcessor(trips, dups, seen, counters,
+        faultPoint = p => if (armed.contains(p) || (compactArmed && p == compactSite)) {
+          if (p == compactSite) compactArmed = false else armed = None
+          throw new RuntimeException(s"injected crash $p")
+        })
+    var counters = new StreamingOps.TaxiStreamCounters
+    var p = processor(counters)
+    batches.foreach { case (b, df) =>
+      armed = Some(sites((b % sites.size).toInt))
+      var committed = false
+      while (!committed) {
+        try { p.apply(df, b); committed = true } catch {
+          case e: RuntimeException if e.getMessage.startsWith("injected") =>
+            // "kill" the stream: restart = new processor + new counters
+            counters = new StreamingOps.TaxiStreamCounters
+            p = processor(counters)
+        }
+      }
+      assert(armed.isEmpty, s"batch $b never reached $armed")
+    }
+    assert(!compactArmed, "the seen-keys state never compacted")
+    assert(stateDirNames(s"$seen/seen").exists(_.startsWith(SnapPrefix)))
+    // a final restart rebuilds the counters from the commit log alone
+    val finalCounters = new StreamingOps.TaxiStreamCounters
+    processor(finalCounters).apply(batches.last._2, batches.last._1)
+    assert(finalCounters.snapshot == batch.stats)
+    assert(counters.snapshot == batch.stats)
+    // kept rows and the duplicates file equal the batch pipeline's,
+    // exactly once
+    assert(rowStrings(StreamingOps.committedTrips(spark, trips)) == batch.trips)
+    assert(csvPartLines(dups) == batch.dupCsv)
+  }
+
+  test("a taxi micro-batch without duplicates runs two SQL executions") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val config = graft.etl.EtlConfig(inputCsvPath = "",
+      duplicatesCsvPath = "", insertedPath = "")
+    def annotate(from: Long, lines: Seq[String]) = StreamingOps.annotateTaxiLines(
+      lines.zipWithIndex.map { case (l, i) => (from + i, l) }
+        .toDF("line_number", "value"), config, canonicalIdx)
+    val out = tmpDir("taxiexecs")
+    val p = new StreamingOps.TaxiStreamProcessor(s"$out/trips", s"$out/duplicates",
+      s"$out/seen_keys", new StreamingOps.TaxiStreamCounters)
+    // batch 0 also writes the first (empty) duplicates file
+    p.apply(annotate(1L, Seq(
+      "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47")), 0L)
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
+    }
+    val batch1 = annotate(2L, Seq(
+      "01/02/2020 01:00:00 AM,01/02/2020 01:10:00 AM,2,3.4,Y,10,20,30,4",
+      "01/03/2020 02:00:00 AM,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2",
+      "bad-date,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2"))
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      p.apply(batch1, 1L)
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the inserted-rows write (which also yields the counters) and the
+    // seen-keys write; no emptiness probe, counter aggregate or checkpoint
+    assert(executions.get == 2, s"${executions.get} SQL executions")
+    assert(StreamingOps.committedTrips(spark, s"$out/trips").count() == 3)
+  }
+
+  test("keyed state scan keeps a bounded partition count across compaction") {
+    import StreamingOps.KeyedStreamState.CompactEvery
+    val out = tmpDir("statepartitions")
+    val log = new StreamingOps.CommitLog(spark, s"$out/kept")
+    val st = new StreamingOps.KeyedStreamState(spark, s"$out/state", Seq("keys"),
+      log.committed())
+    // every increment arrives as several files, as a shuffled write leaves it
+    (0 to CompactEvery).foreach { b =>
+      st.append(b, Map("keys" -> spark.range(b * 100L, b * 100L + 100L, 1, 4).toDF("k")))
+      log.commit(b, Array(1L))
+      st.compactIfDue()
+    }
+    val keys = st.table("keys")
+    assert(keys.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism,
+      s"${keys.rdd.getNumPartitions} partitions after ${CompactEvery + 1} appends")
+    assert(keys.count() == 100L * (CompactEvery + 1))
+    assert(keys.distinct().count() == 100L * (CompactEvery + 1))
+  }
+
+  test("keyed state: a zero-row increment leaves no directory and the state empty") {
+    val out = tmpDir("stateempty")
+    val log = new StreamingOps.CommitLog(spark, s"$out/kept")
+    val st = new StreamingOps.KeyedStreamState(spark, s"$out/state", Seq("a", "b"),
+      log.committed())
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batchDirs(t: String): Seq[String] = {
+      val tp = new org.apache.hadoop.fs.Path(s"$out/state/$t")
+      if (!fs.exists(tp)) Seq.empty
+      else fs.listStatus(tp).map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSeq
+    }
+    // the writer leaves a schema-only part file for a zero-row frame with
+    // partitions; emptiness must come from the rows, not from the files
+    val none = spark.range(0, 100, 1, 4).toDF("k").filter($"k" < 0)
+    st.append(0, Map("a" -> none, "b" -> none))
+    log.commit(0, Array(0L))
+    assert(st.isEmpty)
+    assert(batchDirs("a").isEmpty && batchDirs("b").isEmpty)
+    val some = spark.range(0, 10, 1, 2).toDF("k")
+    st.append(1, Map("a" -> some, "b" -> some))
+    log.commit(1, Array(10L))
+    assert(!st.isEmpty && batchDirs("a") == Seq("batch_id=1"))
+    val err = intercept[IllegalArgumentException] {
+      st.append(2, Map("a" -> some, "b" -> none))
+    }
+    assert(err.getMessage.contains("diverged on emptiness"))
+  }
+
+  test("minhash ingest batches that band nothing leave no state directory") {
+    implicit val sqlCtx = spark.sqlContext
+    val base = (1 to 40).map(i => s"w$i").mkString(" ")
+    val near = (1 to 38).map(i => s"w$i").mkString(" ") + " x1 x2"
+    val out = tmpDir("mhnothing")
+    val input = MemoryStream[(Long, String)]
+    val q = StreamingOps.runMinhashDedupStream(
+      input.toDS().toDF("doc_id", "text"),
+      s"$out/state", s"$out/kept", s"$out/ckpt")
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def stateDirs: Seq[String] = Seq("bands", "shingles").flatMap { t =>
+      val tp = new org.apache.hadoop.fs.Path(s"$out/state/$t")
+      if (!fs.exists(tp)) Seq.empty
+      else fs.listStatus(tp).map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSeq
+    }
+    try {
+      // batch 1 keeps a doc too short to band: the state stays empty
+      input.addData((1L, "ok"))
+      q.processAllAvailable()
+      assert(stateDirs.isEmpty)
+      input.addData((2L, base))
+      q.processAllAvailable()
+      assert(stateDirs.size == 2)
+      // batch 3 keeps nothing: its only doc is a near-dup of kept doc 2
+      input.addData((3L, near))
+      q.processAllAvailable()
+      assert(stateDirs.size == 2)
+      val kept = StreamingOps.committedKept(spark, s"$out/kept")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(kept == Set(1L, 2L))
+    } finally q.stop()
+  }
+
   test("taxi seen-keys legacy flat layout fails loudly at bootstrap") {
     import spark.implicits._
     val out = tmpDir("taxilegacy")
@@ -715,8 +944,8 @@ class StreamingOpsSpec extends SparkSpec {
   private def crashReplayDrive[P](
       batches: Seq[(Long, org.apache.spark.sql.DataFrame)],
       sites: Seq[String],
-      fresh: (String => Unit) => P)(apply: (P, Long, org.apache.spark.sql.DataFrame) => Unit)(
-      close: P => Unit): Unit = {
+      fresh: (String => Unit) => P)(
+      apply: (P, Long, org.apache.spark.sql.DataFrame) => Unit): Unit = {
     var armed: Option[String] = None
     val fault: String => Unit = p => if (armed.contains(p)) {
       armed = None
@@ -728,13 +957,11 @@ class StreamingOpsSpec extends SparkSpec {
         armed = Some(site)
         try { apply(proc, b, df); armed = None } catch {
           case e: RuntimeException if e.getMessage.startsWith("injected") =>
-            close(proc)
             proc = fresh(fault)
         }
       }
       apply(proc, b, df) // converging replay (no-op if the marker landed)
     }
-    close(proc)
   }
 
   test("minhash ingest is exactly-once: crash at every boundary, replay converges") {
@@ -757,8 +984,7 @@ class StreamingOpsSpec extends SparkSpec {
     val ref = tmpDir("mhrefrun")
     val refProc = new StreamingOps.MinhashDedupProcessor(
       s"$ref/state", s"$ref/kept", 0.6)
-    try frames.foreach { case (b, df) => refProc.apply(df, b) }
-    finally refProc.close()
+    frames.foreach { case (b, df) => refProc.apply(df, b) }
     val refKept = StreamingOps.committedKept(spark, s"$ref/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(refKept.toSet == expected)
@@ -769,7 +995,7 @@ class StreamingOpsSpec extends SparkSpec {
       frames, sites,
       fp => new StreamingOps.MinhashDedupProcessor(
         s"$out/state", s"$out/kept", 0.6, faultPoint = fp))(
-      (p, b, df) => p.apply(df, b))(_.close())
+      (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(kept.toSet == expected, s"crashed run diverged: $kept")
@@ -779,9 +1005,8 @@ class StreamingOpsSpec extends SparkSpec {
     // must still catch a near-dup of each kept doc and admit novelty
     val p2 = new StreamingOps.MinhashDedupProcessor(
       s"$out/state", s"$out/kept", 0.6)
-    try p2.apply(Seq((7L, near), (8L, nearOther),
+    p2.apply(Seq((7L, near), (8L, nearOther),
       (9L, (300 to 340).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text"), 3L)
-    finally p2.close()
     val kept2 = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept2 == expected + 9L)
@@ -805,8 +1030,7 @@ class StreamingOpsSpec extends SparkSpec {
     val ref = tmpDir("embrefrun")
     val refProc = new StreamingOps.EmbDedupProcessor(
       s"$ref/state", s"$ref/kept", 0.8, 32, 8, 42L)
-    try frames.foreach { case (b, df) => refProc.apply(df, b) }
-    finally refProc.close()
+    frames.foreach { case (b, df) => refProc.apply(df, b) }
     assert(StreamingOps.committedKept(spark, s"$ref/kept")
       .select("vec_id").collect().map(_.getLong(0)).toSet == expected)
 
@@ -815,7 +1039,7 @@ class StreamingOpsSpec extends SparkSpec {
       frames, sites,
       fp => new StreamingOps.EmbDedupProcessor(
         s"$out/state", s"$out/kept", 0.8, 32, 8, 42L, faultPoint = fp))(
-      (p, b, df) => p.apply(df, b))(_.close())
+      (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(kept.toSet == expected, s"crashed run diverged: $kept")
@@ -824,9 +1048,8 @@ class StreamingOpsSpec extends SparkSpec {
     // bootstrap-convergence probe: near-dup of kept 1 dropped, novelty kept
     val p2 = new StreamingOps.EmbDedupProcessor(
       s"$out/state", s"$out/kept", 0.8, 32, 8, 42L)
-    try p2.apply(Seq((6L, v4), (7L, Array(0f, 1f, 0f, -1f, 0f, 1f, 0f, -1f)))
+    p2.apply(Seq((6L, v4), (7L, Array(0f, 1f, 0f, -1f, 0f, 1f, 0f, -1f)))
       .toDF("vec_id", "embedding"), 3L)
-    finally p2.close()
     assert(StreamingOps.committedKept(spark, s"$out/kept")
       .select("vec_id").collect().map(_.getLong(0)).toSet == expected + 7L)
   }
@@ -855,8 +1078,7 @@ class StreamingOpsSpec extends SparkSpec {
     val ref = tmpDir("mediarefrun")
     val refProc = new StreamingOps.MediaDedupProcessor(
       s"$ref/state", s"$ref/kept", 2)
-    try frames.foreach { case (b, df) => refProc.apply(df, b) }
-    finally refProc.close()
+    frames.foreach { case (b, df) => refProc.apply(df, b) }
     assert(StreamingOps.committedKept(spark, s"$ref/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet == expected)
 
@@ -865,7 +1087,7 @@ class StreamingOpsSpec extends SparkSpec {
       frames, sites,
       fp => new StreamingOps.MediaDedupProcessor(
         s"$out/state", s"$out/kept", 2, faultPoint = fp))(
-      (p, b, df) => p.apply(df, b))(_.close())
+      (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(kept.toSet == expected, s"crashed run diverged: $kept")
@@ -874,10 +1096,9 @@ class StreamingOpsSpec extends SparkSpec {
     // bootstrap-convergence probe: a near-dup of kept 6 is dropped by a
     // FRESH processor over the same state; a novel blob is kept
     val p2 = new StreamingOps.MediaDedupProcessor(s"$out/state", s"$out/kept", 2)
-    try p2.apply(Seq(
+    p2.apply(Seq(
       (7L, MediaBytes.wav(p6 ++ " y".getBytes("UTF-8"))),
       (8L, MediaBytes.png(33, 44, payload()))).toDF("doc_id", "blob"), 3L)
-    finally p2.close()
     assert(StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet == expected + 8L)
   }
@@ -902,8 +1123,7 @@ class StreamingOpsSpec extends SparkSpec {
     val out = tmpDir("mhcompact")
     val n = CompactEvery + 2 // one compaction, then a short tail
     val p = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
-    try novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
-    finally p.close()
+    novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
     for (t <- Seq("bands", "shingles")) {
       val names = stateDirNames(s"$out/state/$t")
       val snaps = names.filter(_.startsWith(SnapPrefix))
@@ -920,8 +1140,7 @@ class StreamingOpsSpec extends SparkSpec {
     val nearFirst = (0 to 10).map(w => s"w$w").mkString(" ") + " zz"
     val novel = (900 to 912).map(w => s"q$w").mkString(" ")
     val p2 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
-    try p2.apply(Seq((50L, nearFirst), (51L, novel)).toDF("doc_id", "text"), n.toLong)
-    finally p2.close()
+    p2.apply(Seq((50L, nearFirst), (51L, novel)).toDF("doc_id", "text"), n.toLong)
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == (1 to n).map(_.toLong).toSet + 51L, s"got $kept")
@@ -932,13 +1151,12 @@ class StreamingOpsSpec extends SparkSpec {
     // uncrashed reference state size for the no-double-count assertion
     val ref = tmpDir("mhcompref")
     val refP = new StreamingOps.MinhashDedupProcessor(s"$ref/state", s"$ref/kept", 0.6)
-    try novelDocBatches(CompactEvery + 1).foreach { case (b, df) => refP.apply(df, b) }
-    finally refP.close()
+    novelDocBatches(CompactEvery + 1).foreach { case (b, df) => refP.apply(df, b) }
     val refBands = {
       val ids = new StreamingOps.CommitLog(spark, s"$ref/kept").committed()
       val st = new StreamingOps.KeyedStreamState(spark, s"$ref/state",
         Seq("bands", "shingles"), ids)
-      try st.table("bands").count() finally st.close()
+      st.table("bands").count()
     }
 
     for (site <- Seq("compact-after-snap:bands", "compact-after-snapshots")) {
@@ -950,16 +1168,17 @@ class StreamingOpsSpec extends SparkSpec {
       val batches = novelDocBatches(CompactEvery + 1)
       val p = new StreamingOps.MinhashDedupProcessor(
         s"$out/state", s"$out/kept", 0.6, faultPoint = fault)
-      // the final batch's append triggers compaction, which crashes at
+      // the CompactEvery-th batch's post-commit compaction crashes at
       // `site`, leaving a renamed snapshot AND its superseded batch dirs
-      try {
-        intercept[RuntimeException] {
-          batches.foreach { case (b, df) => p.apply(df, b) }
-        }
-      } finally p.close()
-      // restart + replay of the crashed batch converges
+      val crashed = batches.indexWhere { case (b, df) =>
+        try { p.apply(df, b); false }
+        catch { case e: RuntimeException if e.getMessage.startsWith("injected") => true }
+      }
+      assert(crashed == CompactEvery - 1, s"$site: crashed at batch $crashed")
+      // restart: the crashed batch replays as a no-op (its marker landed
+      // before the compaction), then the stream carries on
       val p2 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
-      try p2.apply(batches.last._2, batches.last._1) finally p2.close()
+      batches.drop(crashed).foreach { case (b, df) => p2.apply(df, b) }
       val kept = StreamingOps.committedKept(spark, s"$out/kept")
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(kept == (1 to CompactEvery + 1).map(_.toLong).toSet,
@@ -970,9 +1189,7 @@ class StreamingOpsSpec extends SparkSpec {
       val st = new StreamingOps.KeyedStreamState(spark, s"$out/state",
         Seq("bands", "shingles"), ids)
       val (bandCount, bandDistinct) =
-        try (st.table("bands").count(),
-          st.table("bands").distinct().count())
-        finally st.close()
+        (st.table("bands").count(), st.table("bands").distinct().count())
       assert(bandCount == refBands,
         s"$site: state rows $bandCount != uncrashed $refBands (double-count?)")
       assert(bandCount == bandDistinct, s"$site: duplicate state rows")
@@ -984,8 +1201,7 @@ class StreamingOpsSpec extends SparkSpec {
           (CompactEvery + 1L + i, Seq((100L + i, text)).toDF("doc_id", "text"))
         }
         val p3 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
-        try more.foreach { case (b, df) => p3.apply(df, b) }
-        finally p3.close()
+        more.foreach { case (b, df) => p3.apply(df, b) }
         for (t <- Seq("bands", "shingles")) {
           val names = stateDirNames(s"$out/state/$t")
           val snaps = names.filter(_.startsWith(SnapPrefix))
@@ -1253,8 +1469,7 @@ class StreamingOpsSpec extends SparkSpec {
     val out = tmpDir("mhoutcompact")
     val n = 2 * CompactEvery + 1 // crosses the 2×-tail hysteresis once
     val p = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
-    try novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
-    finally p.close()
+    novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == (1 to n).map(_.toLong).toSet, s"kept diverged: $kept")
