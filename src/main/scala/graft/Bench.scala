@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -19,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   * Methodology (round-4 hardening — the r3 driver run recorded 5-11x
   * outliers on queries whose code and plans were byte-identical to their
   * fast r2 selves, i.e. measurement noise, not plan cost):
+  *  - every pass drives each query through [[Harness.consume]] (a noop-
+  *    sink write of every output column, so no join is dead code and the
+  *    timed plan is the plan that produces the result; the file artifact
+  *    says `"consumer":"noop"`);
   *  - one untimed warm-up pass (JVM/codegen/scan setup + session caches);
   *  - N timed passes (SPARK_GRAFT_BENCH_RUNS, default 3), per-query
   *    seconds = min across passes — steady-state cost, robust to a GC
@@ -31,6 +36,7 @@ import org.apache.spark.sql.SparkSession
   *    auditable) so an anomalous figure is diagnosable from the artifact.
   */
 object Bench {
+  import Harness.jstr
 
   private def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -70,42 +76,9 @@ object Bench {
   private def storageMb(spark: SparkSession): Long =
     spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1024 * 1024)
 
-  /** Full JSON string escape — backslash, quote and EVERY control char.
-    * Exception messages can embed quoted input text (\f, \b, NULs from
-    * native layers); a partial escape would corrupt the one artifact that
-    * exists to diagnose the failure. */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // effective codegen-cache sizing is part of the bench protocol (r16
-    // ADVICE): it is stamped into the FILE artifact below so two runs'
-    // timing conditions are comparable from the artifacts alone
-    val codegenCacheEntries =
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Size the compiled-codegen-class cache to the workload (static
-      // conf, default 100 entries): one pass of the 187-row registry
-      // compiles >1000 distinct whole-stage/expression fragments, so at
-      // the default every pass evicts every other pass's classes and
-      // re-pays Janino compilation for EVERY stage of EVERY query —
-      // measured: rows that run in 0.24 s back-to-back (graft.Profile,
-      // warm cache) cost 3.7-12 s per bench pass under the 100-entry
-      // thrash. Any long-lived multi-query session (a 100 TB driver
-      // serving a query mix) wants the same sizing; env-tunable.
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
     // LOAD GATE (r15 — closes the r14 adjudication hole: every r14
     // artifact landed on a ~2.6× slower machine epoch, so "did this
     // round make it faster?" had no evidence either way; the artifact
@@ -162,15 +135,16 @@ object Bench {
     val loadStart = lastLoad
     val probeStart = lastProbe
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Warm-up pass (disable with SPARK_GRAFT_WARMUP=0): the first run of
-    // each query pays 0.5-2 s of one-time JVM/codegen/scan-setup cost at
-    // local[*], which dominates sub-second queries and made round-2
-    // totals swing 46 s vs 66.9 s run-to-run. The timed passes below
-    // measure steady-state per-query cost; shared cached frames (taxi
-    // pipeline, shingles) warm exactly once, like any long-lived session.
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    if (warmup) queries.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+    // Warm-up pass: the first run of each query pays 0.5-2 s of one-time
+    // JVM/codegen/scan-setup cost at local[*], which dominates sub-second
+    // queries and made round-2 totals swing 46 s vs 66.9 s run-to-run.
+    // The timed passes below measure steady-state per-query cost; shared
+    // cached frames (taxi pipeline, shingles) warm exactly once, like any
+    // long-lived session. NonFatal only: a fatal JVM error (OOM,
+    // LinkageError) must propagate, not leave a compromised JVM timing
+    // the passes below.
+    queries.foreach { case (_, fn) =>
+      try Harness.consume(fn(spark, sfDir)) catch { case NonFatal(_) => () }
     }
     // gate 2: the post-warmup probe is the first epoch reading taken in
     // a hot JVM — the only one comparable across rounds; it guards the
@@ -179,14 +153,8 @@ object Bench {
     // 9.07 decaying to 2.04 over the retry sleeps), so gating on it
     // burns bounded-retry sleeps on our own wake and would stamp
     // `degraded` on an idle machine; the probe measures what the timed
-    // passes will actually see. SKIPPED entirely when the warm-up pass
-    // is disabled: epoch_probe_secs_warm is only meaningful in a hot
-    // JVM (a cold probe reads 0.18-0.38 s on fast and slow epochs
-    // alike — the gate-1 rationale), so gating on it here would burn
-    // 3× gate sleeps and stamp `degraded` spuriously on an idle
-    // machine; a warmup-disabled run is a debugging mode, not a
-    // comparable artifact, and falls back to the load-only gate above.
-    val hotWarm = warmup && gate("post_warmup",
+    // passes will actually see.
+    val hotWarm = gate("post_warmup",
       () => lastProbe > maxProbe,
       () => { lastLoad = loadAvg; lastProbe = epochProbeSecs(spark)
               (lastLoad, lastProbe) })
@@ -214,8 +182,8 @@ object Bench {
           val g0 = gcMs
           val t0 = System.nanoTime()
           val r: Either[String, Double] =
-            try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-            catch { case e: Throwable =>
+            try { Harness.consume(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
+            catch { case NonFatal(e) =>
               Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
           name -> ((r, gcMs - g0, storageMb(spark)))
         }.toMap
@@ -225,33 +193,6 @@ object Bench {
       val ok = timesPerRun.flatMap(_(name)._1.toOption)
       name -> (if (ok.isEmpty) None else Some(ok.min))
     }
-    // MATERIALIZED second column for the count()-pruned class
-    // (CountPrunedClass.rows — the PlanAuditSpec-pinned set whose
-    // count-consumer plans drop provably row-preserving joins): one
-    // timed pass per member driving a consumer that hash-folds EVERY
-    // output column (xxhash64 over all columns, bit_xor-folded — no
-    // join is dead code under it), AFTER the timed passes so it can
-    // never perturb the headline numbers. Runs warm (the passes above
-    // already heated the caches), one pass — this is gap telemetry per
-    // row, not a headline; disable with SPARK_GRAFT_BENCH_MATERIALIZE=0.
-    val materialize =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MATERIALIZE", "1") != "0"
-    val materializedSecs: Map[String, Either[String, Double]] =
-      if (!materialize) Map.empty
-      else queries.collect {
-        case (name, fn) if CountPrunedClass.rows.contains(name) =>
-          import org.apache.spark.sql.functions.{col, expr, xxhash64}
-          val t0 = System.nanoTime()
-          val r: Either[String, Double] =
-            try {
-              val df = fn(spark, sfDir)
-              df.select(xxhash64(df.columns.map(col): _*).as("h"))
-                .agg(expr("bit_xor(h)")).head()
-              Right((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-          name -> r
-      }.toMap
     val errors = results.collect { case (n, None) => n }
     val qs = results.map { case (k, v) =>
       "\"" + k + "\":" + v.fold("null")(_.toString) }.mkString("{", ",", "}")
@@ -286,11 +227,7 @@ object Bench {
       val errField =
         if (errs.isEmpty) ""
         else s""","errors":${errs.map(jstr).mkString("[", ",", "]")}"""
-      val matField = materializedSecs.get(name).fold("") {
-        case Right(s)  => s""","materialized_secs":$s"""
-        case Left(err) => s""","materialized_error":${jstr(err)}"""
-      }
-      s""""$name":{"gc_ms":$gc,"cached_mb":$mb,"runs":$all$errField$matField}"""
+      s""""$name":{"gc_ms":$gc,"cached_mb":$mb,"runs":$all$errField}"""
     }.mkString("{", ",", "}")
     // end-of-run machine context: the probe repeats AFTER the timed
     // passes so a mid-run epoch shift (another tenant landing) shows as
@@ -298,12 +235,12 @@ object Bench {
     val probeEnd = epochProbeSecs(spark)
     val loadEnd = loadAvg
     val machine =
-      s""""cpus":$cpus,"codegen_cache_entries":$codegenCacheEntries,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"epoch_probe_secs_start":$probeStart,"epoch_probe_secs_warm":$probeWarm,"epoch_probe_secs_end":$probeEnd,"degraded":$degraded,"gate_attempts":$gateJson"""
+      s""""cpus":${Harness.cpus},"codegen_cache_entries":${Harness.CodegenCacheEntries},"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"epoch_probe_secs_start":$probeStart,"epoch_probe_secs_warm":$probeWarm,"epoch_probe_secs_end":$probeEnd,"degraded":$degraded,"gate_attempts":$gateJson"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","complete":$complete,"queries":$qs,"sf":"$sfDir","errors":${errors.map(jstr).mkString("[", ",", "]")},"warmup":$warmup,"runs":$runs,"heap_mb":$maxHeapMb,$machine,"telemetry":$telemetry}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","complete":$complete,"queries":$qs,"sf":"$sfDir","errors":${errors.map(jstr).mkString("[", ",", "]")},"consumer":"noop","runs":$runs,"heap_mb":$maxHeapMb,$machine,"telemetry":$telemetry}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try Files.writeString(Paths.get(out), full + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] file write failed: $e") }
     // dated side copy: the driver run overwrites bench_out.json, which
     // cost r10 and r12 their in-round per-query snapshots — every run
     // also lands under bench_runs/ with a UTC timestamp, so any two runs
@@ -314,7 +251,7 @@ object Bench {
       val dir = Paths.get(out).toAbsolutePath.getParent.resolve("bench_runs")
       Files.createDirectories(dir)
       Files.writeString(dir.resolve(s"bench_$ts.json"), full + "\n")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] dated copy failed: $e") }
     spark.stop()
     // the driver greps stdout's tail for this line — it must be LAST

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{EtlConfig, Pipeline}
 
 /** CLI entry point for the taxi ETL — the analog of the reference's
@@ -36,15 +34,7 @@ object EtlMain {
       inputDateTimeFormat = optValue("--format"),
       enableTimeZoneConversion = !rest.contains("--no-tz-conversion"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-etl")
     try {
       val s = Pipeline.run(spark, config)
       println(

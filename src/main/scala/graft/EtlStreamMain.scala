@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.{CsvSource, EtlConfig}
 import graft.streaming.StreamingOps
 
@@ -25,15 +23,7 @@ import graft.streaming.StreamingOps
 object EtlStreamMain {
   def main(args: Array[String]): Unit = {
     val Array(inputDir, outputDir, rest @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl-stream")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-etl-stream")
     val colIdx = CsvSource.RequiredColumns.zipWithIndex.toMap
     val counters = new StreamingOps.TaxiStreamCounters
     val q = StreamingOps.runTaxiEtlStream(

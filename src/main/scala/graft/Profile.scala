@@ -3,15 +3,17 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1: measure first).
   *
   * For each named registered query (default: all), runs one UNTIMED
   * warm pass (session caches + codegen, the Bench warm-up convention),
-  * then one timed `count()` pass with a listener attached, and writes
-  * `<outDir>/<name>.txt` containing the formatted physical plan plus
+  * then one timed [[Harness.consume]] pass with a listener attached, and
+  * writes `<outDir>/<name>.txt` containing the formatted physical plan plus
   * the run's job/stage/task counts, summed task time, and shuffle
   * bytes — the plan-shape evidence OPTIMIZATION_r16.md cites. A
   * compact `name secs jobs stages tasks taskSecs shuffleMB` line per
@@ -25,18 +27,9 @@ object Profile {
     val sfDir = args(0)
     val outDir = args(1)
     val names: Seq[String] =
-      if (args.length > 2) args.drop(2).flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty).toSeq
+      if (args.length > 2) Harness.only(args.drop(2).mkString(","), SparkEntry.queries.keySet)
       else SparkEntry.queries.keys.toSeq.sorted
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-profile")
     Files.createDirectories(Paths.get(outDir))
 
     val jobs = new AtomicInteger(0)
@@ -61,42 +54,27 @@ object Profile {
       }
     })
 
-    // the listener bus is async: poll the counters until two consecutive
-    // reads agree (bounded) so neither the pre-run reset nor the post-run
-    // snapshot races in-flight task-end events (r16 ADVICE items 2-3)
-    def drainListenerBus(): Unit = {
-      def snap() = (jobs.get, stages.get, tasks.get, taskMs.get,
-        shufR.get, shufW.get)
-      var prev = snap()
-      var stable = false
-      val deadline = System.nanoTime() + 5000000000L // 5 s bound
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = snap()
-        stable = cur == prev
-        prev = cur
-      }
-    }
-
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm pass: session caches + codegen paths heat exactly once.
       // NonFatal only — a fatal JVM error (OOM, LinkageError) must
       // propagate, not leave a compromised JVM timing the next pass
       // (r16 ADVICE item 4)
-      try fn(spark, sfDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
+      try Harness.consume(fn(spark, sfDir))
+      catch { case NonFatal(_) => () }
       val df = fn(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      drainListenerBus() // warm-pass events must not leak into the reset
+      // the listener bus is async: drain it so neither the reset nor the
+      // snapshot races in-flight task-end events
+      ListenerBus.drain(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       taskMs.set(0L); shufR.set(0L); shufW.set(0L)
       val t0 = System.nanoTime()
-      val n = try Right(df.count())
-        catch { case scala.util.control.NonFatal(e) => Left(e.getMessage) }
+      val n = try Right(Harness.consume(df))
+        catch { case NonFatal(e) => Left(e.getMessage) }
       val secs = (System.nanoTime() - t0) / 1e9
-      drainListenerBus()
+      ListenerBus.drain(spark.sparkContext)
       val summary = f"$name%-42s ${secs}%7.3f s  jobs=${jobs.get}%-3d " +
         f"stages=${stages.get}%-4d tasks=${tasks.get}%-5d " +
         f"taskTime=${taskMs.get / 1000.0}%8.2f s  " +

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,8 +70,9 @@ import org.apache.spark.sql.functions._
   *    that identical copies would hand every top-k ordering.
   *
   * Output: one line per query `{"query":…,"sf01_cold":…,"sf01_warm":…,
-  * "sf1_cold":…,"sf1_warm":…,"ratio":…}` plus a summary file
-  * (SPARK_GRAFT_SCALE_OUT, default scale_probe.json). The RATIO is
+  * "sf1_cold":…,"sf1_warm":…,"ratio":…,"consumer":"noop"}` plus a
+  * summary file (SPARK_GRAFT_SCALE_OUT, default scale_probe.json). Every
+  * reading times [[Harness.consume]]. The RATIO is
   * cold/cold: several probed operators session-cache their heavy frame
   * per (session, sfDir) — kcore, triangles, the ANN-kNN family, the LSH
   * band frames — so a warm (second-run) comparison would measure cache
@@ -225,17 +228,9 @@ object ScaleProbe {
     "incr_ingest_semdedup_multi")
 
   /** Optional comma-separated subset (SPARK_GRAFT_PROBE_ONLY) — rerun a
-    * few rows without repaying the whole sweep; unknown names fail
-    * loudly (the Verify SPARK_GRAFT_ONLY contract). */
-  private def selected: Seq[String] =
-    sys.env.get("SPARK_GRAFT_PROBE_ONLY") match {
-      case None => Probed
-      case Some(s) =>
-        val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val unknown = names.filterNot(SparkEntry.queries.keySet)
-        require(unknown.isEmpty, s"unknown probe names: ${unknown.mkString(", ")}")
-        names
-    }
+    * few rows without repaying the whole sweep. */
+  private def selected: Seq[String] = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
+    .fold(Probed)(Harness.only(_, SparkEntry.queries.keySet))
 
   /** Bump when the derivation itself changes: the marker must invalidate
     * stale trees generated by an older construction (v2 = per-copy sign
@@ -369,14 +364,7 @@ object ScaleProbe {
     // build/refresh the derived tree, skip the timing sweep entirely
     // (Verify + scripts/local_verify.py then run against the tree)
     val genOnly = args.headOption.contains("gen")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scale-probe")
 
     ensureGenerated(spark, srcDir, sf1Dir)
     if (genOnly) { spark.stop(); return }
@@ -384,7 +372,7 @@ object ScaleProbe {
     def timed(s: SparkSession, fn: (SparkSession, String) => DataFrame,
         dir: String): Double = {
       val t0 = System.nanoTime()
-      fn(s, dir).count()
+      Harness.consume(fn(s, dir))
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -394,8 +382,8 @@ object ScaleProbe {
     // the exact artifact the warm-up exists to prevent.
     val smokeDir = sys.env.getOrElse("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
     selected.foreach { name =>
-      try SparkEntry.queries(name)(spark, smokeDir).count()
-      catch { case e: Throwable =>
+      try Harness.consume(SparkEntry.queries(name)(spark, smokeDir))
+      catch { case NonFatal(e) =>
         System.err.println(s"[scale-probe] warm-up of $name at $smokeDir FAILED " +
           s"(${e.getMessage}) — this query's ratio will be codegen-skewed")
       }
@@ -431,7 +419,7 @@ object ScaleProbe {
       s.catalog.clearCache()
       val c1 = timed(s, fn, sf1Dir)
       val w1 = timed(s, fn, sf1Dir)
-      val line = f"""{"query":"$name","sf01_cold":$c01%.2f,"sf01_warm":$w01%.2f,"sf1_cold":$c1%.2f,"sf1_warm":$w1%.2f,"ratio":${c1 / c01}%.1f}"""
+      val line = f"""{"query":"$name","sf01_cold":$c01%.2f,"sf01_warm":$w01%.2f,"sf1_cold":$c1%.2f,"sf1_warm":$w1%.2f,"ratio":${c1 / c01}%.1f,"consumer":"noop"}"""
       println(line)
       line
     }
@@ -451,7 +439,7 @@ object ScaleProbe {
           .filter(l => qOf.findFirstMatchIn(l).forall(m => !fresh.contains(m.group(1))))
         (kept ++ rows).sortBy(l => qOf.findFirstMatchIn(l).map(_.group(1)).getOrElse(l))
       } else rows
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       // fall back to fresh rows only — but LOUDLY: a corrupt/unparseable
       // existing artifact means the merge is about to discard the rows it
       // exists to preserve, and a silent fallback hides that
@@ -460,7 +448,7 @@ object ScaleProbe {
       rows
     }
     try Files.writeString(Paths.get(out), merged.mkString("[", ",\n", "]\n"))
-    catch { case e: Throwable => System.err.println(s"[scale-probe] write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[scale-probe] write failed: $e") }
     spark.stop()
   }
 }

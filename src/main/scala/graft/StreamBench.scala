@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -44,14 +46,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = Harness.session("graft-stream-bench")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -65,17 +60,10 @@ object StreamBench {
 
     val allStreams = Seq("taxi", "minhash", "filtered", "safetyfiltered",
       "emb", "media", "mediafiltered")
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_ONLY") match {
-      case None => allStreams.toSet
-      case Some(s) =>
-        val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSet
-        require(names.nonEmpty,
-          "SPARK_GRAFT_STREAM_ONLY is set but selects no stream — an empty " +
-            "selection would emit a malformed, all-skipped bench record")
-        val unknown = names -- allStreams
-        require(unknown.isEmpty, s"unknown stream names: ${unknown.mkString(", ")}")
-        names
-    }
+    // Harness.only rejects an empty selection, which would emit a
+    // malformed, all-skipped bench record
+    val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
+      .fold(allStreams)(Harness.only(_, allStreams.contains)).toSet
 
     val fields = scala.collection.mutable.ListBuffer.empty[String]
 
@@ -319,7 +307,7 @@ object StreamBench {
       s"""{"metric":"stream_bench","sf":"$sfDir",${fields.mkString(",")}}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "stream_bench.json")
     try Files.writeString(Paths.get(out), line + "\n")
-    catch { case e: Throwable => System.err.println(s"[stream-bench] write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[stream-bench] write failed: $e") }
     spark.stop()
     println(line)
   }

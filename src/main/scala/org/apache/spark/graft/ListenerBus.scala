@@ -2,7 +2,7 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Test access to the `private[spark]` listener bus. */
+/** Access to the `private[spark]` listener bus. */
 object ListenerBus {
   /** Blocks until every event posted so far has reached the listeners. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -18,41 +18,6 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("bench count() semantics: the join-elimination class is pinned") {
-    // The bench/probe harnesses drive every registered query through
-    // count(), and Catalyst ELIMINATES provably row-preserving joins
-    // (unique-keyed left joins, etc.) whose outputs a bare count never
-    // reads — so for the rows below, the benched number is the
-    // count-consumer's plan, not full materialization (PERF.md "count()
-    // measurement semantics" records both readings where the gap is
-    // material: decontam_verdict 0.88 vs 10.2 s, dsir via dsir_sample).
-    // This test pins the CLASS: a new row silently joining it would
-    // carry a misleading bench number until documented — membership
-    // changes must update this set AND the PERF note together.
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-    def joins(p: LogicalPlan): Int = p.collect { case j: Join => j }.size
-    val pruned = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val full = joins(df.queryExecution.optimizedPlan)
-          val cnt = joins(df.groupBy().count().queryExecution.optimizedPlan)
-          if (cnt < full) Some(name) else None
-        } catch { case _: Throwable => None }
-    }.toSet
-    // the set lives in main source (graft.CountPrunedClass) because the
-    // Bench materialized-consumer pass reads it too — every member gets
-    // a measured materialized_secs column in the bench artifact
-    val documented = graft.CountPrunedClass.rows
-    // dsir_sample may or may not prune depending on the session cache
-    // state (checkpointed score frame has no joins left); allow either
-    val extra = pruned -- documented
-    val missing = (documented -- pruned) - "dsir_sample"
-    assert(extra.isEmpty, s"NEW count()-pruned rows, document them: $extra")
-    assert(missing.isEmpty,
-      s"rows left the pruned class — update the set + PERF note: $missing")
-  }
-
   test("unpartitioned windows are pinned to the bounded-frame class") {
     // A Window with an empty partitionSpec funnels its input through ONE
     // reducer — fatal on a corpus-sized frame, deliberate and harmless on

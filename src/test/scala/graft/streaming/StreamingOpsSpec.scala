@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -364,11 +365,11 @@ class StreamingOpsSpec extends SparkSpec {
       "01/02/2020 01:00:00 AM,01/02/2020 01:10:00 AM,2,3.4,Y,10,20,30,4",
       "01/03/2020 02:00:00 AM,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2",
       "bad-date,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2"))
-    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       p.apply(batch1, 1L)
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     // the inserted-rows write (which also yields the counters) and the
     // seen-keys write; no emptiness probe, counter aggregate or checkpoint
