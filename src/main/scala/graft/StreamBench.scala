@@ -24,12 +24,16 @@ import graft.streaming.StreamingOps
   *  - minhash_docs_per_s: LSH ingest dedup
   *    ([[StreamingOps.runMinhashDedupStream]]) over `documents`,
   *    band-table state joins + verified-Jaccard filtering included;
-  *  - filtered / emb / media: the gated, embedding, and perceptual-hash
-  *    ingest-dedup variants over the same corpus.
+  *  - filtered / safetyfiltered: the MinHash stream behind the Gopher
+  *    quality gate / the safety gate (`TextOps.gopherPrefilter`,
+  *    `TextOps.safetyPrefilter`) over the same corpus;
+  *  - emb / media / mediafiltered: the embedding and perceptual-hash
+  *    ingest-dedup streams, the last behind the Gopher gate.
   *
-  * SPARK_GRAFT_STREAM_ONLY (comma list of taxi,minhash,filtered,emb,
-  * media) restricts the run — the sf1 growth measurement runs the media
-  * stream alone at 10× the recorded scale without paying the other four.
+  * SPARK_GRAFT_STREAM_ONLY (comma list of taxi, minhash, filtered,
+  * safetyfiltered, emb, media, mediafiltered) restricts the run — the sf1
+  * growth measurement runs the media stream alone at 10× the recorded
+  * scale without paying the other six.
   * The media section samples state-dir / checkpoint / output sizes at
   * 25/50/75/100% of the batch sequence (`media_growth` in the JSON): the
   * bounded-lifecycle claim — content bytes grow with KEPT data, file
@@ -160,8 +164,8 @@ object StreamBench {
     if (only("filtered")) {
       val filtOut = tmp("streambench_filtdedup")
       val filtIn = MemoryStream[(Long, String)]
-      val filtQ = StreamingOps.runFilteredMinhashDedupStream(
-        filtIn.toDS().toDF("doc_id", "text"),
+      val filtQ = StreamingOps.runMinhashDedupStream(
+        graft.ext.TextOps.gopherPrefilter(filtIn.toDS().toDF("doc_id", "text")),
         s"$filtOut/state", s"$filtOut/kept", s"$filtOut/ckpt")
       val t1b = System.nanoTime()
       try {
@@ -184,8 +188,8 @@ object StreamBench {
     if (only("safetyfiltered")) {
       val sfOut = tmp("streambench_safetydedup")
       val sfIn = MemoryStream[(Long, String)]
-      val sfQ = StreamingOps.runSafetyFilteredMinhashDedupStream(
-        sfIn.toDS().toDF("doc_id", "text"),
+      val sfQ = StreamingOps.runMinhashDedupStream(
+        graft.ext.TextOps.safetyPrefilter(sfIn.toDS().toDF("doc_id", "text")),
         s"$sfOut/state", s"$sfOut/kept", s"$sfOut/ckpt")
       val t1c = System.nanoTime()
       try {
@@ -285,8 +289,9 @@ object StreamBench {
         .as[(Long, String, Array[Byte])].collect()
       val mfOut = tmp("streambench_mediafilt")
       val mfIn = MemoryStream[(Long, String, Array[Byte])]
-      val mfQ = StreamingOps.runFilteredMediaDedupStream(
-        mfIn.toDS().toDF("doc_id", "text", "blob"),
+      val mfQ = StreamingOps.runMediaDedupStream(
+        graft.ext.TextOps.gopherPrefilter(mfIn.toDS().toDF("doc_id", "text", "blob"))
+          .select(col("doc_id"), col("blob")),
         s"$mfOut/state", s"$mfOut/kept", s"$mfOut/ckpt")
       val mfBatch = math.max(1, rows.length / nBatches)
       val t4 = System.nanoTime()

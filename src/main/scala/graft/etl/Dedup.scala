@@ -33,14 +33,13 @@ object Dedup {
   def withFirstWins(
       df: DataFrame,
       orderCols: Seq[String] = Seq(CsvSource.LineNumberCol)): DataFrame = {
-    val valid = col(ParseValidate.ParseErrorCol).isNull &&
-      col(Normalize.NormErrorCol).isNull
-    val singleton = orderCols.map(c => when(valid, lit(null)).otherwise(col(c)))
+    val singleton = orderCols.map(c =>
+      when(Normalize.valid, lit(null)).otherwise(col(c)))
     val w = Window
       .partitionBy(singleton ++ Seq(
         col("pickup_utc"), col("dropoff_utc"), col("passenger_count")): _*)
       .orderBy(orderCols.map(col): _*)
     df.withColumn(DupRankCol,
-      when(valid, row_number().over(w)).otherwise(lit(null).cast("int")))
+      when(Normalize.valid, row_number().over(w)).otherwise(lit(null).cast("int")))
   }
 }

@@ -27,6 +27,11 @@ object Normalize {
 
   val NormErrorCol = "norm_error"
 
+  /** A valid row: it passed both parse and normalize. The one definition
+    * behind first-wins ranking and the counters. */
+  def valid: Column =
+    col(ParseValidate.ParseErrorCol).isNull && col(NormErrorCol).isNull
+
   def normalize(
       df: DataFrame,
       convertToUtc: Boolean = true,

@@ -18,26 +18,24 @@ object Pipeline {
 
   /** Build the fully-annotated frame (raw + typed + errors + dup rank)
     * without running anything. */
-  def annotate(spark: SparkSession, config: EtlConfig): DataFrame = {
-    val raw = CsvSource.read(spark, config.inputCsvPath, config.delimiter)
-    val parsed = ParseValidate.parse(raw, config.inputDateTimeFormat)
-    val normalized = Normalize.normalize(
-      parsed, config.enableTimeZoneConversion, config.inputTimeZoneId)
-    Dedup.withFirstWins(normalized)
-  }
+  def annotate(spark: SparkSession, config: EtlConfig): DataFrame =
+    Dedup.withFirstWins(parseNormalize(
+      CsvSource.read(spark, config.inputCsvPath, config.delimiter), config))
 
   /** The sharded scale path: same parse/normalize/dedup stages over a
     * directory/glob of CSV shards, with (src_file, byte_offset) as the
     * file-order ordinal — no global line-number count job (see
     * [[CsvSource.readSharded]]). */
-  def annotateSharded(spark: SparkSession, config: EtlConfig): DataFrame = {
-    val raw = CsvSource.readSharded(spark, config.inputCsvPath, config.delimiter)
-    val parsed = ParseValidate.parse(raw, config.inputDateTimeFormat)
-    val normalized = Normalize.normalize(
-      parsed, config.enableTimeZoneConversion, config.inputTimeZoneId)
-    Dedup.withFirstWins(normalized,
+  def annotateSharded(spark: SparkSession, config: EtlConfig): DataFrame =
+    Dedup.withFirstWins(parseNormalize(
+      CsvSource.readSharded(spark, config.inputCsvPath, config.delimiter), config),
       orderCols = Seq(CsvSource.SrcFileCol, CsvSource.ByteOffsetCol))
-  }
+
+  /** raw_* columns → typed + error columns (parse, then normalize) — the
+    * per-row stages, shared with the streaming taxi sink. */
+  def parseNormalize(raw: DataFrame, config: EtlConfig): DataFrame =
+    Normalize.normalize(ParseValidate.parse(raw, config.inputDateTimeFormat),
+      config.enableTimeZoneConversion, config.inputTimeZoneId)
 
   /** Run the full ETL: write inserted rows + duplicates side output, return
     * the six counters (observed during the inserted-rows write). */

@@ -29,18 +29,15 @@ object Stats {
 
   private def cnt(c: Column): Column = count(when(c, 1))
 
-  private def valid: Column =
-    col(ParseValidate.ParseErrorCol).isNull && col(Normalize.NormErrorCol).isNull
-
   /** A valid row that loses first-wins dedup. `seen` marks rows whose key
     * an earlier micro-batch already inserted (the streaming sink's
     * cross-batch state); a single batch run has none. */
   def isDuplicate(seen: Column = lit(false)): Column =
-    valid && (seen || col(Dedup.DupRankCol) > 1)
+    Normalize.valid && (seen || col(Dedup.DupRankCol) > 1)
 
   /** A valid row that wins first-wins dedup and is written to the trips sink. */
   def isInserted(seen: Column = lit(false)): Column =
-    valid && !seen && col(Dedup.DupRankCol) === 1
+    Normalize.valid && !seen && col(Dedup.DupRankCol) === 1
 
   /** Row status derived from the annotation columns, for relational
     * results; the duplicate and inserted labels are [[isDuplicate]] and
@@ -61,7 +58,7 @@ object Stats {
   def counters(seen: Column = lit(false)): Seq[Column] = Seq(
     count(lit(1)),
     cnt(col(ParseValidate.ParseErrorCol).isNull),
-    cnt(!valid),
+    cnt(!Normalize.valid),
     cnt(isDuplicate(seen)),
     cnt(isInserted(seen))).zip(CounterNames).map { case (c, n) => c.as(n) }
 

@@ -26,11 +26,6 @@ object StreamingOps {
       .withWatermark(eventTimeCol, delay)
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
-  /** Exact streaming dedup (unbounded state — only for keyed streams with
-    * bounded key cardinality; prefer [[dedupWithinWatermark]]). */
-  def dedupExact(stream: DataFrame, keys: Seq[String]): DataFrame =
-    stream.dropDuplicates(keys)
-
   /** Event-time windowed counts with late-data handling — the streaming
     * shape of the A1 run-counter aggregation. */
   def windowedCounts(
@@ -45,19 +40,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"))
       .select(col(s"window.start").as("window_start"), col(groupCol), col("n"))
 
-  /** The taxi ETL as an unbounded stream: the SAME ParseValidate /
-    * Normalize column expressions run unchanged under Structured Streaming
-    * (they are pure projections — mode-agnostic by construction). Only the
-    * order-dependent pieces change shape: header resolution becomes a
-    * known column layout (streams have no header row), and first-wins
-    * dedup becomes first-ARRIVAL-wins keyed state (`dropDuplicates` —
-    * streams have no file order; SURVEY §2.8).
-    *
-    * @param rawLines streaming DataFrame with a single `value` string
-    *                 column (e.g. from readStream.text or a socket)
-    * @param columnIndex canonical-field -> position in the delimited line
-    * @return valid, deduplicated trips with the dbo.Trips-shaped columns
-    */
   /** Delimited `value` lines → raw_* + typed + error columns: the SAME
     * ParseValidate/Normalize projections as the batch pipeline, applied to
     * a (possibly streaming) frame of lines. Extra input columns (e.g. a
@@ -67,40 +49,22 @@ object StreamingOps {
       rawLines: DataFrame,
       config: graft.etl.EtlConfig,
       columnIndex: Map[String, Int]): DataFrame = {
-    import graft.etl.{CsvSource, Normalize, ParseValidate}
+    import graft.etl.CsvSource
     val fields = split(col("value"),
       java.util.regex.Pattern.quote(config.delimiter), -1)
-    val raw = rawLines
+    graft.etl.Pipeline.parseNormalize(rawLines
       .filter(trim(col("value")) =!= "")
       .select(col("*") +: CsvSource.RequiredColumns.map(c =>
         fields.getItem(columnIndex(c)).as(CsvSource.rawCol(c))): _*)
-      .drop("value")
-    Normalize.normalize(
-      ParseValidate.parse(raw, config.inputDateTimeFormat),
-      config.enableTimeZoneConversion, config.inputTimeZoneId)
-  }
-
-  def taxiEtlStream(
-      rawLines: DataFrame,
-      config: graft.etl.EtlConfig,
-      columnIndex: Map[String, Int]): DataFrame = {
-    import graft.etl.{Normalize, ParseValidate}
-    annotateTaxiLines(rawLines, config, columnIndex)
-      .filter(col(ParseValidate.ParseErrorCol).isNull &&
-        col(Normalize.NormErrorCol).isNull)
-      .dropDuplicates("pickup_utc", "dropoff_utc", "passenger_count")
-      .select(col("pickup_utc"), col("dropoff_utc"), col("passenger_count"),
-        col("trip_distance"), col("store_and_fwd_flag"),
-        col("pulocation_id"), col("dolocation_id"),
-        col("fare_amount"), col("tip_amount"), col("travel_time_seconds"))
+      .drop("value"), config)
   }
 
   /** Six-counter accumulator for the streaming pipeline — the driver-side
     * analog of [[graft.etl.Stats.EtlStats]], filled incrementally by
-    * [[taxiStreamBatchProcessor]]. foreachBatch callbacks run serially on
-    * the driver, so LongAdder here is belt-and-suspenders THREAD safety
-    * only; replay safety comes from the processor's commit log (a
-    * committed batch is never counted twice). */
+    * [[taxiSink]]. foreachBatch callbacks run serially on the driver, so
+    * LongAdder here is belt-and-suspenders THREAD safety only; replay
+    * safety comes from the sink's commit log (a committed batch is never
+    * counted twice). */
   final class TaxiStreamCounters {
     import java.util.concurrent.atomic.LongAdder
     val total = new LongAdder
@@ -114,7 +78,7 @@ object StreamingOps {
   }
 
   /** Committed-batch bookkeeping for the EXACTLY-ONCE stream sinks (the
-    * taxi ETL sink and both ingest-dedup streams): every per-batch write
+    * taxi ETL sink and the three ingest-dedup streams): every per-batch write
     * lands in a `batch_id=<b>` subdirectory (idempotently overwritten on
     * checkpoint replay), and a batch becomes visible only when its marker
     * file exists under `<rootPath>/_commits/` (written LAST, atomically
@@ -420,24 +384,27 @@ object StreamingOps {
     }
   }
 
-  /** The inserted-trips table restricted to COMMITTED batches — the
-    * exactly-once read view over the per-batch directories (an
-    * uncommitted `batch_id=` directory can exist only as debris of a
-    * crashed batch that a restarted stream will overwrite; until then
-    * this view excludes it). */
+  /** An [[ExactlyOnceSink]]'s output (the taxi stream's inserted trips)
+    * restricted to COMMITTED batches — the exactly-once read view over the
+    * per-batch directories (an uncommitted `batch_id=` directory can exist
+    * only as debris of a crashed batch that a restarted stream will
+    * overwrite; until then this view excludes it). */
   def committedTrips(spark: org.apache.spark.sql.SparkSession,
-      insertedPath: String): DataFrame = {
-    val c = new CommitLog(spark, insertedPath).committed()
-    val fs = new org.apache.hadoop.fs.Path(insertedPath)
+      outputPath: String): DataFrame = {
+    val c = new CommitLog(spark, outputPath).committed()
+    val fs = new org.apache.hadoop.fs.Path(outputPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ranges + (present ∩ committed ∩ uncovered), read as explicit leaf
-    // dirs: debris is never read (vs the earlier read-everything + isin
-    // filter, whose In-list grew with stream age and dragged debris
-    // through the scan), and covered dirs yield to their range
-    val dirs = committedDirs(spark, fs, insertedPath, c)
+    // dirs: debris is never read, and covered dirs yield to their range
+    val dirs = committedDirs(spark, fs, outputPath, c)
     if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else schemaFallback(spark, insertedPath)
+    else schemaFallback(spark, outputPath)
   }
+
+  /** The kept documents/vectors/blobs of an ingest-dedup stream:
+    * [[committedTrips]] over its kept path. */
+  def committedKept(spark: org.apache.spark.sql.SparkSession,
+      keptPath: String): DataFrame = committedTrips(spark, keptPath)
 
   /** A zero-committed view still needs the sink's SCHEMA: any
     * data-bearing batch directory serves (even uncommitted debris has
@@ -608,10 +575,105 @@ object StreamingOps {
       }
   }
 
-  /** The foreachBatch half of full stream/batch parity: every micro-batch
-    * feeds the reference pipeline's three consumers (inserted table,
-    * duplicates side file, six counters), as [[graft.etl.Pipeline.run]]
-    * does for one file.
+  /** The one exactly-once micro-batch sink behind the taxi ETL stream and
+    * the three ingest-dedup streams. It owns the commit protocol; each
+    * stream supplies only its per-batch `step`, which writes the batch's
+    * data directories and returns the counter deltas to commit, or `None`
+    * for a batch with nothing to commit.
+    *
+    * Per micro-batch:
+    *  1. the id is epoch-scoped ([[CommitLog.pack]]) so a fresh-checkpoint
+    *     restart over an existing commit log can never collide with — and
+    *     silently skip — previously committed ids;
+    *  2. the first batch bootstraps the [[CommitLog]] view and the
+    *     [[KeyedStreamState]] tables from `statePath`, and hands the
+    *     committed deltas' sum to `onCommit` (the taxi counters);
+    *  3. a batch already committed (by this run or an earlier one) is
+    *     skipped;
+    *  4. `step` runs; when it returns deltas, the commit marker publishes
+    *     them [after-marker] and `onCommit` receives them;
+    *  5. post-commit maintenance, each step amortized over several
+    *     batches: commit-log roll-up, state compaction
+    *     (`compact-after-snap:<table>`, `compact-after-snapshots`) and
+    *     output compaction, all fed from the in-memory committed view
+    *     (the bootstrap view plus this run's commits).
+    *
+    * Failure semantics are EXACTLY-ONCE under crash + checkpoint-restart
+    * replay, by batchId versioning instead of a transaction:
+    *  - every data write is an idempotent OVERWRITE of a per-batch
+    *    `batch_id=<b>` directory, so re-running a batch replaces its own
+    *    debris instead of appending twice;
+    *  - readers are COMMIT-FILTERED: the state bootstrap reads only
+    *    batches with a published marker, so a crash after a state write
+    *    but before the marker cannot reclassify the replayed batch — the
+    *    half-written state is invisible;
+    *  - the marker is written LAST and atomically, carrying the batch's
+    *    counter deltas; a replay of a batch whose marker exists is a
+    *    complete no-op, and counters bootstrap from the marker log on
+    *    restart;
+    *  - maintenance runs only after the marker, so a crash inside it
+    *    replays as a no-op, and it never deletes a file that the batch
+    *    still reads.
+    * Every crash point therefore lands in one of two states: before the
+    * marker (the whole batch re-runs; every write idempotent) or after it
+    * (the whole batch is skipped). StreamingOpsSpec kills the sink at each
+    * fault point and asserts parity with an uncrashed run.
+    *
+    * `faultPoint` is test instrumentation: a hook invoked with the named
+    * crash sites that the crash-replay specs use to throw mid-batch;
+    * production callers leave the default no-op. */
+  private[streaming] final class ExactlyOnceSink(
+      outputPath: String, statePath: String, tables: Seq[String],
+      epoch: Long, faultPoint: String => Unit,
+      onCommit: Array[Long] => Unit = _ => ())(
+      step: (DataFrame, Long, ExactlyOnceSink) => Option[Array[Long]]) {
+    private var log: CommitLog = null
+    private var base: CommitLog.Committed = null
+    private var newIds = Set.empty[Long]
+    private var keyed: KeyedStreamState = null
+
+    def state: KeyedStreamState = keyed
+    def isCommitted(id: Long): Boolean = newIds(id) || base.contains(id)
+
+    def apply(batch: DataFrame, rawBatchId: Long): Unit = {
+      val batchId = CommitLog.pack(epoch, rawBatchId)
+      val spark = batch.sparkSession
+      if (log == null) {
+        log = new CommitLog(spark, outputPath)
+        base = log.committed()
+        onCommit(base.deltaSums)
+        keyed = new KeyedStreamState(spark, statePath, tables, base, faultPoint)
+      }
+      if (isCommitted(batchId)) return
+      step(batch, batchId, this).foreach { deltas =>
+        log.commit(batchId, deltas)
+        faultPoint("after-marker")
+        newIds += batchId
+        onCommit(deltas)
+        log.compact(KeyedStreamState.CompactEvery)
+        state.compactIfDue()
+        compactOutput(spark, outputPath, isCommitted,
+          KeyedStreamState.CompactEvery)
+      }
+    }
+  }
+
+  /** Resolve this stream start's epoch from `checkpointDir`
+    * ([[CommitLog.resolveEpoch]]) and run `frame` through the sink
+    * `sinkFor(epoch)` builds. */
+  private def start(frame: DataFrame, checkpointDir: String, outputPath: String)(
+      sinkFor: Long => ExactlyOnceSink): org.apache.spark.sql.streaming.StreamingQuery = {
+    val sink = sinkFor(
+      CommitLog.resolveEpoch(frame.sparkSession, checkpointDir, outputPath))
+    frame.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(sink.apply _)
+      .start()
+  }
+
+  /** The taxi ETL's [[ExactlyOnceSink]]: every micro-batch feeds the
+    * reference pipeline's three consumers (inserted table, duplicates side
+    * file, six counters), as [[graft.etl.Pipeline.run]] does for one file.
     *
     * First-wins dedup across an unbounded stream = within-batch first-wins
     * (the batch window on the ordinal, reused as-is) + a cross-batch
@@ -628,132 +690,44 @@ object StreamingOps {
     *     no rows removes the directory and commits nothing)
     *     [after-inserted];
     *  2. the seen-keys increment — the key projection of the directory
-    *     just written — is appended to the [[KeyedStreamState]], unless
-    *     the batch inserted nothing [after-seen];
+    *     just written — is appended to the `seen` state table, unless the
+    *     batch inserted nothing [after-seen];
     *  3. a batch with duplicates writes them to the duplicates side-state
     *     [after-dupstate] and rebuilds the duplicates CSV from the
     *     committed side-state (the first batch also writes the empty file)
     *     [after-csv];
-    *  4. the commit marker publishes, carrying the deltas [after-marker];
-    *  5. post-commit maintenance, each step amortized over several
-    *     batches: commit-log roll-up, seen-keys compaction
-    *     (`compact-after-snap:seen`, `compact-after-snapshots`) and
-    *     trips-output compaction.
+    *  4. the sink commits the deltas and runs its maintenance.
     * The micro-batch is not persisted, so adaptive execution sizes every
     * write's partitions to the batch; a batch with duplicates recomputes
-    * the micro-batch once more for its duplicate rows.
-    *
-    * Failure semantics are EXACTLY-ONCE under crash + checkpoint-restart
-    * replay, by batchId versioning instead of a transaction:
-    *  - every data write is an idempotent OVERWRITE of a per-batch
-    *    directory (`batch_id=<b>` under the inserted table, the seen-keys
-    *    state, and the duplicates side-state), so re-running a batch
-    *    replaces its own debris instead of appending twice;
-    *  - readers are COMMIT-FILTERED: the seen-keys state joins only
-    *    batches with a published marker ([[CommitLog]]), so a crash
-    *    after the state write but before the marker cannot reclassify the
-    *    replayed batch as duplicates — the half-written state is invisible;
-    *  - the duplicates CSV is not appended but REBUILT deterministically
-    *    from committed side-state + the current batch (single-part swap
-    *    via [[graft.etl.Sinks.overwriteSingleCsv]]) — re-running converges
-    *    to the same file;
-    *  - the marker is written LAST and atomically, carrying the batch's
-    *    counter deltas; a replay of a batch whose marker exists is a
-    *    complete no-op, and counters bootstrap from the marker log on
-    *    restart — so a fresh [[TaxiStreamCounters]] passed to a restarted
-    *    stream converges to the batch pipeline's exact golden stats;
-    *  - maintenance runs only after the marker, so a crash inside it
-    *    replays as a no-op, and it never deletes a file that the batch
-    *    still reads.
-    * Every crash point therefore lands in one of two states: before the
-    * marker (the whole batch re-runs; every write idempotent) or after it
-    * (the whole batch is skipped). StreamingOpsSpec kills the processor at
-    * each fault point and asserts counter, kept-key and duplicates-file
-    * parity with the batch pipeline.
-    *
-    * `epoch` scopes this stream start's committed-batch ids
-    * ([[CommitLog.pack]]) so a fresh-checkpoint restart over an existing
-    * commit log can never collide with — and silently skip — previously
-    * committed ids; [[runTaxiEtlStream]] resolves it from the checkpoint
-    * dir via [[CommitLog.resolveEpoch]].
-    *
-    * `faultPoint` is test instrumentation: a hook invoked with the named
-    * crash sites above that the crash-replay spec uses to throw mid-batch;
-    * production callers leave the default no-op. */
-  def taxiStreamBatchProcessor(
+    * the micro-batch once more for its duplicate rows. The duplicates CSV
+    * is not appended but REBUILT deterministically from committed
+    * side-state + the current batch (single-part swap via
+    * [[graft.etl.Sinks.overwriteSingleCsv]]), so re-running converges to
+    * the same file, and a fresh [[TaxiStreamCounters]] passed to a
+    * restarted stream converges to the batch pipeline's exact golden
+    * stats. */
+  private[streaming] def taxiSink(
       insertedPath: String,
       duplicatesCsvPath: String,
       seenKeysPath: String,
       counters: TaxiStreamCounters,
       epoch: Long = 0L,
-      faultPoint: String => Unit = _ => ()): (DataFrame, Long) => Unit =
-    new TaxiStreamProcessor(insertedPath, duplicatesCsvPath,
-      seenKeysPath, counters, epoch, faultPoint).apply _
-
-  /** The class form of [[taxiStreamBatchProcessor]] (same protocol and
-    * scaladoc contract); its state bootstraps on the first batch. */
-  private[streaming] final class TaxiStreamProcessor(
-      insertedPath: String,
-      duplicatesCsvPath: String,
-      seenKeysPath: String,
-      counters: TaxiStreamCounters,
-      epoch: Long = 0L,
-      faultPoint: String => Unit = _ => ()) {
+      faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
     import graft.etl.{Dedup, Sinks, Stats}
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SaveMode
-    private val keyCols = Sinks.tripKeyCols.map(_._1)
-    private val dupStatePath = duplicatesCsvPath + "._state"
-    // committed-batch ids, bootstrapped from the marker log on first
-    // invocation (restart recovery) and maintained live afterwards; the
-    // counters object is expected FRESH per stream start — bootstrap adds
-    // the committed deltas exactly once
-    private var committedBase: CommitLog.Committed = null
-    private var newIds = Set.empty[Long]
-    private def isCommitted(id: Long): Boolean =
-      newIds(id) || committedBase.contains(id)
-    private var log: CommitLog = null
-    private var state: KeyedStreamState = null
-
-    /** Nothing to release: the state lives in its parquet directories.
-      * Kept only for the reference-CSV specs in StreamingOpsSpec, its sole
-      * callers; remove it together with their calls. */
-    def close(): Unit = ()
-
-    private def addCounters(d: Array[Long]): Unit = {
+    val keyCols = Sinks.tripKeyCols.map(_._1)
+    val dupStatePath = duplicatesCsvPath + "._state"
+    def addCounters(d0: Array[Long]): Unit = {
+      val d = d0.padTo(5, 0L)
       counters.total.add(d(0)); counters.parsed.add(d(1))
       counters.invalid.add(d(2)); counters.duplicates.add(d(3))
       counters.inserted.add(d(4))
     }
-
-    def apply(batchIn: DataFrame, rawBatchId: Long): Unit = {
-      val batchId = CommitLog.pack(epoch, rawBatchId)
+    new ExactlyOnceSink(insertedPath, seenKeysPath, Seq("seen"), epoch,
+        faultPoint, addCounters)({ (batchIn, batchId, sink) =>
       val spark = batchIn.sparkSession
       val fs = new Path(insertedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (log == null) {
-        log = new CommitLog(spark, insertedPath)
-        val cm = log.committed()
-        addCounters(cm.deltaSums.padTo(5, 0L))
-        committedBase = cm
-        // the seen-keys state lives under `<seenKeysPath>/seen/`; keys
-        // stored directly under `<seenKeysPath>/batch_id=N` (an older
-        // layout) would bootstrap EMPTY and re-admit every seen key, so
-        // that layout is refused, as in KeyedStreamState itself
-        val sp = new Path(seenKeysPath)
-        if (fs.exists(sp)) {
-          val stray = fs.listStatus(sp).iterator.map(_.getPath.getName)
-            .filter(_.startsWith("batch_id=")).toSeq
-          if (stray.nonEmpty) throw new IllegalStateException(
-            s"seen-keys state at $seenKeysPath uses the legacy flat " +
-              s"batch_id= layout (${stray.take(3).mkString(", ")}…) — " +
-              s"this bootstrap reads $seenKeysPath/seen/. Move the batch " +
-              "directories under seen/, or wipe the state and rebuild " +
-              "from the inserted table.")
-        }
-        state = new KeyedStreamState(spark, seenKeysPath, Seq("seen"),
-          cm, faultPoint)
-      }
-      if (isCommitted(batchId)) return
       // sources without a real ordinal (directory streams have no global
       // file order) get a per-batch arrival surrogate — synthesized HERE
       // because monotonically_increasing_id is rejected on streaming
@@ -773,84 +747,70 @@ object StreamingOps {
       // this batch's start, so the duplicate path's recomputation reads
       // the same keys after this batch's own append.
       val withSeen =
-        if (state.isEmpty) annotated.withColumn("_seen", lit(false))
+        if (sink.state.isEmpty) annotated.withColumn("_seen", lit(false))
         else annotated.join(
-          state.table("seen").withColumn("_seen", lit(true)), keyCols, "left")
+          sink.state.table("seen").withColumn("_seen", lit(true)), keyCols, "left")
       val seen = coalesce(col("_seen"), lit(false))
 
-      // idempotent per-batch overwrites, marker last
       val insertedDir = s"$insertedPath/batch_id=$batchId"
       val (observed, counted) = Stats.observe(withSeen, seen)
       Sinks.selectTripColumns(observed.filter(Stats.isInserted(seen)))
         .write.mode(SaveMode.Overwrite).parquet(insertedDir)
       val d = counted()
-      if (d.total == 0) { fs.delete(new Path(insertedDir), true); return }
-      val deltas = Array(d.total, d.parsed, d.invalid, d.duplicates, d.inserted)
-      faultPoint("after-inserted")
-      if (d.inserted > 0)
-        state.append(batchId, Map("seen" -> spark.read.parquet(insertedDir).select(
-          Sinks.tripKeyCols.map { case (a, t) => col(t).as(a) }: _*)))
-      faultPoint("after-seen")
-      // dup side-state dirs exist only for batches that HAD duplicates
-      // (an empty-frame parquet write leaves no schema to read back); a
-      // batch's dup count is deterministic, so replay writes — or skips —
-      // the same directory
-      val dupRows = Sinks.selectDuplicateColumns(withSeen.filter(Stats.isDuplicate(seen)))
-      if (d.duplicates > 0)
-        dupRows.write.mode(SaveMode.Overwrite)
-          .parquet(s"$dupStatePath/batch_id=$batchId")
-      faultPoint("after-dupstate")
-      // deterministic rebuild from committed side-state + this batch:
-      // append order = (batch_id, LineNumber), the same file a true
-      // per-batch append in commit order would have produced. Skipped
-      // when this batch changes nothing and the file already exists.
-      if (d.duplicates > 0 || !fs.exists(new Path(duplicatesCsvPath))) {
-        val dupDirs = presentBatchIds(fs, new Path(dupStatePath))
-          .filter(b => isCommitted(b) || b == batchId).toSeq.sorted
-          .map(b => s"$dupStatePath/batch_id=$b")
-        val dupAll =
-          if (dupDirs.isEmpty) dupRows.limit(0).withColumn("batch_id", lit(0L))
-          else spark.read.option("basePath", dupStatePath).parquet(dupDirs: _*)
-        // the file is one part: sorting inside the single partition orders
-        // it without a global sort's sampling job
-        Sinks.overwriteSingleCsv(
-          dupAll.coalesce(1)
-            .sortWithinPartitions(col("batch_id"), col("LineNumber").cast("long"))
-            .drop("batch_id"),
-          duplicatesCsvPath)
+      if (d.total == 0) { fs.delete(new Path(insertedDir), true); None }
+      else {
+        faultPoint("after-inserted")
+        if (d.inserted > 0)
+          sink.state.append(batchId, Map("seen" -> spark.read.parquet(insertedDir).select(
+            Sinks.tripKeyCols.map { case (a, t) => col(t).as(a) }: _*)))
+        faultPoint("after-seen")
+        // dup side-state dirs exist only for batches that HAD duplicates
+        // (an empty-frame parquet write leaves no schema to read back); a
+        // batch's dup count is deterministic, so replay writes — or skips —
+        // the same directory
+        val dupRows = Sinks.selectDuplicateColumns(withSeen.filter(Stats.isDuplicate(seen)))
+        if (d.duplicates > 0)
+          dupRows.write.mode(SaveMode.Overwrite)
+            .parquet(s"$dupStatePath/batch_id=$batchId")
+        faultPoint("after-dupstate")
+        // deterministic rebuild from committed side-state + this batch:
+        // append order = (batch_id, LineNumber), the same file a true
+        // per-batch append in commit order would have produced. Skipped
+        // when this batch changes nothing and the file already exists.
+        if (d.duplicates > 0 || !fs.exists(new Path(duplicatesCsvPath))) {
+          val dupDirs = presentBatchIds(fs, new Path(dupStatePath))
+            .filter(b => sink.isCommitted(b) || b == batchId).toSeq.sorted
+            .map(b => s"$dupStatePath/batch_id=$b")
+          val dupAll =
+            if (dupDirs.isEmpty) dupRows.limit(0).withColumn("batch_id", lit(0L))
+            else spark.read.option("basePath", dupStatePath).parquet(dupDirs: _*)
+          // the file is one part: sorting inside the single partition orders
+          // it without a global sort's sampling job
+          Sinks.overwriteSingleCsv(
+            dupAll.coalesce(1)
+              .sortWithinPartitions(col("batch_id"), col("LineNumber").cast("long"))
+              .drop("batch_id"),
+            duplicatesCsvPath)
+        }
+        faultPoint("after-csv")
+        Some(Array(d.total, d.parsed, d.invalid, d.duplicates, d.inserted))
       }
-      faultPoint("after-csv")
-      log.commit(batchId, deltas)
-      faultPoint("after-marker")
-      newIds += batchId
-      addCounters(deltas)
-      log.compact(KeyedStreamState.CompactEvery)
-      state.compactIfDue()
-      compactOutput(spark, insertedPath, isCommitted,
-        KeyedStreamState.CompactEvery)
-    }
+    })
   }
 
-  /** Wire [[annotateTaxiLines]] + [[taxiStreamBatchProcessor]] into a
-    * running query: the full reference ETL (all three consumers) over an
-    * unbounded stream of (line_number, value) rows. */
+  /** Wire [[annotateTaxiLines]] + [[taxiSink]] into a running query: the
+    * full reference ETL (all three consumers) over an unbounded stream of
+    * (line_number, value) rows. */
   def runTaxiEtlStream(
       rawLines: DataFrame,
       config: graft.etl.EtlConfig,
       columnIndex: Map[String, Int],
       seenKeysPath: String,
       counters: TaxiStreamCounters,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val proc = new TaxiStreamProcessor(
-      config.insertedPath, config.duplicatesCsvPath, seenKeysPath, counters,
-      epoch = CommitLog.resolveEpoch(
-        rawLines.sparkSession, checkpointDir, config.insertedPath))
-    annotateTaxiLines(rawLines, config, columnIndex)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(proc.apply _)
-      .start()
-  }
+      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    start(annotateTaxiLines(rawLines, config, columnIndex), checkpointDir,
+      config.insertedPath)(epoch => taxiSink(config.insertedPath,
+        config.duplicatesCsvPath, seenKeysPath, counters, epoch))
 
   final case class KeyedCount(key: String, n: Long, total: Double)
 
@@ -962,6 +922,19 @@ object StreamingOps {
     import KeyedStreamState.SnapPrefix
     private val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // batch directories stored directly under `statePath` (the older flat
+    // layout, before per-table directories) would bootstrap EMPTY and
+    // re-admit every kept key, so that layout is refused
+    if (fs.exists(new Path(statePath))) {
+      val stray = fs.listStatus(new Path(statePath)).iterator
+        .map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSeq
+      if (stray.nonEmpty) throw new IllegalStateException(
+        s"state at $statePath uses the legacy flat batch_id= layout " +
+          s"(${stray.take(3).mkString(", ")}…) — this bootstrap reads " +
+          s"${tables.map(t => s"$statePath/$t/").mkString(", ")}. Move the " +
+          "batch directories under their table directory, or wipe the " +
+          "state and rebuild it from the sink's output.")
+    }
     // highest batch id whose committed changelog content is in `dirs` —
     // the cover point a disk snapshot is stamped with
     private var maxIncludedId: Long = committed.maxId
@@ -1125,6 +1098,11 @@ object StreamingOps {
     * and keep each cluster's min id. Kept docs append their (doc_id,
     * text) to the kept sink and their shingles + bands to the state.
     *
+    * A quality or safety gate composes ahead of the sink
+    * (`runMinhashDedupStream(TextOps.gopherPrefilter(docs), …)`): a
+    * deterministic stateless gate refilters a replayed batch to the same
+    * survivors, so exactly-once holds.
+    *
     * @param docs streaming frame with (doc_id, text)
     * @return the started query; kept docs land in per-batch directories
     *         under `keptPath` — read them through [[committedKept]] */
@@ -1133,142 +1111,29 @@ object StreamingOps {
       statePath: String,
       keptPath: String,
       checkpointDir: String,
-      threshold: Double = 0.6): org.apache.spark.sql.streaming.StreamingQuery = {
-    val proc = new MinhashDedupProcessor(statePath, keptPath, threshold,
-      epoch = CommitLog.resolveEpoch(docs.sparkSession, checkpointDir, keptPath))
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(proc.apply _)
-      .start()
-  }
-
-  /** [[runMinhashDedupStream]] with the Gopher quality gate ahead of the
-    * dedup sink — the full production ingest shape: FILTER (cheapest
-    * signal, stateless) then DEDUP (stateful). Junk documents never pay
-    * shingling, banding, or state I/O, and never enter the kept set or
-    * the band state. The gate is [[graft.ext.TextOps.gopherPrefilter]] —
-    * the SAME annotated-frame code path as the oracle-checked batch
-    * `gopher_filter` row, so stream and batch cannot fork on rule
-    * semantics. Exactly-once is untouched: the filter is a deterministic
-    * stateless projection of the micro-batch, so a crash replay
-    * refilters identical content to the identical survivor set. */
-  def runFilteredMinhashDedupStream(
-      docs: DataFrame,
-      statePath: String,
-      keptPath: String,
-      checkpointDir: String,
       threshold: Double = 0.6): org.apache.spark.sql.streaming.StreamingQuery =
-    runMinhashDedupStream(graft.ext.TextOps.gopherPrefilter(docs),
-      statePath, keptPath, checkpointDir, threshold)
+    start(docs, checkpointDir, keptPath)(
+      minhashSink(statePath, keptPath, threshold, _))
 
-  /** [[runMinhashDedupStream]] with the SAFETY gate ahead of the dedup
-    * sink — the toxicity sibling of [[runFilteredMinhashDedupStream]],
-    * wired the same way: FILTER (stateless, cheapest signal) then DEDUP
-    * (stateful). A document carrying a severe term — or breaching the
-    * moderate milli-ratio cut — never pays shingling, banding, or state
-    * I/O, and never enters the kept set or the band state, so a later
-    * byte-identical resend is gated again rather than matched to state.
-    * The gate is [[graft.ext.TextOps.safetyPrefilter]] — the SAME
-    * annotated-frame code path as the oracle-checked batch
-    * `safety_filter` row, so stream and batch cannot fork on tier
-    * semantics. Exactly-once is untouched: the gate is a deterministic
-    * stateless projection of the micro-batch (the
-    * [[runFilteredMinhashDedupStream]] argument verbatim). A production
-    * ingest composes BOTH gates ahead of the sink —
-    * `safetyPrefilter(gopherPrefilter(docs))` — sharing one scan; the
-    * two registered shapes keep the gates' costs separately
-    * measurable (StreamBench `filtered` vs `safetyfiltered`). */
-  def runSafetyFilteredMinhashDedupStream(
-      docs: DataFrame,
-      statePath: String,
-      keptPath: String,
-      checkpointDir: String,
-      threshold: Double = 0.6): org.apache.spark.sql.streaming.StreamingQuery =
-    runMinhashDedupStream(graft.ext.TextOps.safetyPrefilter(docs),
-      statePath, keptPath, checkpointDir, threshold)
-
-  /** GATED MULTIMODAL ingest — the streaming face of the staged
-    * multimodal pipeline's first two stages: a (doc_id, text, blob)
-    * stream where the Gopher TEXT gate runs AHEAD of the media-dedup
-    * sink, so junk documents' blobs never pay dHash computation,
-    * banding, or state I/O. The gate is the SAME annotated-frame code
-    * path as the oracle-checked batch gopher_filter row
-    * ([[graft.ext.TextOps.gopherPrefilter]] — stream and batch cannot
-    * fork on rule semantics) and is stateless, so the plan stays
-    * stateless ahead of the sink and crash replays refilter the same
-    * batch content deterministically; the sink is
-    * [[runMediaDedupStream]]'s processor verbatim over the surviving
-    * (doc_id, blob) rows — the exactly-once argument is untouched. */
-  def runFilteredMediaDedupStream(
-      docs: DataFrame,
-      statePath: String,
-      keptPath: String,
-      checkpointDir: String,
-      maxHamming: Int = graft.ext.JsonMediaOps.MediaHammingMaxDense)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runMediaDedupStream(
-      graft.ext.TextOps.gopherPrefilter(docs)
-        .select(col("doc_id"), col("blob")),
-      statePath, keptPath, checkpointDir, maxHamming)
-
-  /** The kept-documents/vectors table of an ingest-dedup stream restricted
-    * to COMMITTED batches — the exactly-once read view (the sibling of
-    * [[committedTrips]]). Batches that kept nothing wrote no directory, so
-    * the view reads exactly the committed `batch_id=` directories that
-    * exist. */
-  def committedKept(spark: org.apache.spark.sql.SparkSession,
-      keptPath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(keptPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val c = new CommitLog(spark, keptPath).committed()
-    val dirs = committedDirs(spark, fs, keptPath, c)
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else schemaFallback(spark, keptPath)
-  }
-
-  /** The foreachBatch half of [[runMinhashDedupStream]], with the same
-    * EXACTLY-ONCE commit protocol as the taxi sink
-    * ([[taxiStreamBatchProcessor]], closing the r8 verdict's #2 ask):
-    * kept docs land in an idempotently-overwritten `batch_id=<b>`
-    * directory, the band/shingle state changelog is batch_id-versioned
-    * through [[KeyedStreamState.append]], and the batch becomes visible
-    * only when its [[CommitLog]] marker (carrying the kept count)
-    * publishes LAST. A replayed batch with a marker is a complete no-op;
-    * a crash at any earlier boundary leaves only invisible debris that
-    * the replay overwrites — so the kept set and the state are identical
-    * to an uncrashed run (crash-replay spec, every boundary).
-    *
-    * `epoch` scopes committed-batch ids per stream start
-    * ([[CommitLog.pack]]); `faultPoint` is test instrumentation, as on
-    * the taxi processor. */
-  private[streaming] final class MinhashDedupProcessor(
+  /** The MinHash stream's [[ExactlyOnceSink]]: kept docs land in the
+    * `batch_id=<b>` directory [after-kept], the band/shingle state
+    * increment is appended [after-state], and the kept count is
+    * committed. */
+  private[streaming] def minhashSink(
       statePath: String, keptPath: String, threshold: Double,
-      epoch: Long = 0L, faultPoint: String => Unit = _ => ()) {
-    private var state: KeyedStreamState = null
-    private var committedBase: CommitLog.Committed = null
-    private var newIds = Set.empty[Long]
-    private var log: CommitLog = null
-    def apply(batch: DataFrame, rawBatchId: Long): Unit = {
-      val batchId = CommitLog.pack(epoch, rawBatchId)
-      if (log == null) {
-        log = new CommitLog(batch.sparkSession, keptPath)
-        committedBase = log.committed()
-        state = new KeyedStreamState(batch.sparkSession, statePath,
-          Seq("bands", "shingles"), committedBase, faultPoint)
-      }
-      if (!newIds(batchId) && !committedBase.contains(batchId) &&
-          !batch.isEmpty) {
-        minhashDedupBatch(batch, batchId, state, keptPath, threshold,
-          log, faultPoint)
-        newIds += batchId
-      }
-    }
-  }
+      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
+    new ExactlyOnceSink(keptPath, statePath, Seq("bands", "shingles"),
+        epoch, faultPoint)((batch, batchId, sink) =>
+      if (batch.isEmpty) None
+      else Some(Array(minhashDedupBatch(batch, batchId, sink.state, keptPath,
+        threshold, faultPoint))))
 
+  /** One MinHash micro-batch: writes the kept docs and the state
+    * increment, returns the kept count. */
   private[streaming] def minhashDedupBatch(
       batch: DataFrame, batchId: Long, state: KeyedStreamState,
-      keptPath: String, threshold: Double, log: CommitLog,
-      faultPoint: String => Unit): Unit = {
+      keptPath: String, threshold: Double,
+      faultPoint: String => Unit): Long = {
     import graft.ext.DedupOps
     val sh = DedupOps.shingleFrame(batch.select(col("doc_id"), col("text"))).persist()
     // bands persist too: the 128-perm signature pass is the dominant cost
@@ -1416,14 +1281,7 @@ object StreamingOps {
         "bands" -> keptOnly(bands),
         "shingles" -> keptOnly(sh.filter(size(col("sh")) > 0))))
       faultPoint("after-state")
-      log.commit(batchId, Array(nKept))
-      faultPoint("after-marker")
-      // post-commit, so a crash mid-compaction replays as a no-op
-      log.compact(KeyedStreamState.CompactEvery)
-      state.compactIfDue()
-      compactOutput(batch.sparkSession, keptPath,
-        { lazy val c = log.committed(); id => c.contains(id) },
-        KeyedStreamState.CompactEvery)
+      nKept
     } finally {
       sh.unpersist()
       bands.unpersist()
@@ -1463,57 +1321,40 @@ object StreamingOps {
       threshold: Double = 0.8,
       bands: Int = 32,
       rowsPerBand: Int = 8,
-      seed: Long = 42L): org.apache.spark.sql.streaming.StreamingQuery = {
-    val proc = new EmbDedupProcessor(
-      statePath, keptPath, threshold, bands, rowsPerBand, seed,
-      epoch = CommitLog.resolveEpoch(
-        vectors.sparkSession, checkpointDir, keptPath))
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(proc.apply _)
-      .start()
-  }
+      seed: Long = 42L): org.apache.spark.sql.streaming.StreamingQuery =
+    start(vectors, checkpointDir, keptPath)(
+      embSink(statePath, keptPath, threshold, bands, rowsPerBand, seed, _))
 
-  /** The foreachBatch half of [[runEmbDedupStream]] — the same
-    * exactly-once commit protocol as [[MinhashDedupProcessor]] (per-batch
-    * overwrites, marker last, committed-filtered bootstrap). */
-  private[streaming] final class EmbDedupProcessor(
+  /** The embedding stream's [[ExactlyOnceSink]] — the MinHash sink's
+    * write order over (bands, units) state tables. The hyperplane matrix
+    * is built on the first non-empty batch, from its dimension. */
+  private[streaming] def embSink(
       statePath: String, keptPath: String, threshold: Double,
       bands: Int, rowsPerBand: Int, seed: Long,
-      epoch: Long = 0L, faultPoint: String => Unit = _ => ()) {
-    private var state: KeyedStreamState = null
-    private var committedBase: CommitLog.Committed = null
-    private var newIds = Set.empty[Long]
-    private var log: CommitLog = null
-    private var hps: Array[Array[Double]] = null
-    def apply(batch: DataFrame, rawBatchId: Long): Unit = {
-      val batchId = CommitLog.pack(epoch, rawBatchId)
-      if (log == null) {
-        log = new CommitLog(batch.sparkSession, keptPath)
-        committedBase = log.committed()
-        state = new KeyedStreamState(batch.sparkSession, statePath,
-          Seq("bands", "units"), committedBase, faultPoint)
-      }
-      if (!newIds(batchId) && !committedBase.contains(batchId) &&
-          !batch.isEmpty) {
+      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
+    var hps: Array[Array[Double]] = null
+    new ExactlyOnceSink(keptPath, statePath, Seq("bands", "units"),
+        epoch, faultPoint)((batch, batchId, sink) =>
+      if (batch.isEmpty) None
+      else {
         if (hps == null) {
           // dimension probe — one O(1) driver action on the first batch
           val dim = batch.select(size(col("embedding"))).head().getInt(0)
           hps = graft.ext.SimilarityOps.hyperplaneMatrix(
             dim, bands, rowsPerBand, seed)
         }
-        embDedupBatch(batch, batchId, state, keptPath, threshold,
-          hps, bands, rowsPerBand, log, faultPoint)
-        newIds += batchId
-      }
-    }
+        Some(Array(embDedupBatch(batch, batchId, sink.state, keptPath,
+          threshold, hps, bands, rowsPerBand, faultPoint)))
+      })
   }
 
+  /** One embedding micro-batch: writes the kept vectors and the state
+    * increment, returns the kept count. */
   private[streaming] def embDedupBatch(
       batch: DataFrame, batchId: Long, state: KeyedStreamState,
       keptPath: String, threshold: Double, hps: Array[Array[Double]],
-      bands: Int, rowsPerBand: Int, log: CommitLog,
-      faultPoint: String => Unit): Unit = {
+      bands: Int, rowsPerBand: Int,
+      faultPoint: String => Unit): Long = {
     import graft.ext.{DedupOps, SimilarityOps}
     // localCheckpoint, NOT persist: the banding projection is a large
     // expression tree (bands × rowsPerBand hyperplane dots over the
@@ -1655,14 +1496,7 @@ object StreamingOps {
         "bands" -> keptOnly(banded),
         "units" -> keptOnly(units.select(col("vec_id"), col("unit")))))
       faultPoint("after-state")
-      log.commit(batchId, Array(nKept))
-      faultPoint("after-marker")
-      // post-commit, so a crash mid-compaction replays as a no-op
-      log.compact(KeyedStreamState.CompactEvery)
-      state.compactIfDue()
-      compactOutput(batch.sparkSession, keptPath,
-        { lazy val c = log.committed(); id => c.contains(id) },
-        KeyedStreamState.CompactEvery)
+      nKept
     } finally {
       org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(units)
       org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(banded)
@@ -1697,46 +1531,27 @@ object StreamingOps {
       keptPath: String,
       checkpointDir: String,
       maxHamming: Int = graft.ext.JsonMediaOps.MediaHammingMaxDense)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val proc = new MediaDedupProcessor(statePath, keptPath, maxHamming,
-      epoch = CommitLog.resolveEpoch(
-        docs.sparkSession, checkpointDir, keptPath))
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(proc.apply _)
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    start(docs, checkpointDir, keptPath)(
+      mediaSink(statePath, keptPath, maxHamming, _))
 
-  /** The foreachBatch half of [[runMediaDedupStream]] — same commit
-    * protocol as the MinHash/embedding processors. */
-  private[streaming] final class MediaDedupProcessor(
+  /** The media stream's [[ExactlyOnceSink]] — the MinHash sink's write
+    * order over one `bands` state table. */
+  private[streaming] def mediaSink(
       statePath: String, keptPath: String, maxHamming: Int,
-      epoch: Long = 0L, faultPoint: String => Unit = _ => ()) {
-    private var state: KeyedStreamState = null
-    private var committedBase: CommitLog.Committed = null
-    private var newIds = Set.empty[Long]
-    private var log: CommitLog = null
-    def apply(batch: DataFrame, rawBatchId: Long): Unit = {
-      val batchId = CommitLog.pack(epoch, rawBatchId)
-      if (log == null) {
-        log = new CommitLog(batch.sparkSession, keptPath)
-        committedBase = log.committed()
-        state = new KeyedStreamState(batch.sparkSession, statePath,
-          Seq("bands"), committedBase, faultPoint)
-      }
-      if (!newIds(batchId) && !committedBase.contains(batchId) &&
-          !batch.isEmpty) {
-        mediaDedupBatch(batch, batchId, state, keptPath, maxHamming,
-          log, faultPoint)
-        newIds += batchId
-      }
-    }
-  }
+      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
+    new ExactlyOnceSink(keptPath, statePath, Seq("bands"), epoch,
+        faultPoint)((batch, batchId, sink) =>
+      if (batch.isEmpty) None
+      else Some(Array(mediaDedupBatch(batch, batchId, sink.state, keptPath,
+        maxHamming, faultPoint))))
 
+  /** One media micro-batch: writes the kept blobs and the state
+    * increment, returns the kept count. */
   private[streaming] def mediaDedupBatch(
       batch: DataFrame, batchId: Long, state: KeyedStreamState,
-      keptPath: String, maxHamming: Int, log: CommitLog,
-      faultPoint: String => Unit): Unit = {
+      keptPath: String, maxHamming: Int,
+      faultPoint: String => Unit): Long = {
     import graft.ext.{DedupOps, JsonMediaOps}
     // one codegen'd scan computes the dHash; the banded frame (3 rows
     // per doc at the production point, signature riding along) is the
@@ -1829,14 +1644,7 @@ object StreamingOps {
       faultPoint("after-kept")
       state.append(batchId, Map("bands" -> keptOnly(banded)))
       faultPoint("after-state")
-      log.commit(batchId, Array(nKept))
-      faultPoint("after-marker")
-      // post-commit, so a crash mid-compaction replays as a no-op
-      log.compact(KeyedStreamState.CompactEvery)
-      state.compactIfDue()
-      compactOutput(batch.sparkSession, keptPath,
-        { lazy val c = log.committed(); id => c.contains(id) },
-        KeyedStreamState.CompactEvery)
+      nKept
     } finally {
       org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(banded)
       if (labels != null)

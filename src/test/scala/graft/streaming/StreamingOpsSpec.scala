@@ -63,12 +63,13 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     val colIdx = graft.etl.CsvSource.RequiredColumns.zipWithIndex.toMap
-    val out = StreamingOps.taxiEtlStream(
+    val out = tmpDir("taxistreamlines")
+    val counters = new StreamingOps.TaxiStreamCounters
+    val q = StreamingOps.runTaxiEtlStream(
       input.toDS().toDF("value"),
-      graft.etl.EtlConfig(inputCsvPath = "", duplicatesCsvPath = "", insertedPath = ""),
-      colIdx)
-    val q = out.writeStream.format("memory")
-      .queryName("taxi_stream_out").outputMode(OutputMode.Append()).start()
+      graft.etl.EtlConfig(inputCsvPath = "",
+        duplicatesCsvPath = s"$out/duplicates", insertedPath = s"$out/trips"),
+      colIdx, s"$out/seen_keys", counters, s"$out/ckpt")
     try {
       input.addData(
         "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47",
@@ -76,15 +77,18 @@ class StreamingOpsSpec extends SparkSpec {
         "bad-date,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47",        // invalid
         "")                                                               // blank
       q.processAllAvailable()
-      // second batch: same key again -> state drops it
+      // second batch: same key again -> the seen-keys state drops it
       input.addData("01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,0.1,N,9,9,1,1")
       q.processAllAvailable()
-      val rows = spark.table("taxi_stream_out").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getAs[java.sql.Timestamp]("pickup_utc") ==
-        java.sql.Timestamp.valueOf("2020-01-01 05:28:15")) // EST->UTC applied
-      assert(rows(0).getAs[Int]("travel_time_seconds") == 288)
     } finally q.stop()
+    val rows = StreamingOps.committedTrips(spark, s"$out/trips").collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[java.sql.Timestamp]("tpep_pickup_datetime") ==
+      java.sql.Timestamp.valueOf("2020-01-01 05:28:15")) // EST->UTC applied
+    assert(rows(0).getAs[Int]("TravelTimeSeconds") == 288)
+    assert(counters.snapshot == graft.etl.Stats.EtlStats(
+      total = 4, parsed = 3, invalid = 1, duplicates = 2, inserted = 1,
+      duplicatesFileRows = 2))
   }
 
   test("streaming taxi pipeline: three consumers reproduce the golden stats") {
@@ -176,7 +180,7 @@ class StreamingOpsSpec extends SparkSpec {
       "after-csv", "after-marker")
     var armed: Option[String] = None
     def processor(counters: StreamingOps.TaxiStreamCounters) =
-      new StreamingOps.TaxiStreamProcessor(trips, dups, seen, counters,
+      StreamingOps.taxiSink(trips, dups, seen, counters,
         faultPoint = p => if (armed.contains(p)) {
           armed = None
           throw new RuntimeException(s"injected crash $p")
@@ -195,7 +199,6 @@ class StreamingOpsSpec extends SparkSpec {
           try { p.apply(df, b); armed = None } catch {
             case e: RuntimeException if e.getMessage.startsWith("injected") =>
               // "kill" the stream: restart = new processor + new counters
-              p.close()
               lastCounters = new StreamingOps.TaxiStreamCounters
               p = processor(lastCounters)
           }
@@ -203,12 +206,10 @@ class StreamingOpsSpec extends SparkSpec {
       }
       p.apply(df, b) // the replay/commit attempt that must converge
     }
-    p.close()
     // final restart: counters must reconstruct from the commit log alone
     val finalCounters = new StreamingOps.TaxiStreamCounters
     val pf = processor(finalCounters)
     pf.apply(batches.last._2, batches.last._1) // replay of a committed batch: no-op
-    pf.close()
     assert(finalCounters.snapshot == golden)
     assert(lastCounters.snapshot == golden)
     // kept set identical to the batch pipeline's winners, exactly once
@@ -309,7 +310,7 @@ class StreamingOpsSpec extends SparkSpec {
     var armed: Option[String] = None
     var compactArmed = true
     def processor(counters: StreamingOps.TaxiStreamCounters) =
-      new StreamingOps.TaxiStreamProcessor(trips, dups, seen, counters,
+      StreamingOps.taxiSink(trips, dups, seen, counters,
         faultPoint = p => if (armed.contains(p) || (compactArmed && p == compactSite)) {
           if (p == compactSite) compactArmed = false else armed = None
           throw new RuntimeException(s"injected crash $p")
@@ -351,7 +352,7 @@ class StreamingOpsSpec extends SparkSpec {
       lines.zipWithIndex.map { case (l, i) => (from + i, l) }
         .toDF("line_number", "value"), config, canonicalIdx)
     val out = tmpDir("taxiexecs")
-    val p = new StreamingOps.TaxiStreamProcessor(s"$out/trips", s"$out/duplicates",
+    val p = StreamingOps.taxiSink(s"$out/trips", s"$out/duplicates",
       s"$out/seen_keys", new StreamingOps.TaxiStreamCounters)
     // batch 0 also writes the first (empty) duplicates file
     p.apply(annotate(1L, Seq(
@@ -474,7 +475,7 @@ class StreamingOpsSpec extends SparkSpec {
     val df = StreamingOps.annotateTaxiLines(
       Seq((1L, "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47"))
         .toDF("line_number", "value"), config, colIdx)
-    val p = new StreamingOps.TaxiStreamProcessor(s"$out/trips", s"$out/dups",
+    val p = StreamingOps.taxiSink(s"$out/trips", s"$out/dups",
       s"$out/seen_keys", new StreamingOps.TaxiStreamCounters)
     val e = intercept[IllegalStateException] { p.apply(df, 0L) }
     assert(e.getMessage.contains("legacy flat"))
@@ -617,8 +618,8 @@ class StreamingOpsSpec extends SparkSpec {
     val junk = "tiny doc here" // fails the 50-word floor
     val out = tmpDir("fmhstream")
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.runFilteredMinhashDedupStream(
-      input.toDS().toDF("doc_id", "text"),
+    val q = StreamingOps.runMinhashDedupStream(
+      graft.ext.TextOps.gopherPrefilter(input.toDS().toDF("doc_id", "text")),
       s"$out/state", s"$out/kept", s"$out/ckpt")
     try {
       // batch 1: junk is gated out BEFORE the sink (never kept, never state)
@@ -659,8 +660,8 @@ class StreamingOpsSpec extends SparkSpec {
     val moderate = good + " slow big slow big slow big slow"
     val out = tmpDir("sfmhstream")
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.runSafetyFilteredMinhashDedupStream(
-      input.toDS().toDF("doc_id", "text"),
+    val q = StreamingOps.runMinhashDedupStream(
+      graft.ext.TextOps.safetyPrefilter(input.toDS().toDF("doc_id", "text")),
       s"$out/state", s"$out/kept", s"$out/ckpt")
     try {
       // batch 1: the severe doc is gated out BEFORE the sink (never
@@ -699,8 +700,9 @@ class StreamingOpsSpec extends SparkSpec {
       graft.functions.MediaBytes.synth(id, UTF8String.fromString(text))
     val out = tmpDir("fmediastream")
     val input = MemoryStream[(Long, String, Array[Byte])]
-    val q = StreamingOps.runFilteredMediaDedupStream(
-      input.toDS().toDF("doc_id", "text", "blob"),
+    val q = StreamingOps.runMediaDedupStream(
+      graft.ext.TextOps.gopherPrefilter(input.toDS().toDF("doc_id", "text", "blob"))
+        .select($"doc_id", $"blob"),
       s"$out/state", s"$out/kept", s"$out/ckpt")
     try {
       // batch 1: 301 (bmp) carries the SAME payload as 300 (png) — an
@@ -983,7 +985,7 @@ class StreamingOpsSpec extends SparkSpec {
 
     // uncrashed reference run
     val ref = tmpDir("mhrefrun")
-    val refProc = new StreamingOps.MinhashDedupProcessor(
+    val refProc = StreamingOps.minhashSink(
       s"$ref/state", s"$ref/kept", 0.6)
     frames.foreach { case (b, df) => refProc.apply(df, b) }
     val refKept = StreamingOps.committedKept(spark, s"$ref/kept")
@@ -992,9 +994,9 @@ class StreamingOpsSpec extends SparkSpec {
 
     // crashed run: every boundary of every batch, restart + replay
     val out = tmpDir("mhcrash")
-    crashReplayDrive[StreamingOps.MinhashDedupProcessor](
+    crashReplayDrive[StreamingOps.ExactlyOnceSink](
       frames, sites,
-      fp => new StreamingOps.MinhashDedupProcessor(
+      fp => StreamingOps.minhashSink(
         s"$out/state", s"$out/kept", 0.6, faultPoint = fp))(
       (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
@@ -1004,7 +1006,7 @@ class StreamingOpsSpec extends SparkSpec {
 
     // state converged too: a fresh processor (bootstrap from changelog)
     // must still catch a near-dup of each kept doc and admit novelty
-    val p2 = new StreamingOps.MinhashDedupProcessor(
+    val p2 = StreamingOps.minhashSink(
       s"$out/state", s"$out/kept", 0.6)
     p2.apply(Seq((7L, near), (8L, nearOther),
       (9L, (300 to 340).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text"), 3L)
@@ -1029,16 +1031,16 @@ class StreamingOpsSpec extends SparkSpec {
     val sites = Seq("after-kept", "after-state", "after-marker")
 
     val ref = tmpDir("embrefrun")
-    val refProc = new StreamingOps.EmbDedupProcessor(
+    val refProc = StreamingOps.embSink(
       s"$ref/state", s"$ref/kept", 0.8, 32, 8, 42L)
     frames.foreach { case (b, df) => refProc.apply(df, b) }
     assert(StreamingOps.committedKept(spark, s"$ref/kept")
       .select("vec_id").collect().map(_.getLong(0)).toSet == expected)
 
     val out = tmpDir("embcrash")
-    crashReplayDrive[StreamingOps.EmbDedupProcessor](
+    crashReplayDrive[StreamingOps.ExactlyOnceSink](
       frames, sites,
-      fp => new StreamingOps.EmbDedupProcessor(
+      fp => StreamingOps.embSink(
         s"$out/state", s"$out/kept", 0.8, 32, 8, 42L, faultPoint = fp))(
       (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
@@ -1047,7 +1049,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(kept.length == kept.toSet.size, s"double-applied batch: $kept")
 
     // bootstrap-convergence probe: near-dup of kept 1 dropped, novelty kept
-    val p2 = new StreamingOps.EmbDedupProcessor(
+    val p2 = StreamingOps.embSink(
       s"$out/state", s"$out/kept", 0.8, 32, 8, 42L)
     p2.apply(Seq((6L, v4), (7L, Array(0f, 1f, 0f, -1f, 0f, 1f, 0f, -1f)))
       .toDF("vec_id", "embedding"), 3L)
@@ -1077,16 +1079,16 @@ class StreamingOpsSpec extends SparkSpec {
     val sites = Seq("after-kept", "after-state", "after-marker")
 
     val ref = tmpDir("mediarefrun")
-    val refProc = new StreamingOps.MediaDedupProcessor(
+    val refProc = StreamingOps.mediaSink(
       s"$ref/state", s"$ref/kept", 2)
     frames.foreach { case (b, df) => refProc.apply(df, b) }
     assert(StreamingOps.committedKept(spark, s"$ref/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet == expected)
 
     val out = tmpDir("mediacrash")
-    crashReplayDrive[StreamingOps.MediaDedupProcessor](
+    crashReplayDrive[StreamingOps.ExactlyOnceSink](
       frames, sites,
-      fp => new StreamingOps.MediaDedupProcessor(
+      fp => StreamingOps.mediaSink(
         s"$out/state", s"$out/kept", 2, faultPoint = fp))(
       (p, b, df) => p.apply(df, b))
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
@@ -1096,7 +1098,7 @@ class StreamingOpsSpec extends SparkSpec {
 
     // bootstrap-convergence probe: a near-dup of kept 6 is dropped by a
     // FRESH processor over the same state; a novel blob is kept
-    val p2 = new StreamingOps.MediaDedupProcessor(s"$out/state", s"$out/kept", 2)
+    val p2 = StreamingOps.mediaSink(s"$out/state", s"$out/kept", 2)
     p2.apply(Seq(
       (7L, MediaBytes.wav(p6 ++ " y".getBytes("UTF-8"))),
       (8L, MediaBytes.png(33, 44, payload()))).toDF("doc_id", "blob"), 3L)
@@ -1123,7 +1125,7 @@ class StreamingOpsSpec extends SparkSpec {
     import StreamingOps.KeyedStreamState.{CompactEvery, SnapPrefix}
     val out = tmpDir("mhcompact")
     val n = CompactEvery + 2 // one compaction, then a short tail
-    val p = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
+    val p = StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
     novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
     for (t <- Seq("bands", "shingles")) {
       val names = stateDirNames(s"$out/state/$t")
@@ -1140,7 +1142,7 @@ class StreamingOpsSpec extends SparkSpec {
     // near-dup of the FIRST kept doc while admitting novelty
     val nearFirst = (0 to 10).map(w => s"w$w").mkString(" ") + " zz"
     val novel = (900 to 912).map(w => s"q$w").mkString(" ")
-    val p2 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
+    val p2 = StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
     p2.apply(Seq((50L, nearFirst), (51L, novel)).toDF("doc_id", "text"), n.toLong)
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1151,7 +1153,7 @@ class StreamingOpsSpec extends SparkSpec {
     import StreamingOps.KeyedStreamState.{CompactEvery, SnapPrefix}
     // uncrashed reference state size for the no-double-count assertion
     val ref = tmpDir("mhcompref")
-    val refP = new StreamingOps.MinhashDedupProcessor(s"$ref/state", s"$ref/kept", 0.6)
+    val refP = StreamingOps.minhashSink(s"$ref/state", s"$ref/kept", 0.6)
     novelDocBatches(CompactEvery + 1).foreach { case (b, df) => refP.apply(df, b) }
     val refBands = {
       val ids = new StreamingOps.CommitLog(spark, s"$ref/kept").committed()
@@ -1167,7 +1169,7 @@ class StreamingOpsSpec extends SparkSpec {
         armed = None; throw new RuntimeException(s"injected crash $s")
       }
       val batches = novelDocBatches(CompactEvery + 1)
-      val p = new StreamingOps.MinhashDedupProcessor(
+      val p = StreamingOps.minhashSink(
         s"$out/state", s"$out/kept", 0.6, faultPoint = fault)
       // the CompactEvery-th batch's post-commit compaction crashes at
       // `site`, leaving a renamed snapshot AND its superseded batch dirs
@@ -1178,7 +1180,7 @@ class StreamingOpsSpec extends SparkSpec {
       assert(crashed == CompactEvery - 1, s"$site: crashed at batch $crashed")
       // restart: the crashed batch replays as a no-op (its marker landed
       // before the compaction), then the stream carries on
-      val p2 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
+      val p2 = StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
       batches.drop(crashed).foreach { case (b, df) => p2.apply(df, b) }
       val kept = StreamingOps.committedKept(spark, s"$out/kept")
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1201,7 +1203,7 @@ class StreamingOpsSpec extends SparkSpec {
             .map(w => s"m$w").mkString(" ")
           (CompactEvery + 1L + i, Seq((100L + i, text)).toDF("doc_id", "text"))
         }
-        val p3 = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
+        val p3 = StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
         more.foreach { case (b, df) => p3.apply(df, b) }
         for (t <- Seq("bands", "shingles")) {
           val names = stateDirNames(s"$out/state/$t")
@@ -1469,7 +1471,7 @@ class StreamingOpsSpec extends SparkSpec {
     import StreamingOps.KeyedStreamState.CompactEvery
     val out = tmpDir("mhoutcompact")
     val n = 2 * CompactEvery + 1 // crosses the 2×-tail hysteresis once
-    val p = new StreamingOps.MinhashDedupProcessor(s"$out/state", s"$out/kept", 0.6)
+    val p = StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
     novelDocBatches(n).foreach { case (b, df) => p.apply(df, b) }
     val kept = StreamingOps.committedKept(spark, s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1495,14 +1497,14 @@ class StreamingOpsSpec extends SparkSpec {
     val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
     // epoch 1 (first stream start): batch 0 inserts lineA's trip
     val c1 = new StreamingOps.TaxiStreamCounters
-    StreamingOps.taxiStreamBatchProcessor(trips, dups, seen, c1, epoch = 1L)(
+    StreamingOps.taxiSink(trips, dups, seen, c1, epoch = 1L)(
       annotate(Seq(lineA)), 0L)
     // epoch 2 (checkpoint lost — batch ids restart at 0): the batch MUST
     // be processed (bare-batch-id logs would silently skip it), lineB
     // inserted, and lineA recognized as a duplicate of the EPOCH-1 kept
     // key via the cross-epoch committed seen-keys state
     val c2 = new StreamingOps.TaxiStreamCounters
-    StreamingOps.taxiStreamBatchProcessor(trips, dups, seen, c2, epoch = 2L)(
+    StreamingOps.taxiSink(trips, dups, seen, c2, epoch = 2L)(
       annotate(Seq(lineB, lineA)), 0L)
     assert(c2.snapshot == graft.etl.Stats.EtlStats(
       total = 3, parsed = 3, invalid = 0, duplicates = 1, inserted = 2,
