@@ -246,11 +246,9 @@ object Bench {
     // also lands under bench_runs/ with a UTC timestamp, so any two runs
     // remain diffable after the fact
     try {
-      val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
-        .format(java.time.LocalDateTime.now(java.time.ZoneOffset.UTC))
-      val dir = Paths.get(out).toAbsolutePath.getParent.resolve("bench_runs")
-      Files.createDirectories(dir)
-      Files.writeString(dir.resolve(s"bench_$ts.json"), full + "\n")
+      Files.writeString(
+        Harness.datedRunPath(Paths.get(out).toAbsolutePath.getParent, "bench"),
+        full + "\n")
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] dated copy failed: $e") }
     spark.stop()

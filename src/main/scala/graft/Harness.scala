@@ -1,10 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** What every CLI main shares: the local session, the one consumer that
-  * times a query, the name-list parser and the JSON string escape. */
+  * times a query, the name-list parser, the dated artifact path and the
+  * JSON string escape. */
 object Harness {
 
   /** Local cores: SPARK_GRAFT_CPUS, else every core the JVM sees. */
@@ -57,6 +62,16 @@ object Harness {
     val unknown = names.filterNot(known)
     require(unknown.isEmpty, s"unknown names: ${unknown.mkString(", ")}")
     names
+  }
+
+  /** `<dir>/bench_runs/<name>_<UTC yyyyMMdd_HHmmss>.json`, with the
+    * directory created: the dated artifact path of one run, so that no
+    * run replaces another's (or a recorded) artifact. */
+  def datedRunPath(dir: Path, name: String): Path = {
+    val ts = DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
+      .format(LocalDateTime.now(ZoneOffset.UTC))
+    val runs = Files.createDirectories(dir.resolve("bench_runs"))
+    runs.resolve(s"${name}_$ts.json")
   }
 
   /** Full JSON string escape — backslash, quote and EVERY control char.

@@ -41,7 +41,9 @@ import graft.streaming.StreamingOps
   * asserted from the final listing alone.
   *
   * Output: one JSON line on stdout (last) + SPARK_GRAFT_STREAM_BENCH_OUT
-  * (default stream_bench.json); recorded per-round in PERF.md. Driver
+  * (default `bench_runs/stream_bench_<UTC yyyyMMdd_HHmmss>.json`, like
+  * Bench's dated copies, so a run never replaces the recorded
+  * `stream_bench.json`); recorded per-round in PERF.md. Driver
   * collects the replay source once — that is the BENCH HARNESS feeding
   * the stream (a production deployment reads Kafka/files), not part of
   * the measured pipeline.
@@ -310,9 +312,11 @@ object StreamBench {
 
     val line =
       s"""{"metric":"stream_bench","sf":"$sfDir",${fields.mkString(",")}}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_BENCH_OUT", "stream_bench.json")
-    try Files.writeString(Paths.get(out), line + "\n")
-    catch { case NonFatal(e) => System.err.println(s"[stream-bench] write failed: $e") }
+    try {
+      val out = sys.env.get("SPARK_GRAFT_STREAM_BENCH_OUT").map(Paths.get(_))
+        .getOrElse(Harness.datedRunPath(Paths.get("").toAbsolutePath, "stream_bench"))
+      Files.writeString(out, line + "\n")
+    } catch { case NonFatal(e) => System.err.println(s"[stream-bench] write failed: $e") }
     spark.stop()
     println(line)
   }

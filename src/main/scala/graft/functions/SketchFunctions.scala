@@ -18,10 +18,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * xxhash64 in a normal projection); null elements are not supported.
   */
 
-/** 128-perm MinHash signature: perm_i(h) = (a_i*h + b_i) mod P over a
-  * 31-bit Mersenne prime, a_i = 2i+1, b_i = 104729*(i+1) mod P. Output:
-  * array<long> of NumPerms minima. Matches the affine-permutation scheme
-  * in graft.ext.DedupOps (same constants). */
+/** 128-perm MinHash signature: perm_i(h) = (a_i*h + b_i) mod P over the
+  * 31-bit Mersenne prime P, with a_i in [1, P-1] and b_i in [0, P-1]
+  * drawn from a SplitMix64 stream ([[MinHashSignature.A]],
+  * [[MinHashSignature.B]]). Independent constants matter: the affine
+  * family a_i = 2i+1 has strongly correlated minima, so a near-copy that
+  * lacks the lowest-hash elements changes every LSH band at once. Output:
+  * array<long> of NumPerms minima. a_i * h + b_i < 2^62, so the
+  * arithmetic stays within a Long. */
 case class MinHashSignature(child: Expression) extends UnaryExpression {
   import MinHashSignature._
 
@@ -37,7 +41,7 @@ case class MinHashSignature(child: Expression) extends UnaryExpression {
       val h = Math.floorMod(hs.getLong(i), P)
       var j = 0
       while (j < NumPerms) {
-        val v = (h * (2L * j + 1) + 104729L * (j + 1) % P) % P
+        val v = (h * A(j) + B(j)) % P
         if (v < sig(j)) sig(j) = v
         j += 1
       }
@@ -48,6 +52,8 @@ case class MinHashSignature(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
+      val a = ctx.addReferenceObj("minhashA", A, "long[]")
+      val b = ctx.addReferenceObj("minhashB", B, "long[]")
       val sig = ctx.freshName("sig")
       val i = ctx.freshName("i")
       val j = ctx.freshName("j")
@@ -59,7 +65,7 @@ case class MinHashSignature(child: Expression) extends UnaryExpression {
          |for (int $i = 0; $i < $c.numElements(); $i++) {
          |  long $h = java.lang.Math.floorMod($c.getLong($i), ${P}L);
          |  for (int $j = 0; $j < $NumPerms; $j++) {
-         |    long $v = ($h * (2L * $j + 1) + 104729L * ($j + 1) % ${P}L) % ${P}L;
+         |    long $v = ($h * $a[$j] + $b[$j]) % ${P}L;
          |    if ($v < $sig[$j]) $sig[$j] = $v;
          |  }
          |}
@@ -74,6 +80,28 @@ case class MinHashSignature(child: Expression) extends UnaryExpression {
 object MinHashSignature {
   val NumPerms = 128
   val P = 2147483647L // 2^31 - 1
+  private val Seed = 0x6d696e68617368L // "minhash"
+
+  /** SplitMix64 from [[Seed]]: 2·NumPerms draws, a_i then b_i in turn. */
+  private val draws: Array[Long] = {
+    var state = Seed
+    Array.fill(2 * NumPerms) {
+      state += 0x9e3779b97f4a7c15L
+      var z = state
+      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+      z ^ (z >>> 31)
+    }
+  }
+  /** Multipliers a_i ∈ [1, P−1]. */
+  val A: Array[Long] = Array.tabulate(NumPerms)(i => 1L + Math.floorMod(draws(2 * i), P - 1))
+  /** Offsets b_i ∈ [0, P−1]. */
+  val B: Array[Long] = Array.tabulate(NumPerms)(i => Math.floorMod(draws(2 * i + 1), P))
+
+  /** Names the permutation family. Artifacts holding signatures or band
+    * keys stamp it, so an index built under another family reads as
+    * stale. */
+  val SchemeId = s"splitmix64-$Seed-$NumPerms"
 }
 
 /** 64-bit SimHash over an array of element hashes: bit j of the result is

@@ -625,7 +625,8 @@ object StreamingOps {
   private[streaming] final class ExactlyOnceSink(
       outputPath: String, statePath: String, tables: Seq[String],
       epoch: Long, faultPoint: String => Unit,
-      onCommit: Array[Long] => Unit = _ => ())(
+      onCommit: Array[Long] => Unit = _ => (),
+      stateScheme: Option[String] = None)(
       step: (DataFrame, Long, ExactlyOnceSink) => Option[Array[Long]]) {
     private var log: CommitLog = null
     private var base: CommitLog.Committed = null
@@ -642,7 +643,8 @@ object StreamingOps {
         log = new CommitLog(spark, outputPath)
         base = log.committed()
         onCommit(base.deltaSums)
-        keyed = new KeyedStreamState(spark, statePath, tables, base, faultPoint)
+        keyed = new KeyedStreamState(spark, statePath, tables, base, faultPoint,
+          stateScheme)
       }
       if (isCommitted(batchId)) return
       step(batch, batchId, this).foreach { deltas =>
@@ -916,7 +918,8 @@ object StreamingOps {
   private[streaming] final class KeyedStreamState(
       spark: org.apache.spark.sql.SparkSession, statePath: String,
       tables: Seq[String], committed: CommitLog.Committed,
-      faultPoint: String => Unit = _ => ()) {
+      faultPoint: String => Unit = _ => (), scheme: Option[String] = None) {
+    import java.nio.charset.StandardCharsets
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.{Observation, SaveMode}
     import KeyedStreamState.SnapPrefix
@@ -978,6 +981,30 @@ object StreamingOps {
     // appends since the last snapshot, counted from the bootstrapped tail so
     // that a stream restarting more often than CompactEvery still compacts
     private var sinceCompact = dirs(tables.head).count(_.contains("/batch_id="))
+    // keys computed under a `scheme` (the MinHash stream's band keys) only
+    // match keys from the same scheme: the state root's `_scheme` file
+    // names it, an empty state takes the current one, and a non-empty
+    // state stamped otherwise (or not at all) is refused — it would
+    // bootstrap fine and then re-admit near-dups of every kept doc
+    scheme.foreach { id =>
+      val stamp = new Path(s"$statePath/${KeyedStreamState.SchemeFile}")
+      if (isEmpty) {
+        val out = fs.create(stamp, true)
+        try out.write(id.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      } else {
+        val found =
+          if (!fs.exists(stamp)) "no scheme stamp"
+          else {
+            val in = fs.open(stamp)
+            try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+            finally in.close()
+          }
+        if (found != id) throw new IllegalStateException(
+          s"state at $statePath was built under $found, but this stream " +
+            s"computes its keys under $id — its kept keys can never match. " +
+            "Wipe the state and rebuild it from the sink's output.")
+      }
+    }
 
     // head-table emptiness stands for the whole state: every table's rows
     // derive from the same kept, shingled/banded documents, so the tables
@@ -1077,6 +1104,8 @@ object StreamingOps {
       * committed batch id <= upTo; bootstrap reads it plus only the
       * batch_id= tail above it. */
     val SnapPrefix = "_snapshot="
+    /** State-root file naming the key scheme the state was built under. */
+    val SchemeFile = "_scheme"
   }
 
   /** Streaming MinHash near-dup INGEST dedup — the stream-shape of the
@@ -1118,12 +1147,16 @@ object StreamingOps {
   /** The MinHash stream's [[ExactlyOnceSink]]: kept docs land in the
     * `batch_id=<b>` directory [after-kept], the band/shingle state
     * increment is appended [after-state], and the kept count is
-    * committed. */
+    * committed. The state is stamped with the MinHash permutation family
+    * ([[graft.functions.MinHashSignature.SchemeId]]) its band keys were
+    * computed under, and a state from another family is refused. */
   private[streaming] def minhashSink(
       statePath: String, keptPath: String, threshold: Double,
       epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
     new ExactlyOnceSink(keptPath, statePath, Seq("bands", "shingles"),
-        epoch, faultPoint)((batch, batchId, sink) =>
+        epoch, faultPoint,
+        stateScheme = Some(graft.functions.MinHashSignature.SchemeId))(
+        (batch, batchId, sink) =>
       if (batch.isEmpty) None
       else Some(Array(minhashDedupBatch(batch, batchId, sink.state, keptPath,
         threshold, faultPoint))))

@@ -437,8 +437,10 @@ class PlanAuditSpec extends SparkSpec {
     // one full large-star + small-star round over a real edge frame: the
     // per-round building blocks must stay shuffle-hash operations — a
     // nested-loop or cartesian anywhere would multiply by rounds at scale
+    // (the star close itself: connectedComponents closes a graph this
+    // small on the driver)
     val pairs = (1L until 50L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = DedupOps.connectedComponents(pairs)
+    val labels = DedupOps.starComponents(pairs)
     val p = plan(labels)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

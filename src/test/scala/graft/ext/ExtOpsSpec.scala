@@ -434,10 +434,12 @@ class ExtOpsSpec extends SparkSpec {
     import spark.implicits._
     // a pure path graph is the adversarial diameter case that min-label
     // propagation needs 99 rounds for; large-star/small-star contracts it
-    // within the maxRounds bound (~7 rounds), plus disjoint extras
+    // within the maxRounds bound (~7 rounds), plus disjoint extras. The
+    // star close is called directly: a graph this small takes the driver
+    // close inside connectedComponents
     val chain = (1L until 100L).map(i => (i, i + 1))
     val extra = Seq((200L, 201L), (300L, 301L), (301L, 302L))
-    val labels = DedupOps.connectedComponents((chain ++ extra).toDF("doc_a", "doc_b"))
+    val labels = DedupOps.starComponents((chain ++ extra).toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 100L).forall(labels(_) == 1L))
     assert(labels(200L) == 200L && labels(201L) == 200L)
@@ -1373,6 +1375,17 @@ class ExtOpsSpec extends SparkSpec {
           .count()
       }
       assert(e.getMessage.contains("STALE"))
+      // same corpus, band keys from another MinHash family: an index
+      // stamped with the corpus fingerprint alone is refused too
+      val scheme = ":" + graft.functions.MinHashSignature.SchemeId
+      val stamp = new String(good, "UTF-8")
+      assert(stamp.endsWith(scheme), stamp)
+      java.nio.file.Files.write(sc, stamp.stripSuffix(scheme).getBytes("UTF-8"))
+      val e2 = intercept[IllegalArgumentException] {
+        DedupOps.incrIngestDedupFromArtifact(spark.newSession(), sfDir)
+          .count()
+      }
+      assert(e2.getMessage.contains("STALE"))
     } finally java.nio.file.Files.write(sc, good)
   }
 

@@ -32,6 +32,34 @@ class SketchPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("minhash bands: no pair of 20-element sets at J = 0.82 misses every band") {
+    // 18 shared elements, 2 private to each side: J = 18/22. With
+    // independent permutations a band of 4 rows collides w.p. J^4 ≈ 0.45,
+    // so a pair shares none of the 32 bands w.p. ≈ 6e-9; correlated
+    // permutations lose whole pairs (the affine family a_j = 2j+1,
+    // b_j = 104729(j+1) mod P misses 5 of these 3000)
+    val pairs = (0 until 3000).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val shared = Seq.fill(18)(rnd.nextLong())
+      (shared ++ Seq.fill(2)(rnd.nextLong()), shared ++ Seq.fill(2)(rnd.nextLong()))
+    }
+    val sigs = pairs.toDF("a", "b").select(
+        SketchFunctions.minhashSignature(col("a")),
+        SketchFunctions.minhashSignature(col("b")))
+      .collect().map(r => (r.getSeq[Long](0), r.getSeq[Long](1)))
+    val missed = sigs.count { case (sa, sb) =>
+      (0 until 32).forall(b => sa.slice(4 * b, 4 * b + 4) != sb.slice(4 * b, 4 * b + 4))
+    }
+    assert(missed == 0, s"$missed of ${pairs.size} pairs share no band")
+    // the interpreted path uses the same constants as the generated code
+    val (a0, _) = pairs.head
+    val interpreted = MinHashSignature(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(a0.toArray))
+      .eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toLongArray().toSeq
+    assert(interpreted == sigs.head._1)
+  }
+
   test("simhash is permutation-invariant (vote sums commute)") {
     val arrays = samples(hashArray, Seq(3L, 11L, 55L))
     val df = arrays.map(a => (a, scala.util.Random.shuffle(a))).toDF("a", "b")

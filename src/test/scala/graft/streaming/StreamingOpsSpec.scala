@@ -939,6 +939,33 @@ class StreamingOpsSpec extends SparkSpec {
     assert(e.getMessage.contains("legacy flat changelog"))
   }
 
+  test("MinHash state from another permutation family, or unstamped, fails loudly at restart") {
+    import StreamingOps.KeyedStreamState.SchemeFile
+    val out = tmpDir("mhscheme")
+    val stamp = new org.apache.hadoop.fs.Path(s"$out/state/$SchemeFile")
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = novelDocBatches(2)
+    StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
+      .apply(batches.head._2, batches.head._1)
+    assert(fs.isFile(stamp), "the first batch stamps the state")
+    // a restart under the same family bootstraps and keeps going
+    StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
+      .apply(batches(1)._2, batches(1)._1)
+    // a state written before the stamp existed, and one stamped by
+    // another family: their band keys cannot match this build's
+    for (restamp <- Seq(() => fs.delete(stamp, false), () => {
+        val o = fs.create(stamp, true)
+        try o.writeBytes("other-family") finally o.close()
+      })) {
+      restamp()
+      val e = intercept[IllegalStateException] {
+        StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6)
+          .apply(batches(1)._2, batches(1)._1)
+      }
+      assert(e.getMessage.contains(graft.functions.MinHashSignature.SchemeId), e.getMessage)
+    }
+  }
+
   /** Drive a processor through (batchId, frame) pairs, crashing once at
     * every armed boundary before the committing attempt — each "crash"
     * kills the processor and "restarts" it via `fresh()` (a new instance =
