@@ -13,7 +13,7 @@ import graft.streaming.StreamingOps
   * order, so the ordinal is a per-batch arrival surrogate
   * (monotonically_increasing_id — stable within the batch that computes
   * it, which is all the within-batch window needs; cross-batch order is
-  * the batch sequence itself via the seen-keys state).
+  * the batch sequence itself, via the committed trips output).
   *
   * Usage: EtlStreamMain <inputDir> <outputDir> [--follow]
   * Without --follow, drains everything currently available

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated harness tables (TESTDATA.md).
   *
@@ -11,8 +12,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ever force a full materialization.
   */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Per session: (path, its files' (path, length, mtime)) → the schema
+    * `spark.read.parquet` inferred for it. Inference is a footer-reading
+    * Spark job per read; a file set that has not changed since has the
+    * same schema, so every later read of it passes the schema instead. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.Map[(String, Seq[(String, Long, Long)]), StructType]])
+
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path) // fails as it always did
+    else {
+      val files = fs.listFiles(p, true)
+      val key = (path, Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted)
+      val cache = schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+      Option(cache.get(key)).fold {
+        val df = spark.read.parquet(path)
+        cache.put(key, df.schema)
+        df
+      }(spark.read.schema(_).parquet(path))
+    }
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame   = t(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame     = t(spark, sfDir, "orders")
@@ -35,7 +59,9 @@ object Tables {
     *    every downstream query/oracle on the same type as before. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = t(spark, sfDir, "events")
+    // inferred afresh: the schema depends on the conf above, which the
+    // per-session schema cache in `t` does not key on
+    val df = spark.read.parquet(s"$sfDir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(

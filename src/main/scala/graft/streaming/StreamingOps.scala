@@ -396,7 +396,7 @@ object StreamingOps {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ranges + (present ∩ committed ∩ uncovered), read as explicit leaf
     // dirs: debris is never read, and covered dirs yield to their range
-    val dirs = committedDirs(spark, fs, outputPath, c)
+    val dirs = committedDirs(fs, outputPath, c.contains)
     if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
     else schemaFallback(spark, outputPath)
   }
@@ -416,7 +416,7 @@ object StreamingOps {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     presentBatchIds(fs, p).toSeq.sorted
       .map(b => new org.apache.hadoop.fs.Path(s"$root/batch_id=$b"))
-      .find(hasDataFile(fs, _)) match {
+      .find(dataFiles(fs, _).nonEmpty) match {
       case Some(d) => spark.read.parquet(d.toString).limit(0)
       case None => spark.emptyDataFrame
     }
@@ -463,17 +463,34 @@ object StreamingOps {
   private def rangeCovered(ranges: Seq[(Long, Long)], id: Long): Boolean =
     ranges.exists { case (lo, hi) => lo <= id && id <= hi }
 
-  /** Does `dir` hold at least one data file? A zero-row batch write can
-    * leave `_SUCCESS` only — no parquet footer — and a footerless
-    * directory poisons schema inference for every sibling passed to the
-    * same `spark.read.parquet` call, so the read paths and the output
-    * compactor skip such directories (they carry no rows by
-    * construction). */
-  private def hasDataFile(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists(f =>
+  /** The data files of `dir`. A zero-row batch write can leave
+    * `_SUCCESS` only — no parquet footer — and a footerless directory
+    * poisons schema inference for every sibling passed to the same
+    * `spark.read.parquet` call, so the read paths and the output
+    * compactor skip directories without data files (they carry no rows
+    * by construction). */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).iterator.filter(f =>
       f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith(".") && f.getLen > 0)
+        !f.getPath.getName.startsWith(".") && f.getLen > 0).map(_.getPath).toSeq
+
+  /** The schema Spark's parquet writer stored in `file`'s footer, read
+    * on the driver: `spark.read.parquet` infers the same schema with a
+    * footer-reading Spark job. `None` for a file no Spark writer made. */
+  private def writerSchema(fs: org.apache.hadoop.fs.FileSystem,
+      file: org.apache.hadoop.fs.Path)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(file, fs.getConf))
+    try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    finally in.close()
+  }
 
   /** Partitions that rewrite `dirs` as ~128 MB files (at least one). */
   private def coalescedParts(fs: org.apache.hadoop.fs.FileSystem,
@@ -485,16 +502,18 @@ object StreamingOps {
 
   /** Directories of the committed read view under an output root: every
     * `range=` dir (ranges hold only committed data by construction) plus
-    * the committed, not-range-covered `batch_id=` tail. */
-  private def committedDirs(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String,
-      c: CommitLog.Committed): Seq[String] = {
+    * the committed, not-range-covered `batch_id=` tail. The one
+    * definition of committed output, shared by [[committedTrips]] (over
+    * the on-disk commit log) and the taxi sink's seen-keys lookup (over
+    * its in-memory committed view). */
+  private def committedDirs(fs: org.apache.hadoop.fs.FileSystem, root: String,
+      isCommitted: Long => Boolean): Seq[String] = {
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val ranges = presentRanges(fs, rootPath)
     ranges.sorted.map { case (lo, hi) => s"$root/$RangePrefix$lo-$hi" } ++
       presentBatchIds(fs, rootPath)
-        .filter(b => c.contains(b) && !rangeCovered(ranges, b) &&
-          hasDataFile(fs, new org.apache.hadoop.fs.Path(s"$root/batch_id=$b")))
+        .filter(b => isCommitted(b) && !rangeCovered(ranges, b) &&
+          dataFiles(fs, new org.apache.hadoop.fs.Path(s"$root/batch_id=$b")).nonEmpty)
         .toSeq.sorted
         .map(b => s"$root/batch_id=$b")
   }
@@ -519,9 +538,12 @@ object StreamingOps {
     *     between its own epoch's ids, which a cross-epoch range would
     *     straddle — hence the split);
     *   - crash-safe by the snapshot argument: the range publishes by
-    *     atomic rename, absorbed dirs are deleted only after, and a
-    *     crash in between leaves covered dirs that the read view ignores
-    *     (range wins) and the next call deletes (self-heal, first step);
+    *     atomic rename, absorbed dirs are deleted only after
+    *     [compact-after-range], and a crash in between leaves covered
+    *     dirs that the read view ignores (range wins) and the next call
+    *     deletes (self-heal, first step). The taxi trips table is also
+    *     the taxi stream's seen-keys state, so this rule keeps its
+    *     lookups exact too;
     *   - uncommitted debris inside a range's bounds is impossible for
     *     ids that replay (a later same-epoch commit proves the earlier
     *     batch completed); a dead epoch's trailing debris sits above
@@ -532,7 +554,8 @@ object StreamingOps {
     * ordering, and its volume is bounded by the duplicate count, not the
     * stream's throughput. */
   private[streaming] def compactOutput(spark: org.apache.spark.sql.SparkSession,
-      root: String, isCommitted: Long => Boolean, keepTail: Int): Unit = {
+      root: String, isCommitted: Long => Boolean, keepTail: Int,
+      faultPoint: String => Unit = _ => ()): Unit = {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -555,21 +578,26 @@ object StreamingOps {
         // a committed dir without data files carries no rows (zero-row
         // batch write): deleting it cannot change the view, and it would
         // poison the consolidation read's schema inference
-        val (ids, empty) = group.partition(b =>
-          hasDataFile(fs, new Path(s"$root/batch_id=$b")))
-        empty.foreach(b => fs.delete(new Path(s"$root/batch_id=$b"), true))
+        val files = group.map(b => b -> dataFiles(fs, new Path(s"$root/batch_id=$b")))
+        val (ids, empty) = files.partition(_._2.nonEmpty)
+        empty.foreach { case (b, _) => fs.delete(new Path(s"$root/batch_id=$b"), true) }
         if (ids.size >= 2) {
-          val dirs = ids.map(b => s"$root/batch_id=$b")
-          val tmp = new Path(root, s".tmp_range_${ids.head}_${ids.last}")
+          val dirs = ids.map { case (b, _) => s"$root/batch_id=$b" }
+          val (lo, hi) = (ids.head._1, ids.last._1)
+          val tmp = new Path(root, s".tmp_range_${lo}_$hi")
           fs.delete(tmp, true)
-          spark.read.parquet(dirs: _*).coalesce(coalescedParts(fs, dirs))
+          // the sink wrote every dir with one schema: read it from one
+          // footer on the driver instead of a schema-inference job
+          writerSchema(fs, ids.head._2.head).fold(spark.read)(spark.read.schema)
+            .parquet(dirs: _*).coalesce(coalescedParts(fs, dirs))
             .write.parquet(tmp.toString)
-          val dst = new Path(root, s"$RangePrefix${ids.head}-${ids.last}")
+          val dst = new Path(root, s"$RangePrefix$lo-$hi")
           // dst can pre-exist only if its absorbed dirs still do (deletes
           // run last), so dropping it before the rename loses nothing
           if (fs.exists(dst)) fs.delete(dst, true)
           if (!fs.rename(tmp, dst)) throw new java.io.IOException(
             s"cannot publish output range $dst")
+          faultPoint("compact-after-range")
           dirs.foreach(d => fs.delete(new Path(d), true))
         }
       }
@@ -579,15 +607,18 @@ object StreamingOps {
     * the three ingest-dedup streams. It owns the commit protocol; each
     * stream supplies only its per-batch `step`, which writes the batch's
     * data directories and returns the counter deltas to commit, or `None`
-    * for a batch with nothing to commit.
+    * for a batch with nothing to commit. A sink with `keyedState` keeps
+    * its cross-batch state in those [[KeyedStreamState]] tables (the
+    * ingest streams); the taxi sink has none, because its committed
+    * output is its state.
     *
     * Per micro-batch:
     *  1. the id is epoch-scoped ([[CommitLog.pack]]) so a fresh-checkpoint
     *     restart over an existing commit log can never collide with — and
     *     silently skip — previously committed ids;
-    *  2. the first batch bootstraps the [[CommitLog]] view and the
-    *     [[KeyedStreamState]] tables from `statePath`, and hands the
-    *     committed deltas' sum to `onCommit` (the taxi counters);
+    *  2. the first batch bootstraps the [[CommitLog]] view and any
+    *     [[KeyedStreamState]] tables, and hands the committed deltas' sum
+    *     to `onCommit` (the taxi counters);
     *  3. a batch already committed (by this run or an earlier one) is
     *     skipped;
     *  4. `step` runs; when it returns deltas, the commit marker publishes
@@ -595,18 +626,20 @@ object StreamingOps {
     *  5. post-commit maintenance, each step amortized over several
     *     batches: commit-log roll-up, state compaction
     *     (`compact-after-snap:<table>`, `compact-after-snapshots`) and
-    *     output compaction, all fed from the in-memory committed view
-    *     (the bootstrap view plus this run's commits).
+    *     output compaction (`compact-after-range`), all fed from the
+    *     in-memory committed view (the bootstrap view plus this run's
+    *     commits).
     *
     * Failure semantics are EXACTLY-ONCE under crash + checkpoint-restart
     * replay, by batchId versioning instead of a transaction:
     *  - every data write is an idempotent OVERWRITE of a per-batch
     *    `batch_id=<b>` directory, so re-running a batch replaces its own
     *    debris instead of appending twice;
-    *  - readers are COMMIT-FILTERED: the state bootstrap reads only
-    *    batches with a published marker, so a crash after a state write
-    *    but before the marker cannot reclassify the replayed batch — the
-    *    half-written state is invisible;
+    *  - readers are COMMIT-FILTERED: state reads (the keyed-state
+    *    bootstrap, the taxi seen-keys lookup over the output) see only
+    *    batches with a published marker, so a crash after a write but
+    *    before the marker cannot reclassify the replayed batch — the
+    *    half-written output and state are invisible;
     *  - the marker is written LAST and atomically, carrying the batch's
     *    counter deltas; a replay of a batch whose marker exists is a
     *    complete no-op, and counters bootstrap from the marker log on
@@ -623,17 +656,16 @@ object StreamingOps {
     * crash sites that the crash-replay specs use to throw mid-batch;
     * production callers leave the default no-op. */
   private[streaming] final class ExactlyOnceSink(
-      outputPath: String, statePath: String, tables: Seq[String],
+      outputPath: String, keyedState: Option[KeyedStreamState.Layout],
       epoch: Long, faultPoint: String => Unit,
-      onCommit: Array[Long] => Unit = _ => (),
-      stateScheme: Option[String] = None)(
+      onCommit: Array[Long] => Unit = _ => ())(
       step: (DataFrame, Long, ExactlyOnceSink) => Option[Array[Long]]) {
     private var log: CommitLog = null
     private var base: CommitLog.Committed = null
     private var newIds = Set.empty[Long]
-    private var keyed: KeyedStreamState = null
+    private var keyed: Option[KeyedStreamState] = None
 
-    def state: KeyedStreamState = keyed
+    def state: KeyedStreamState = keyed.get
     def isCommitted(id: Long): Boolean = newIds(id) || base.contains(id)
 
     def apply(batch: DataFrame, rawBatchId: Long): Unit = {
@@ -643,8 +675,8 @@ object StreamingOps {
         log = new CommitLog(spark, outputPath)
         base = log.committed()
         onCommit(base.deltaSums)
-        keyed = new KeyedStreamState(spark, statePath, tables, base, faultPoint,
-          stateScheme)
+        keyed = keyedState.map(l => new KeyedStreamState(spark, l.path, l.tables,
+          base, faultPoint, l.scheme))
       }
       if (isCommitted(batchId)) return
       step(batch, batchId, this).foreach { deltas =>
@@ -653,9 +685,9 @@ object StreamingOps {
         newIds += batchId
         onCommit(deltas)
         log.compact(KeyedStreamState.CompactEvery)
-        state.compactIfDue()
+        keyed.foreach(_.compactIfDue())
         compactOutput(spark, outputPath, isCommitted,
-          KeyedStreamState.CompactEvery)
+          KeyedStreamState.CompactEvery, faultPoint)
       }
     }
   }
@@ -678,46 +710,54 @@ object StreamingOps {
     * file, six counters), as [[graft.etl.Pipeline.run]] does for one file.
     *
     * First-wins dedup across an unbounded stream = within-batch first-wins
-    * (the batch window on the ordinal, reused as-is) + a cross-batch
-    * seen-keys table: a valid row is a duplicate iff its key was inserted
-    * by an earlier batch OR an earlier row of this batch. On a stream
-    * replayed in file order this reproduces the batch pipeline's winners
-    * EXACTLY, ordinal for ordinal.
+    * (the batch window on the ordinal, reused as-is) + a lookup in the
+    * committed trips table: a valid row is a duplicate iff its key was
+    * inserted by an earlier batch OR an earlier row of this batch. As in
+    * the reference, whose inserted table is the only record of the keys
+    * it has seen, the trips output IS the seen-keys state — no second
+    * copy is kept. On a stream replayed in file order this reproduces the
+    * batch pipeline's winners EXACTLY, ordinal for ordinal.
     *
     * Per micro-batch, in order (the `faultPoint` after each step in
     * brackets):
-    *  1. the inserted rows are written to `batch_id=<b>` under the trips
+    *  1. the committed trips directories are listed ([[committedDirs]]
+    *     over the sink's in-memory committed view: ranges plus committed,
+    *     uncovered `batch_id=` dirs) and their key columns are joined to
+    *     the batch; the list is taken once, so the duplicate path's
+    *     recomputation sees the same keys;
+    *  2. the inserted rows are written to `batch_id=<b>` under the trips
     *     table; an `Observation` attached ahead of the inserted filter
     *     yields the five counter deltas from that same pass (a batch with
     *     no rows removes the directory and commits nothing)
     *     [after-inserted];
-    *  2. the seen-keys increment — the key projection of the directory
-    *     just written — is appended to the `seen` state table, unless the
-    *     batch inserted nothing [after-seen];
     *  3. a batch with duplicates writes them to the duplicates side-state
     *     [after-dupstate] and rebuilds the duplicates CSV from the
     *     committed side-state (the first batch also writes the empty file)
     *     [after-csv];
-    *  4. the sink commits the deltas and runs its maintenance.
-    * The micro-batch is not persisted, so adaptive execution sizes every
-    * write's partitions to the batch; a batch with duplicates recomputes
-    * the micro-batch once more for its duplicate rows. The duplicates CSV
-    * is not appended but REBUILT deterministically from committed
-    * side-state + the current batch (single-part swap via
-    * [[graft.etl.Sinks.overwriteSingleCsv]]), so re-running converges to
-    * the same file, and a fresh [[TaxiStreamCounters]] passed to a
-    * restarted stream converges to the batch pipeline's exact golden
-    * stats. */
+    *  4. the sink commits the deltas and runs its maintenance; the trips
+    *     table's output compaction is its only state compaction.
+    * Every read of the sink's own parquet passes the schema it wrote, so
+    * no read runs a schema-inference job. Trips keys are unique by
+    * construction (only unseen winners are inserted), so the lookup join
+    * stays 1:1. The micro-batch is not persisted, so adaptive execution
+    * sizes every write's partitions to the batch; a batch with
+    * duplicates recomputes the micro-batch once more for its duplicate
+    * rows. The duplicates CSV is not appended but REBUILT
+    * deterministically from committed side-state + the current batch
+    * (single-part swap via [[graft.etl.Sinks.overwriteSingleCsv]]), so
+    * re-running converges to the same file, and a fresh
+    * [[TaxiStreamCounters]] passed to a restarted stream converges to the
+    * batch pipeline's exact golden stats. */
   private[streaming] def taxiSink(
       insertedPath: String,
       duplicatesCsvPath: String,
-      seenKeysPath: String,
       counters: TaxiStreamCounters,
       epoch: Long = 0L,
       faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
     import graft.etl.{Dedup, Sinks, Stats}
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.types.LongType
     val keyCols = Sinks.tripKeyCols.map(_._1)
     val dupStatePath = duplicatesCsvPath + "._state"
     def addCounters(d0: Array[Long]): Unit = {
@@ -726,8 +766,8 @@ object StreamingOps {
       counters.invalid.add(d(2)); counters.duplicates.add(d(3))
       counters.inserted.add(d(4))
     }
-    new ExactlyOnceSink(insertedPath, seenKeysPath, Seq("seen"), epoch,
-        faultPoint, addCounters)({ (batchIn, batchId, sink) =>
+    new ExactlyOnceSink(insertedPath, None, epoch, faultPoint, addCounters)({
+        (batchIn, batchId, sink) =>
       val spark = batchIn.sparkSession
       val fs = new Path(insertedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
       // sources without a real ordinal (directory streams have no global
@@ -740,18 +780,18 @@ object StreamingOps {
         else batchIn.withColumn(graft.etl.CsvSource.LineNumberCol,
           monotonically_increasing_id())
       val annotated = Dedup.withFirstWins(batch0)
-      // COMMIT-FILTERED state: keys appended by a crashed, not-yet-
-      // committed batch attempt are invisible (the bootstrap reads only
-      // committed batch_id dirs), so the replay classifies rows exactly
-      // as the first attempt did. Keys are unique across committed
-      // batches by construction (only unseen winners append), so no
-      // distinct() is needed. `withSeen` captures the state's scan as of
-      // this batch's start, so the duplicate path's recomputation reads
-      // the same keys after this batch's own append.
+      // COMMIT-FILTERED state: a crashed, not-yet-committed attempt's
+      // trips directory is not listed, so the replay classifies rows
+      // exactly as the first attempt did
+      val seenDirs = committedDirs(fs, insertedPath, sink.isCommitted)
       val withSeen =
-        if (sink.state.isEmpty) annotated.withColumn("_seen", lit(false))
+        if (seenDirs.isEmpty) annotated.withColumn("_seen", lit(false))
         else annotated.join(
-          sink.state.table("seen").withColumn("_seen", lit(true)), keyCols, "left")
+          spark.read.schema(Sinks.selectTripColumns(annotated).schema)
+            .parquet(seenDirs: _*)
+            .select(Sinks.tripKeyCols.map { case (a, t) => col(t).as(a) } :+
+              lit(true).as("_seen"): _*),
+          keyCols, "left")
       val seen = coalesce(col("_seen"), lit(false))
 
       val insertedDir = s"$insertedPath/batch_id=$batchId"
@@ -762,14 +802,9 @@ object StreamingOps {
       if (d.total == 0) { fs.delete(new Path(insertedDir), true); None }
       else {
         faultPoint("after-inserted")
-        if (d.inserted > 0)
-          sink.state.append(batchId, Map("seen" -> spark.read.parquet(insertedDir).select(
-            Sinks.tripKeyCols.map { case (a, t) => col(t).as(a) }: _*)))
-        faultPoint("after-seen")
-        // dup side-state dirs exist only for batches that HAD duplicates
-        // (an empty-frame parquet write leaves no schema to read back); a
-        // batch's dup count is deterministic, so replay writes — or skips —
-        // the same directory
+        // dup side-state dirs exist only for batches that HAD duplicates;
+        // a batch's dup count is deterministic, so replay writes — or
+        // skips — the same directory
         val dupRows = Sinks.selectDuplicateColumns(withSeen.filter(Stats.isDuplicate(seen)))
         if (d.duplicates > 0)
           dupRows.write.mode(SaveMode.Overwrite)
@@ -785,7 +820,8 @@ object StreamingOps {
             .map(b => s"$dupStatePath/batch_id=$b")
           val dupAll =
             if (dupDirs.isEmpty) dupRows.limit(0).withColumn("batch_id", lit(0L))
-            else spark.read.option("basePath", dupStatePath).parquet(dupDirs: _*)
+            else spark.read.schema(dupRows.schema.add("batch_id", LongType))
+              .option("basePath", dupStatePath).parquet(dupDirs: _*)
           // the file is one part: sorting inside the single partition orders
           // it without a global sort's sampling job
           Sinks.overwriteSingleCsv(
@@ -802,7 +838,11 @@ object StreamingOps {
 
   /** Wire [[annotateTaxiLines]] + [[taxiSink]] into a running query: the
     * full reference ETL (all three consumers) over an unbounded stream of
-    * (line_number, value) rows. */
+    * (line_number, value) rows. The committed trips output under
+    * `config.insertedPath` is the stream's seen-keys state, so
+    * `seenKeysPath` is no longer read (it stays in the signature for
+    * existing callers; a seen-keys tree left there by an earlier version
+    * is ignored). */
   def runTaxiEtlStream(
       rawLines: DataFrame,
       config: graft.etl.EtlConfig,
@@ -812,7 +852,7 @@ object StreamingOps {
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     start(annotateTaxiLines(rawLines, config, columnIndex), checkpointDir,
       config.insertedPath)(epoch => taxiSink(config.insertedPath,
-        config.duplicatesCsvPath, seenKeysPath, counters, epoch))
+        config.duplicatesCsvPath, counters, epoch))
 
   final case class KeyedCount(key: String, n: Long, total: Double)
 
@@ -882,15 +922,18 @@ object StreamingOps {
       }
   }
 
-  /** Keyed state for the exactly-once stream sinks (the taxi seen-keys and
-    * the ingest-dedup band/shingle/unit tables), kept as a parquet
-    * changelog: per table, a `batch_id=<b>` directory per appended batch
-    * plus at most one `_snapshot=<upTo>` directory that folds every
-    * committed batch up to `upTo`. [[append]] writes each increment once
+  /** Keyed state for the exactly-once ingest-dedup sinks (their
+    * band/shingle/unit tables), kept as a parquet changelog: per table, a
+    * `batch_id=<b>` directory per appended batch plus at most one
+    * `_snapshot=<upTo>` directory that folds every committed batch up to
+    * `upTo`. [[append]] writes each increment once
     * and keeps its directory; [[table]] is ONE parquet scan over the
     * table's current directories, so the scan's partition count follows
     * the file packing of a few small directories instead of growing with
-    * every absorbed batch, and nothing is held in the block manager.
+    * every absorbed batch, and nothing is held in the block manager. The
+    * scan reads with the table's schema as its first append or scan saw
+    * it, so only a restart's first scan of a table infers it from the
+    * footers (a Spark job); every later scan, and [[compact]], runs none.
     *
     * A restart bootstraps by listing the same directories,
     * COMMIT-FILTERED: only `batch_id=<b>` directories whose batch has a
@@ -925,19 +968,6 @@ object StreamingOps {
     import KeyedStreamState.SnapPrefix
     private val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // batch directories stored directly under `statePath` (the older flat
-    // layout, before per-table directories) would bootstrap EMPTY and
-    // re-admit every kept key, so that layout is refused
-    if (fs.exists(new Path(statePath))) {
-      val stray = fs.listStatus(new Path(statePath)).iterator
-        .map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSeq
-      if (stray.nonEmpty) throw new IllegalStateException(
-        s"state at $statePath uses the legacy flat batch_id= layout " +
-          s"(${stray.take(3).mkString(", ")}…) — this bootstrap reads " +
-          s"${tables.map(t => s"$statePath/$t/").mkString(", ")}. Move the " +
-          "batch directories under their table directory, or wipe the " +
-          "state and rebuild it from the sink's output.")
-    }
     // highest batch id whose committed changelog content is in `dirs` —
     // the cover point a disk snapshot is stamped with
     private var maxIncludedId: Long = committed.maxId
@@ -978,6 +1008,7 @@ object StreamingOps {
           .map(b => s"$statePath/$t/batch_id=$b"))
     }.toMap
     private var scans = Map.empty[String, DataFrame]
+    private var schemas = Map.empty[String, org.apache.spark.sql.types.StructType]
     // appends since the last snapshot, counted from the bootstrapped tail so
     // that a stream restarting more often than CompactEvery still compacts
     private var sinceCompact = dirs(tables.head).count(_.contains("/batch_id="))
@@ -1013,7 +1044,9 @@ object StreamingOps {
 
     /** One parquet scan over the table's snapshot + tail directories. */
     def table(name: String): DataFrame = scans.getOrElse(name, {
-      val df = spark.read.parquet(dirs(name): _*)
+      val df = schemas.get(name).fold(spark.read)(spark.read.schema)
+        .parquet(dirs(name): _*)
+      schemas += name -> df.schema
       scans += name -> df
       df
     })
@@ -1033,6 +1066,7 @@ object StreamingOps {
         val rows = Observation()
         df.observe(rows, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite).parquet(dir)
+        schemas += t -> df.schema
         t -> (dir, rows.get("n").asInstanceOf[Long])
       }
       val (nonEmpty, empty) = written.partition { case (_, (_, n)) => n > 0 }
@@ -1106,6 +1140,11 @@ object StreamingOps {
     val SnapPrefix = "_snapshot="
     /** State-root file naming the key scheme the state was built under. */
     val SchemeFile = "_scheme"
+
+    /** Where an [[ExactlyOnceSink]] keeps its keyed state: the state root,
+      * its tables, and the key scheme stamped on it, if any. */
+    final case class Layout(path: String, tables: Seq[String],
+        scheme: Option[String] = None)
   }
 
   /** Streaming MinHash near-dup INGEST dedup — the stream-shape of the
@@ -1153,9 +1192,9 @@ object StreamingOps {
   private[streaming] def minhashSink(
       statePath: String, keptPath: String, threshold: Double,
       epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
-    new ExactlyOnceSink(keptPath, statePath, Seq("bands", "shingles"),
-        epoch, faultPoint,
-        stateScheme = Some(graft.functions.MinHashSignature.SchemeId))(
+    new ExactlyOnceSink(keptPath, Some(KeyedStreamState.Layout(statePath,
+        Seq("bands", "shingles"), Some(graft.functions.MinHashSignature.SchemeId))),
+        epoch, faultPoint)(
         (batch, batchId, sink) =>
       if (batch.isEmpty) None
       else Some(Array(minhashDedupBatch(batch, batchId, sink.state, keptPath,
@@ -1366,7 +1405,8 @@ object StreamingOps {
       bands: Int, rowsPerBand: Int, seed: Long,
       epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
     var hps: Array[Array[Double]] = null
-    new ExactlyOnceSink(keptPath, statePath, Seq("bands", "units"),
+    new ExactlyOnceSink(keptPath,
+        Some(KeyedStreamState.Layout(statePath, Seq("bands", "units"))),
         epoch, faultPoint)((batch, batchId, sink) =>
       if (batch.isEmpty) None
       else {
@@ -1573,7 +1613,8 @@ object StreamingOps {
   private[streaming] def mediaSink(
       statePath: String, keptPath: String, maxHamming: Int,
       epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
-    new ExactlyOnceSink(keptPath, statePath, Seq("bands"), epoch,
+    new ExactlyOnceSink(keptPath,
+        Some(KeyedStreamState.Layout(statePath, Seq("bands"))), epoch,
         faultPoint)((batch, batchId, sink) =>
       if (batch.isEmpty) None
       else Some(Array(mediaDedupBatch(batch, batchId, sink.state, keptPath,

@@ -171,16 +171,14 @@ class StreamingOpsSpec extends SparkSpec {
       total = 30000, parsed = 29855, invalid = 145,
       duplicates = 15, inserted = 29840, duplicatesFileRows = 15)
     val out = tmpDir("taxieo")
-    val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
+    val (trips, dups) = (s"$out/trips", s"$out/duplicates")
 
-    // crash points that bracket every write: between the inserted append
-    // and the seen-keys append, after the seen-keys append, after the
-    // side-state, after the CSV rebuild, and after the marker itself
-    val crashes = Seq("after-inserted", "after-seen", "after-dupstate",
-      "after-csv", "after-marker")
+    // crash points that bracket every write: after the inserted append,
+    // after the side-state, after the CSV rebuild, and after the marker
+    val crashes = Seq("after-inserted", "after-dupstate", "after-csv", "after-marker")
     var armed: Option[String] = None
     def processor(counters: StreamingOps.TaxiStreamCounters) =
-      StreamingOps.taxiSink(trips, dups, seen, counters,
+      StreamingOps.taxiSink(trips, dups, counters,
         faultPoint = p => if (armed.contains(p)) {
           armed = None
           throw new RuntimeException(s"injected crash $p")
@@ -189,7 +187,7 @@ class StreamingOpsSpec extends SparkSpec {
     // first attempted by a "process" that crashes at one boundary, then a
     // RESTARTED processor (fresh instance + fresh counters = checkpoint
     // recovery) replays the SAME batch before moving on — batch ids cycle
-    // through all five crash points across the three batches, twice
+    // through all four crash points across the three batches
     var lastCounters = new StreamingOps.TaxiStreamCounters
     var p = processor(lastCounters)
     batches.foreach { case (b, df) =>
@@ -288,29 +286,33 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("taxi sink over seeded lines is exactly-once: crash at every fault point, replay matches Pipeline.run") {
-    import StreamingOps.KeyedStreamState.SnapPrefix
+    import StreamingOps.KeyedStreamState.CompactEvery
     val batch = taxiBatchRun(300, seed = 11L)
     val config = graft.etl.EtlConfig(inputCsvPath = "",
       duplicatesCsvPath = "", insertedPath = "")
-    // ten micro-batches annotated EXACTLY as the streaming query would
-    // annotate them — a checkpoint restart redelivers the same (frame,
-    // batchId), which invoking the processor directly models
-    val batches = batch.lines.grouped(30).toSeq.zipWithIndex.map { case (chunk, b) =>
+    // seventeen micro-batches annotated EXACTLY as the streaming query
+    // would annotate them — a checkpoint restart redelivers the same
+    // (frame, batchId), which invoking the processor directly models.
+    // 2 × CompactEvery + 1 batches: the trips output compacts once
+    val batches = batch.lines.grouped(18).toSeq.zipWithIndex.map { case (chunk, b) =>
       (b.toLong, StreamingOps.annotateTaxiLines(
         chunk.toDF("line_number", "value"), config, canonicalIdx))
     }
+    assert(batches.size == 2 * CompactEvery + 1)
     val out = tmpDir("taxieoseeded")
-    val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
-    // every batch's first attempt crashes at one of the five write
-    // boundaries (each boundary is hit twice over the ten batches); the
-    // post-commit seen-keys compaction crashes once, wherever it first runs
-    val sites = Seq("after-inserted", "after-seen", "after-dupstate",
-      "after-csv", "after-marker")
-    val compactSite = "compact-after-snapshots"
+    val (trips, dups) = (s"$out/trips", s"$out/duplicates")
+    // every batch's first attempt crashes at one of the four write
+    // boundaries (each boundary is hit at least four times over the
+    // seventeen batches); the trips compaction — the seen-keys state's
+    // only compaction — crashes once, between its range rename and the
+    // deletes of the dirs the range absorbed, so later batches look their
+    // keys up in a range AND the stale dirs it covers
+    val sites = Seq("after-inserted", "after-dupstate", "after-csv", "after-marker")
+    val compactSite = "compact-after-range"
     var armed: Option[String] = None
     var compactArmed = true
     def processor(counters: StreamingOps.TaxiStreamCounters) =
-      StreamingOps.taxiSink(trips, dups, seen, counters,
+      StreamingOps.taxiSink(trips, dups, counters,
         faultPoint = p => if (armed.contains(p) || (compactArmed && p == compactSite)) {
           if (p == compactSite) compactArmed = false else armed = None
           throw new RuntimeException(s"injected crash $p")
@@ -330,8 +332,8 @@ class StreamingOpsSpec extends SparkSpec {
       }
       assert(armed.isEmpty, s"batch $b never reached $armed")
     }
-    assert(!compactArmed, "the seen-keys state never compacted")
-    assert(stateDirNames(s"$seen/seen").exists(_.startsWith(SnapPrefix)))
+    assert(!compactArmed, "the trips output never compacted")
+    assert(stateDirNames(trips).exists(_.startsWith(StreamingOps.RangePrefix)))
     // a final restart rebuilds the counters from the commit log alone
     val finalCounters = new StreamingOps.TaxiStreamCounters
     processor(finalCounters).apply(batches.last._2, batches.last._1)
@@ -343,7 +345,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(csvPartLines(dups) == batch.dupCsv)
   }
 
-  test("a taxi micro-batch without duplicates runs two SQL executions") {
+  test("a taxi micro-batch without duplicates runs one SQL execution") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val config = graft.etl.EtlConfig(inputCsvPath = "",
@@ -353,7 +355,7 @@ class StreamingOpsSpec extends SparkSpec {
         .toDF("line_number", "value"), config, canonicalIdx)
     val out = tmpDir("taxiexecs")
     val p = StreamingOps.taxiSink(s"$out/trips", s"$out/duplicates",
-      s"$out/seen_keys", new StreamingOps.TaxiStreamCounters)
+      new StreamingOps.TaxiStreamCounters)
     // batch 0 also writes the first (empty) duplicates file
     p.apply(annotate(1L, Seq(
       "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47")), 0L)
@@ -366,16 +368,45 @@ class StreamingOpsSpec extends SparkSpec {
       "01/02/2020 01:00:00 AM,01/02/2020 01:10:00 AM,2,3.4,Y,10,20,30,4",
       "01/03/2020 02:00:00 AM,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2",
       "bad-date,01/03/2020 02:20:00 AM,1,2.0,N,11,21,12,2"))
-    ListenerBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      p.apply(batch1, 1L)
-      ListenerBus.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    // the inserted-rows write (which also yields the counters) and the
-    // seen-keys write; no emptiness probe, counter aggregate or checkpoint
-    assert(executions.get == 2, s"${executions.get} SQL executions")
+    // batch 2 repeats batch 0's and batch 1's keys: the lookup in the
+    // committed trips and the duplicates side-state read both run
+    val batch2 = annotate(5L, Seq(
+      "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,7.7,N,1,2,3,4",
+      "01/02/2020 01:00:00 AM,01/02/2020 01:10:00 AM,2,1.0,N,5,6,7,8"))
+    // the sink reads only parquet it wrote, with the schema it wrote
+    val (_, inferred) = inferenceJobs {
+      spark.listenerManager.register(listener)
+      try {
+        p.apply(batch1, 1L)
+        ListenerBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      p.apply(batch2, 2L)
+    }
+    // the inserted-rows write, which also yields the counters; no
+    // emptiness probe, counter aggregate, seen-keys write or checkpoint
+    assert(executions.get == 1, s"${executions.get} SQL executions")
+    assert(inferred == 0, s"$inferred schema-inference jobs")
     assert(StreamingOps.committedTrips(spark, s"$out/trips").count() == 3)
+    assert(spark.read.option("header", "true").csv(s"$out/duplicates").count() == 2)
+  }
+
+  /** `body`'s result and the number of parquet schema-inference jobs it
+    * ran: inference is a job over a parallelized list of footers. */
+  private def inferenceJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(_.scope.exists(_.name == "parallelize"))))
+          n.incrementAndGet()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val r = body
+      ListenerBus.drain(spark.sparkContext)
+      (r, n.get)
+    } finally spark.sparkContext.removeSparkListener(jobs)
   }
 
   test("keyed state scan keeps a bounded partition count across compaction") {
@@ -384,13 +415,17 @@ class StreamingOpsSpec extends SparkSpec {
     val log = new StreamingOps.CommitLog(spark, s"$out/kept")
     val st = new StreamingOps.KeyedStreamState(spark, s"$out/state", Seq("keys"),
       log.committed())
-    // every increment arrives as several files, as a shuffled write leaves it
-    (0 to CompactEvery).foreach { b =>
-      st.append(b, Map("keys" -> spark.range(b * 100L, b * 100L + 100L, 1, 4).toDF("k")))
-      log.commit(b, Array(1L))
-      st.compactIfDue()
+    // the scans and the compaction read with the schema the appends wrote
+    val (keys, inferred) = inferenceJobs {
+      // every increment arrives as several files, as a shuffled write leaves it
+      (0 to CompactEvery).foreach { b =>
+        st.append(b, Map("keys" -> spark.range(b * 100L, b * 100L + 100L, 1, 4).toDF("k")))
+        log.commit(b, Array(1L))
+        st.compactIfDue()
+      }
+      st.table("keys")
     }
-    val keys = st.table("keys")
+    assert(inferred == 0, s"$inferred schema-inference jobs")
     assert(keys.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism,
       s"${keys.rdd.getNumPartitions} partitions after ${CompactEvery + 1} appends")
     assert(keys.count() == 100L * (CompactEvery + 1))
@@ -460,25 +495,42 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("taxi seen-keys legacy flat layout fails loudly at bootstrap") {
-    import spark.implicits._
-    val out = tmpDir("taxilegacy")
-    // pre-r10 layout: seen-key batches directly under seenKeysPath — the
-    // changelog bootstrap reads seenKeysPath/seen/ and would otherwise
-    // silently start empty, re-admitting every previously seen key
-    Seq(("2020-01-01 05:28:15", "2020-01-01 05:33:03", 1))
-      .toDF("pickup_utc", "dropoff_utc", "passenger_count")
-      .write.parquet(s"$out/seen_keys/batch_id=0")
-    val colIdx = graft.etl.CsvSource.RequiredColumns.zipWithIndex.toMap
+  test("a leftover seen_keys tree is ignored") {
+    implicit val sqlCtx = spark.sqlContext
+    val batch = taxiBatchRun(300, seed = 13L)
+    val out = tmpDir("taxileftover")
     val config = graft.etl.EtlConfig(inputCsvPath = "",
-      duplicatesCsvPath = "", insertedPath = "")
-    val df = StreamingOps.annotateTaxiLines(
-      Seq((1L, "01/01/2020 12:28:15 AM,01/01/2020 12:33:03 AM,1,1.2,N,238,239,6,1.47"))
-        .toDF("line_number", "value"), config, colIdx)
-    val p = StreamingOps.taxiSink(s"$out/trips", s"$out/dups",
-      s"$out/seen_keys", new StreamingOps.TaxiStreamCounters)
-    val e = intercept[IllegalStateException] { p.apply(df, 0L) }
-    assert(e.getMessage.contains("legacy flat"))
+      duplicatesCsvPath = s"$out/duplicates", insertedPath = s"$out/trips")
+    val (first, second) = batch.lines.splitAt(150)
+    def run(lines: Seq[(Long, String)], ckpt: String): StreamingOps.TaxiStreamCounters = {
+      val counters = new StreamingOps.TaxiStreamCounters
+      val input = MemoryStream[(Long, String)]
+      val q = StreamingOps.runTaxiEtlStream(input.toDS().toDF("line_number", "value"),
+        config, canonicalIdx, s"$out/seen_keys", counters, ckpt)
+      try lines.grouped(50).foreach { chunk =>
+        input.addData(chunk)
+        q.processAllAvailable()
+      } finally q.stop()
+      counters
+    }
+    run(first, s"$out/ckpt1")
+    // a seen-keys tree in both layouts earlier versions kept: flat batch
+    // dirs, and a `seen` table claiming that every key was seen. Read, it
+    // would fail the stream or mark every row of the restart a duplicate
+    val keys = StreamingOps.committedTrips(spark, config.insertedPath)
+      .select(graft.etl.Sinks.tripKeyCols.map { case (a, t) => $"$t".as(a) }: _*)
+    keys.write.parquet(s"$out/seen_keys/batch_id=0")
+    StreamingOps.annotateTaxiLines(batch.lines.toDF("line_number", "value"),
+        config, canonicalIdx)
+      .select(graft.etl.Sinks.tripKeyCols.map(k => $"${k._1}"): _*)
+      .write.parquet(s"$out/seen_keys/seen/batch_id=0")
+    // restart over the existing output with a fresh checkpoint: no
+    // committed key is admitted again, and the counters rebuilt from the
+    // commit log plus the second half equal the batch pipeline's
+    val counters = run(second, s"$out/ckpt2")
+    assert(counters.snapshot == batch.stats)
+    assert(rowStrings(StreamingOps.committedTrips(spark, config.insertedPath)) == batch.trips)
+    assert(csvPartLines(config.duplicatesCsvPath) == batch.dupCsv)
   }
 
   test("flatMapGroupsWithState sessionization closes sessions on gap, keeps open state") {
@@ -1521,17 +1573,17 @@ class StreamingOpsSpec extends SparkSpec {
       lines.zipWithIndex.map { case (l, i) => (i + 1L, l) }
         .toDF("line_number", "value"), config, colIdx)
     val out = tmpDir("taxiepoch")
-    val (trips, dups, seen) = (s"$out/trips", s"$out/duplicates", s"$out/seen_keys")
+    val (trips, dups) = (s"$out/trips", s"$out/duplicates")
     // epoch 1 (first stream start): batch 0 inserts lineA's trip
     val c1 = new StreamingOps.TaxiStreamCounters
-    StreamingOps.taxiSink(trips, dups, seen, c1, epoch = 1L)(
+    StreamingOps.taxiSink(trips, dups, c1, epoch = 1L)(
       annotate(Seq(lineA)), 0L)
     // epoch 2 (checkpoint lost — batch ids restart at 0): the batch MUST
     // be processed (bare-batch-id logs would silently skip it), lineB
     // inserted, and lineA recognized as a duplicate of the EPOCH-1 kept
-    // key via the cross-epoch committed seen-keys state
+    // key via the cross-epoch committed trips output
     val c2 = new StreamingOps.TaxiStreamCounters
-    StreamingOps.taxiSink(trips, dups, seen, c2, epoch = 2L)(
+    StreamingOps.taxiSink(trips, dups, c2, epoch = 2L)(
       annotate(Seq(lineB, lineA)), 0L)
     assert(c2.snapshot == graft.etl.Stats.EtlStats(
       total = 3, parsed = 3, invalid = 0, duplicates = 1, inserted = 2,
