@@ -73,6 +73,15 @@ object Bench {
     }.min
   }
 
+  /** Load gate limits (see `main`): the highest 1-minute load average
+    * at bench start, the slowest post-warm-up epoch probe, and how many
+    * times each gate sleeps and re-probes before the run is stamped
+    * `degraded`. */
+  private val MaxLoad = 4.0
+  private val MaxProbe = 0.12
+  private val GateRetries = 3
+  private val GateSleepSecs = 45
+
   private def storageMb(spark: SparkSession): Long =
     spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1024 * 1024)
 
@@ -100,26 +109,18 @@ object Bench {
     // stamped on BOTH the compact line and the file artifact so no
     // consumer mistakes a contended total for a regression (or a
     // parity) again. Every attempt lands in the artifact's gate trail.
-    val maxLoad =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "4.0").toDouble
-    val maxProbe =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_PROBE", "0.12").toDouble
-    val gateRetries =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_RETRIES", "3").toInt
-    val gateSleepSecs =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_SLEEP", "45").toInt
     var gateAttempts = List.empty[(String, Double, Double)] // newest first
     def gate(phase: String, hot: () => Boolean,
         sample: () => (Double, Double)): Boolean = {
       var s = sample(); gateAttempts ::= ((phase, s._1, s._2))
-      var retriesLeft = gateRetries
+      var retriesLeft = GateRetries
       var isHot = hot()
       while (isHot && retriesLeft > 0) {
         System.err.println(f"[bench] $phase gate hot (load=${s._1}%.2f " +
-          f"probe=${s._2}%.3fs; limits load $maxLoad%.1f / warm probe " +
-          f"$maxProbe%.2fs) — sleeping ${gateSleepSecs}s " +
+          f"probe=${s._2}%.3fs; limits load $MaxLoad%.1f / warm probe " +
+          f"$MaxProbe%.2fs) — sleeping ${GateSleepSecs}s " +
           s"($retriesLeft retries left)")
-        Thread.sleep(gateSleepSecs * 1000L)
+        Thread.sleep(GateSleepSecs * 1000L)
         retriesLeft -= 1
         s = sample(); gateAttempts ::= ((phase, s._1, s._2))
         isHot = hot()
@@ -129,7 +130,7 @@ object Bench {
     var lastLoad = -1.0
     var lastProbe = -1.0
     val hotPre = gate("pre_warmup",
-      () => lastLoad >= 0 && lastLoad > maxLoad,
+      () => lastLoad >= 0 && lastLoad > MaxLoad,
       () => { lastLoad = loadAvg; lastProbe = epochProbeSecs(spark)
               (lastLoad, lastProbe) })
     val loadStart = lastLoad
@@ -155,7 +156,7 @@ object Bench {
     // `degraded` on an idle machine; the probe measures what the timed
     // passes will actually see.
     val hotWarm = gate("post_warmup",
-      () => lastProbe > maxProbe,
+      () => lastProbe > MaxProbe,
       () => { lastLoad = loadAvg; lastProbe = epochProbeSecs(spark)
               (lastLoad, lastProbe) })
     val probeWarm = lastProbe

@@ -51,8 +51,9 @@ object Sinks {
   def writeInserted(annotated: DataFrame, path: String): Unit =
     insertedRows(annotated).write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** JDBC variant of S5 — untestable in this container (no database), but
-    * the full configuration surface of the reference's bulk insert. */
+  /** JDBC variant of S5: the reference's batched bulk insert, with its
+    * batch size as JDBC `batchsize`. SinksSpec loads it into embedded
+    * Derby. */
   def writeInsertedJdbc(
       annotated: DataFrame, url: String, table: String, batchSize: Int): Unit =
     insertedRows(annotated).write.mode(SaveMode.Append)

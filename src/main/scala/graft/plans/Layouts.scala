@@ -1,41 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Physical data layout — the Spark analog of the reference's index DDL
-  * (TaxiEtl/script.sql:55-97). SQL Server uses B-tree indexes; a Spark
-  * warehouse gets the same query properties from layout:
+  * (TaxiEtl/script.sql:55-97). SQL Server gets point and range seeks from
+  * B-tree indexes; a Spark warehouse gets them from how its files are laid
+  * out and sized:
   *
-  *  - `writePartitionedBy`: hive-style partition directories. A filter on
-  *    the partition column becomes partition PRUNING (whole directories
-  *    skipped at planning time) — the analog of the reference's
-  *    IX_Trips_PULocation seek for Q4-style point queries. At 100 TB this
-  *    is the difference between scanning one key's slice and the world.
-  *  - `writeBucketedTable`: pre-shuffled, co-located layout on the join /
-  *    dedup key. Two tables bucketed on the same key with the same bucket
-  *    count join WITHOUT a shuffle — the standing answer to "this join's
-  *    exchange is the bottleneck at scale".
+  *  - Z-order ([[zorderValue]], [[zorderSql]]): sorting by the Morton
+  *    interleave of two columns gives each file tight min/max ranges on
+  *    BOTH, so a 2-d box predicate skips files on either column.
+  *  - Compaction ([[assignBins]], [[compactionPlan]]): a small-file
+  *    inventory bin-packed into target-sized output files by sequential
+  *    fill, the deterministic core of an OPTIMIZE pass.
   */
 object Layouts {
-
-  def writePartitionedBy(df: DataFrame, partitionCol: String, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
-
-  def writeBucketedTable(
-      df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Join two same-bucketed tables on the bucket key — shuffle-free by
-    * construction. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-      key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 
   /** Bits per dimension for [[zorderValue]] (16+16 → one positive
     * 32-bit z-value in a long). Shared with the `zorder_keys` oracle. */
@@ -76,8 +57,6 @@ object Layouts {
     }
   }
 
-  /** The same interleave as ANSI SQL for the DuckDB oracle (generated
-    * from the same constants, so the two sides cannot drift). */
   /** Target compacted-file size for [[compactionPlan]] and the per-row
     * storage overhead added to payload bytes — shared with the oracle.
     * 64 KiB binds on the harness inventory (~150 logical files of ~8 KiB
@@ -161,6 +140,8 @@ object Layouts {
          |FROM inv ORDER BY file_key""".stripMargin,
   )
 
+  /** The same interleave as ANSI SQL for the DuckDB oracle (generated
+    * from the same constants, so the two sides cannot drift). */
   def zorderSql(xExpr: String, yExpr: String): String = {
     val m = 1L << ZBits
     // DuckDB (Postgres-style) gives &, |, << EQUAL precedence, left-

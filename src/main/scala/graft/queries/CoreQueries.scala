@@ -195,8 +195,7 @@ object CoreQueries {
   }
 
   /** Tumbling event-time windows in BATCH via the same `window()` function
-    * Structured Streaming uses — batch/stream parity for windowed
-    * aggregation (the streaming twin is StreamingOps.windowedCounts).
+    * Structured Streaming uses for windowed aggregation.
     * Pure hash aggregate on (hour, type): partial+final, no shuffle
     * beyond the group keys. */
   def tumblingCounts(spark: SparkSession, sfDir: String): DataFrame = {

@@ -1,44 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-/** Structured Streaming variants of the pipeline's stateful operators
-  * (SURVEY §2.8 — the reference is a bounded pull loop; these are the
-  * unbounded versions a production deployment of the same semantics uses).
+/** The four exactly-once micro-batch streams: the taxi ETL
+  * ([[runTaxiEtlStream]]) and the MinHash, embedding and media
+  * ingest-dedup streams ([[runMinhashDedupStream]], [[runEmbDedupStream]],
+  * [[runMediaDedupStream]]) — the unbounded form of the reference's
+  * bounded pull loop (SURVEY §2.8).
   *
-  * State lives in the checkpointed state store, partitioned by key — the
-  * streaming analog of the batch window-dedup's hash exchange, with the
-  * same "no driver-side HashSet" scale property.
+  * No stream uses Spark's state store. Each runs its micro-batches
+  * through one [[ExactlyOnceSink]] in `foreachBatch`, and its cross-batch
+  * state is parquet the sink writes itself: the committed trips output
+  * for the taxi stream, [[KeyedStreamState]] tables for the ingest
+  * streams. A [[CommitLog]] beside the output makes each batch visible
+  * exactly once under crash and replay. State lookups are joins against
+  * that parquet, so no driver-side HashSet holds the keys.
   */
 object StreamingOps {
-
-  /** First-seen-wins streaming dedup with bounded state: duplicates within
-    * the watermark horizon are dropped, state older than the watermark is
-    * evicted. The streaming analog of W1 (first-wins dedup). */
-  def dedupWithinWatermark(
-      stream: DataFrame,
-      eventTimeCol: String,
-      delay: String,
-      keys: Seq[String]): DataFrame =
-    stream
-      .withWatermark(eventTimeCol, delay)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Event-time windowed counts with late-data handling — the streaming
-    * shape of the A1 run-counter aggregation. */
-  def windowedCounts(
-      stream: DataFrame,
-      eventTimeCol: String,
-      delay: String,
-      windowLength: String,
-      groupCol: String): DataFrame =
-    stream
-      .withWatermark(eventTimeCol, delay)
-      .groupBy(window(col(eventTimeCol), windowLength), col(groupCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col(s"window.start").as("window_start"), col(groupCol), col("n"))
 
   /** Delimited `value` lines → raw_* + typed + error columns: the SAME
     * ParseValidate/Normalize projections as the batch pipeline, applied to
@@ -106,23 +85,22 @@ object StreamingOps {
       names.filter(_.startsWith(RollupPrefix))
         .sortBy(_.stripPrefix(RollupPrefix).toLong).lastOption
 
-    /** Parse a roll-up file: `w:<epoch>:<maxBatch>:<sums>` watermark
-      * lines plus (legacy, pre-watermark roll-ups) exact `id:deltas`
-      * lines — the latter ride along as tail entries until the next
-      * [[compact]] folds them into watermarks. */
-    private def parseRollup(text: String)
-        : (Map[Long, (Long, Array[Long])], Map[Long, Array[Long]]) = {
-      val lines = text.split('\n').iterator.filter(_.nonEmpty).toSeq
-      val wm = lines.filter(_.startsWith("w:")).map { line =>
-        val Array(_, e, b, ds) = line.split(':')
-        e.toLong -> (b.toLong, ds.split(',').map(_.toLong))
-      }.toMap
-      val exact = lines.filterNot(_.startsWith("w:")).map { line =>
-        val Array(id, ds) = line.split(':')
-        id.toLong -> ds.split(',').map(_.toLong)
-      }.toMap
-      (wm, exact)
-    }
+    /** The per-epoch watermarks of the newest roll-up among `names`
+      * (none when there is no roll-up): one `w:<epoch>:<maxBatch>:<sums>`
+      * line per epoch. Any other line is refused: a line this parser
+      * cannot place would drop committed batches from the view, and the
+      * stream would then process them a second time. */
+    private def watermarks(names: Seq[String]): Map[Long, (Long, Array[Long])] =
+      newestRollup(names).fold(Map.empty[Long, (Long, Array[Long])]) { n =>
+        val p = new Path(dir, n)
+        readFile(p).split('\n').iterator.filter(_.nonEmpty).map { line =>
+          if (!line.startsWith("w:")) throw new IllegalStateException(
+            s"$p holds '${line.take(32)}', which is not a `w:` watermark " +
+              "line; refusing to read a commit log this version did not write")
+          val Array(_, e, b, ds) = line.split(':')
+          e.toLong -> (b.toLong, ds.split(',').map(_.toLong))
+        }.toMap
+      }
 
     /** The committed-batch view: per-epoch low watermarks from the newest
       * roll-up file plus the exact marker-file tail. A marker whose id a
@@ -134,18 +112,13 @@ object StreamingOps {
       else {
         val names = fs.listStatus(dir).iterator.filter(_.isFile)
           .map(_.getPath.getName).toSeq
-        val (wm, legacy) = newestRollup(names) match {
-          case None => (Map.empty[Long, (Long, Array[Long])],
-            Map.empty[Long, Array[Long]])
-          case Some(n) => parseRollup(readFile(new Path(dir, n)))
-        }
+        val wm = watermarks(names)
         val markers = names.iterator
           .filter(n => !n.startsWith(".") && !n.startsWith("_"))
           .map(n => n.toLong ->
             readFile(new Path(dir, n)).trim.split(',').map(_.toLong))
           .filterNot { case (id, _) => CommitLog.coveredBy(wm, id) }
-        new CommitLog.Committed(wm, legacy.filterNot { case (id, _) =>
-          CommitLog.coveredBy(wm, id) } ++ markers)
+        new CommitLog.Committed(wm, markers.toMap)
       }
 
     /** Atomically publish batch `b` with its counter deltas. */
@@ -189,22 +162,15 @@ object StreamingOps {
       val markerIds = names.filter(n => !n.startsWith(".") && !n.startsWith("_"))
         .map(_.toLong)
       if (markerIds.size < 2 * keepTail) return
-      val (wm0, legacy) = newestRollup(names) match {
-        case None => (Map.empty[Long, (Long, Array[Long])],
-          Map.empty[Long, Array[Long]])
-        case Some(n) => parseRollup(readFile(new Path(dir, n)))
-      }
+      val wm0 = watermarks(names)
       val absorb = markerIds.sorted.dropRight(keepTail)
-      // fold legacy exact entries + uncovered absorbed markers into the
-      // watermarks; covered absorbed markers are debris whose deltas the
-      // watermark already holds — delete-only, never re-added
+      // fold uncovered absorbed markers into the watermarks; covered
+      // absorbed markers are debris whose deltas the watermark already
+      // holds — delete-only, never re-added
       var wm = wm0
-      // Map ++ dedups by id, so a debris marker that duplicates a legacy
-      // exact entry folds ONCE (identical content by the commit protocol)
-      (legacy ++ absorb.filterNot(CommitLog.coveredBy(wm0, _))
+      absorb.filterNot(CommitLog.coveredBy(wm0, _))
         .map(id => id -> readFile(new Path(dir, id.toString)).trim
-          .split(',').map(_.toLong)))
-        .filterNot { case (id, _) => CommitLog.coveredBy(wm0, id) }
+          .split(',').map(_.toLong))
         .foreach { case (id, ds) =>
           val e = id >>> CommitLog.BatchBits
           val b = id & CommitLog.BatchMask
@@ -319,12 +285,10 @@ object StreamingOps {
       * fail loudly rather than guess an epoch.
       *
       * A checkpoint that already has Spark stream state (`offsets/`) but
-      * no `_graft_epoch` predates epoch scoping: its committed ids in the
-      * log are bare epoch-0 ids, and it may replay an in-flight batch.
-      * Claiming a FRESH epoch for it would un-match the replayed batch
-      * from its committed marker and reprocess it — so such a checkpoint
-      * CONTINUES under epoch 0 (exactly what it was writing before),
-      * which is then persisted like any other claim. */
+      * no `_graft_epoch` is refused: the stream start publishes the epoch
+      * file before Spark writes any offsets, so the file was lost, and a
+      * FRESH epoch would un-match a replayed in-flight batch from its
+      * committed marker and process it twice. */
     def resolveEpoch(spark: org.apache.spark.sql.SparkSession,
         checkpointDir: String, commitRoot: String): Long = {
       import org.apache.hadoop.fs.Path
@@ -339,14 +303,17 @@ object StreamingOps {
             else s"unparseable content '${raw.take(32)}'"} — the epoch " +
             "file is published by atomic rename, so this is external " +
             "corruption; delete the file to re-resolve from the commit " +
-            "log (safe only if no batch committed under the torn epoch) " +
+            "log (possible only while the checkpoint has no offsets/) " +
             "or restore it from a checkpoint backup"))
       } else {
-        val epoch = if (fs.exists(new Path(s"$checkpointDir/offsets"))) 0L
-        else {
-          val committed = new CommitLog(spark, commitRoot).committed()
-          (committed.epochs + 0L).max + 1
-        }
+        val offsets = new Path(s"$checkpointDir/offsets")
+        if (fs.exists(offsets)) throw new IllegalStateException(
+          s"$p is missing but $offsets exists — the stream start publishes " +
+            "the epoch file before Spark writes offsets, so it was lost; a " +
+            "fresh epoch would process a replayed batch twice. Restore the " +
+            "epoch file from a checkpoint backup")
+        val epoch =
+          (new CommitLog(spark, commitRoot).committed().epochs + 0L).max + 1
         fs.mkdirs(p.getParent)
         // reap STALE orphans first: a crash between create and rename
         // leaves a UUID-named tmp behind FOREVER (the fixed-name scheme
@@ -853,74 +820,6 @@ object StreamingOps {
     start(annotateTaxiLines(rawLines, config, columnIndex), checkpointDir,
       config.insertedPath)(epoch => taxiSink(config.insertedPath,
         config.duplicatesCsvPath, counters, epoch))
-
-  final case class KeyedCount(key: String, n: Long, total: Double)
-
-  final case class SessionEvent(user: String, at: java.sql.Timestamp)
-  final case class Session(user: String, start: java.sql.Timestamp,
-      end: java.sql.Timestamp, nEvents: Long)
-  /** Keyed state for [[sessionizeStream]] (public: state encoders are
-    * codegen'd and need a visible constructor). */
-  final case class OpenSession(start: Long, last: Long, n: Long)
-
-  /** Gap-based streaming sessionization via flatMapGroupsWithState — the
-    * unbounded sibling of [[graft.ext.TemporalOps.sessionize]]. A session
-    * is emitted only when it CLOSES (no event for `gap`), which is why
-    * this is flatMap (0..n completed sessions per invocation) and not map
-    * (exactly one output): the open session stays in keyed state, closed
-    * ones flush. An EVENT-time timeout (watermark-driven, not wall-clock —
-    * deterministic under replay and in tests) flushes a key's open session
-    * once the watermark passes its gap deadline, so state is bounded by
-    * the number of ACTIVE users, not all users ever seen — the property
-    * that keeps the state store alive at production key cardinalities. */
-  def sessionizeStream(stream: Dataset[SessionEvent],
-      gapMs: Long = 30L * 60 * 1000,
-      watermarkDelay: String = "10 minutes"): Dataset[Session] = {
-    import stream.sparkSession.implicits._
-    stream
-      .withWatermark("at", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state) =>
-          if (!rows.hasNext) { // timeout fired: flush the open session
-            val closed = state.getOption.map(s =>
-              Session(user, new java.sql.Timestamp(s.start),
-                new java.sql.Timestamp(s.last), s.n)).iterator
-            state.remove()
-            closed
-          } else {
-            val sorted = rows.map(_.at.getTime).toSeq.sorted
-            var open = state.getOption
-            val out = Seq.newBuilder[Session]
-            sorted.foreach { t =>
-              open match {
-                case Some(s) if t - s.last <= gapMs =>
-                  // late-but-admitted events (t inside the open session,
-                  // possibly before its last or even its start) must
-                  // WIDEN the session, never move its end backwards
-                  open = Some(OpenSession(
-                    math.min(s.start, t), math.max(s.last, t), s.n + 1))
-                case Some(s) =>
-                  out += Session(user, new java.sql.Timestamp(s.start),
-                    new java.sql.Timestamp(s.last), s.n)
-                  open = Some(OpenSession(t, t, 1))
-                case None =>
-                  open = Some(OpenSession(t, t, 1))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // deadline can't be set behind the current watermark (Spark
-              // rejects it) — a key whose gap already elapsed flushes on
-              // the next watermark tick instead
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
-  }
 
   /** Keyed state for the exactly-once ingest-dedup sinks (their
     * band/shingle/unit tables), kept as a parquet changelog: per table, a
@@ -1725,86 +1624,5 @@ object StreamingOps {
         org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(labels)
       scratch.foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(_))
     }
-  }
-
-  /** Stream-static enrichment: an unbounded fact stream joined to a small
-    * static dimension — planned as a BroadcastHashJoin per micro-batch, so
-    * the stream side never shuffles (the streaming analog of j1). */
-  def enrichStream(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left")
-
-  /** Stream-STREAM interval join: clicks×purchases per user, purchase
-    * within [click_ts, click_ts + horizon]. Both sides carry watermarks,
-    * which is what BOUNDS the join state: a buffered click can be evicted
-    * once the purchase-side watermark passes click_ts + horizon, and a
-    * buffered purchase once the click-side watermark passes purchase_ts —
-    * without them a stream-stream join's state grows forever. Expected
-    * schemas: clicks(user_id, click_ts, click_id),
-    * purchases(user_id, purchase_ts, amount).
-    *
-    * At scale both sides shuffle on user_id once per micro-batch and the
-    * state store holds only the watermark-bounded window of each side —
-    * O(rate × horizon) state per key range, independent of stream age. */
-  def intervalJoinStreams(clicks: DataFrame, purchases: DataFrame,
-      horizonMinutes: Int = 10, lateness: String = "10 minutes"): DataFrame = {
-    val c = clicks.withWatermark("click_ts", lateness)
-      .select(col("user_id"), col("click_ts"), col("click_id"))
-    val p = purchases.withWatermark("purchase_ts", lateness)
-      .select(col("user_id").as("p_user_id"), col("purchase_ts"), col("amount"))
-    c.join(p,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") +
-          expr(s"interval $horizonMinutes minutes"))
-      .select(col("user_id"), col("click_id"), col("click_ts"),
-        col("purchase_ts"), col("amount"))
-  }
-
-  /** Streaming trending tokens, two-stage: a WATERMARKED stateful count
-    * per (tumbling window, token) in append mode — a (window, token)
-    * row emits exactly once, when the watermark closes its window — and
-    * a per-window top-k over those finalized rows in foreachBatch.
-    * Structured Streaming allows one stateful aggregation per query;
-    * the top-k needs no second one because it only ever sees CLOSED
-    * windows, so ranking each batch independently is already exact.
-    *
-    * Scale: stage 1's state is (open windows × active vocabulary) keyed
-    * rows in the state store, evicted at watermark close; stage 2's
-    * per-batch input is bounded by the windows that closed in that
-    * batch. The batch-side window function partitions by the closed
-    * window — bounded by vocabulary, never by stream age. */
-  def runTrendingTokens(tokens: DataFrame, windowDur: String, lateness: String,
-      k: Int)(onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val counts = tokens.withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowDur).as("win"), col("token"))
-      .agg(count(lit(1)).as("n"))
-    counts.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("win")).orderBy(col("n").desc, col("token"))
-        onBatch(batch.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k))
-      }.start()
-  }
-
-  /** Custom keyed state via mapGroupsWithState: running (count, sum) per
-    * key — the reference's run counters as continuously-updated state
-    * (KeyValueGroupedDataset custom-state path, per the north star). */
-  def runningStats(stream: Dataset[(String, Double)]): Dataset[KeyedCount] = {
-    import stream.sparkSession.implicits._
-    stream
-      .groupByKey(_._1)
-      .mapGroupsWithState[KeyedCount, KeyedCount](GroupStateTimeout.NoTimeout) {
-        case (key, rows, state) =>
-          val (n0, t0) =
-            if (state.exists) (state.get.n, state.get.total) else (0L, 0.0)
-          var n = n0
-          var t = t0
-          rows.foreach { r => n += 1; t += r._2 }
-          val updated = KeyedCount(key, n, t)
-          state.update(updated)
-          updated
-      }
   }
 }

@@ -68,4 +68,30 @@ class ShardedSourceSpec extends SparkSpec {
       assert(b.exceptAll(a).count() == 0)
     } finally sharded.unpersist()
   }
+
+  test("sharded pipeline over seeded lines matches the single-file run") {
+    // 4 shards of seeded lines, each with its own header copy, against
+    // the same lines as one file
+    val lines = TaxiLines(3000, seed = 13L)
+    val dir = Files.createTempDirectory("taxi_shards_seeded")
+    lines.grouped((lines.size + 3) / 4).zipWithIndex.foreach { case (chunk, i) =>
+      Files.writeString(dir.resolve(f"shard-$i%02d.csv"),
+        (TaxiLines.Header +: chunk).mkString("\n"))
+    }
+    val config = EtlConfig(inputCsvPath = dir.toString,
+      duplicatesCsvPath = "", insertedPath = "")
+    val sharded = Pipeline.annotateSharded(spark, config).persist()
+    try {
+      val single = Pipeline.annotate(spark, config.copy(inputCsvPath =
+        TaxiLines.writeCsv(tmpDir("taxi_single_seeded"), lines)))
+      val s = Stats.compute(sharded)
+      assert(s == Stats.compute(single))
+      assert(s.duplicates > 0 && s.invalid > 0)
+      val a = Sinks.insertedRows(sharded)
+      val b = Sinks.insertedRows(single)
+      assert(a.count() == s.inserted)
+      assert(a.exceptAll(b).count() == 0)
+      assert(b.exceptAll(a).count() == 0)
+    } finally sharded.unpersist()
+  }
 }

@@ -2,51 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 
-/** Layout properties are plan properties: pruning and shuffle-freeness are
-  * asserted from the physical plan, not inferred. */
+/** Layout properties are measured, not inferred: the files a box
+  * predicate can skip under each sort order, and the bins a compaction
+  * pass assigns. */
 class LayoutsSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
-
-  test("partitioned layout: point filter prunes partitions at the scan") {
-    val dir = tmpDir("layout") + "/li_parted"
-    Layouts.writePartitionedBy(
-      Tables.lineitem(spark, sfDir).limit(2000), "l_suppkey", dir)
-    val q = spark.read.parquet(dir).filter(col("l_suppkey") === 3)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters:") && plan.contains("l_suppkey"), plan)
-    assert(q.count() > 0)
-    // the data filter is a partition filter, NOT a row-level pushed filter
-    assert(!plan.matches("(?s).*PushedFilters: \\[.*l_suppkey.*"), plan)
-  }
-
-  test("bucketed tables join without an exchange on the bucket key") {
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-    // a previously failed run can leave an orphan managed-table location
-    for (t <- Seq("li_b", "ord_b")) {
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    }
-    Layouts.writeBucketedTable(
-      Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
-        .withColumnRenamed("l_orderkey", "k"), "li_b", "k", 4)
-    Layouts.writeBucketedTable(
-      Tables.orders(spark, sfDir).select("o_orderkey", "o_totalprice")
-        .withColumnRenamed("o_orderkey", "k"), "ord_b", "k", 4)
-    // force the shuffle-join path (tiny test tables would auto-broadcast,
-    // which sidesteps bucketing entirely — at scale neither side broadcasts)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
-      val joined = Layouts.bucketedJoin(spark, "li_b", "ord_b", "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-      assert(joined.count() == 6000)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("z-order layout: box predicates prune files on BOTH dimensions") {
     import spark.implicits._

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
 
@@ -14,50 +11,6 @@ import graft.SparkSpec
 class StreamingOpsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def ts(s: String): Timestamp = Timestamp.valueOf(s)
-
-  test("streaming dedup drops duplicate keys across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Int)]
-    val deduped = StreamingOps.dedupWithinWatermark(
-      input.toDS().toDF("ts", "k", "v"), "ts", "10 minutes", Seq("k"))
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup_out").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData((ts("2024-01-01 00:00:00"), "a", 1), (ts("2024-01-01 00:00:10"), "a", 2),
-        (ts("2024-01-01 00:00:20"), "b", 3))
-      q.processAllAvailable()
-      // second batch: duplicate of "a" within the watermark window
-      input.addData((ts("2024-01-01 00:01:00"), "a", 4), (ts("2024-01-01 00:01:10"), "c", 5))
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").select("k", "v").as[(String, Int)]
-        .collect().sortBy(_._1)
-      assert(out.map(_._1).toSeq == Seq("a", "b", "c"))
-      assert(out.find(_._1 == "a").get._2 == 1) // FIRST occurrence won
-    } finally q.stop()
-  }
-
-  test("windowed counts aggregate by event-time window with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val counts = StreamingOps.windowedCounts(
-      input.toDS().toDF("ts", "g"), "ts", "5 minutes", "10 minutes", "g")
-    val q = counts.writeStream.format("memory")
-      .queryName("win_out").outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        (ts("2024-01-01 00:01:00"), "x"), (ts("2024-01-01 00:02:00"), "x"),
-        (ts("2024-01-01 00:11:00"), "x"), (ts("2024-01-01 00:03:00"), "y"))
-      q.processAllAvailable()
-      val out = spark.table("win_out")
-        .select("window_start", "g", "n")
-        .as[(Timestamp, String, Long)].collect().toSet
-      assert(out.contains((ts("2024-01-01 00:00:00"), "x", 2L)))
-      assert(out.contains((ts("2024-01-01 00:10:00"), "x", 1L)))
-      assert(out.contains((ts("2024-01-01 00:00:00"), "y", 1L)))
-    } finally q.stop()
-  }
 
   test("taxi ETL runs as a stream: parse + normalize + cross-batch dedup") {
     implicit val sqlCtx = spark.sqlContext
@@ -531,60 +484,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(counters.snapshot == batch.stats)
     assert(rowStrings(StreamingOps.committedTrips(spark, config.insertedPath)) == batch.trips)
     assert(csvPartLines(config.duplicatesCsvPath) == batch.dupCsv)
-  }
-
-  test("flatMapGroupsWithState sessionization closes sessions on gap, keeps open state") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingOps.SessionEvent]
-    val sessions = StreamingOps.sessionizeStream(input.toDS(), gapMs = 10 * 60 * 1000)
-    val q = sessions.writeStream.format("memory")
-      .queryName("sess_out").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(
-        StreamingOps.SessionEvent("u1", ts("2024-01-01 00:00:00")),
-        StreamingOps.SessionEvent("u1", ts("2024-01-01 00:05:00")),
-        StreamingOps.SessionEvent("u2", ts("2024-01-01 00:00:00")))
-      q.processAllAvailable()
-      // nothing closed yet: both sessions still open in state
-      assert(spark.table("sess_out").count() == 0)
-      // u1 returns after a > 10 min gap: first session closes via the gap
-      // logic; u2's idle session may also flush via the event-time timeout
-      // once the watermark passes its deadline
-      input.addData(StreamingOps.SessionEvent("u1", ts("2024-01-01 01:00:00")))
-      q.processAllAvailable()
-      val closed = spark.table("sess_out").as[StreamingOps.Session].collect()
-      val u1 = closed.filter(_.user == "u1")
-      assert(u1.length == 1)
-      assert(u1(0).nEvents == 2)
-      assert(u1(0).start == ts("2024-01-01 00:00:00"))
-      assert(u1(0).end == ts("2024-01-01 00:05:00"))
-      // the still-open u1 session (started 01:00) must NOT be emitted
-      assert(!closed.exists(_.start == ts("2024-01-01 01:00:00")))
-    } finally q.stop()
-  }
-
-  test("sessionization widens on late-but-admitted events, never shrinks") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingOps.SessionEvent]
-    val sessions = StreamingOps.sessionizeStream(input.toDS(), gapMs = 10 * 60 * 1000)
-    val q = sessions.writeStream.format("memory")
-      .queryName("sess_late_out").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(StreamingOps.SessionEvent("u1", ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      // late event (before the open session's start) still inside the
-      // 10-minute watermark: must extend the session backwards
-      input.addData(StreamingOps.SessionEvent("u1", ts("2024-01-01 09:55:00")))
-      q.processAllAvailable()
-      // a much later event closes the first session
-      input.addData(StreamingOps.SessionEvent("u1", ts("2024-01-01 11:00:00")))
-      q.processAllAvailable()
-      val closed = spark.table("sess_late_out").as[StreamingOps.Session]
-        .collect().filter(_.nEvents == 2)
-      assert(closed.length == 1)
-      assert(closed(0).start == ts("2024-01-01 09:55:00"))
-      assert(closed(0).end == ts("2024-01-01 10:00:00")) // NOT moved backwards
-    } finally q.stop()
   }
 
   test("streaming minhash ingest dedup drops near-dups of previously kept docs") {
@@ -1352,37 +1251,29 @@ class StreamingOpsSpec extends SparkSpec {
     assert(epoch == 1L, s"expected epoch 1 over epoch-0 roll-up, got $epoch")
   }
 
-  test("legacy exact-entry roll-up is read as tail and folded to watermarks by the next compact") {
+  test("a roll-up line that is not a watermark fails loudly") {
     import StreamingOps.CommitLog.RollupPrefix
     val keep = StreamingOps.KeyedStreamState.CompactEvery
-    val root = tmpDir("commitrolllegacy")
+    val root = tmpDir("commitrollbad")
     val dir = new org.apache.hadoop.fs.Path(s"$root/_commits")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
-    // the pre-watermark roll-up format: exact `id:deltas` lines, named by
-    // max absorbed id
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, s"${RollupPrefix}3"), true)
+    // exact `id:deltas` lines: no current writer produces them, and
+    // reading past them would drop batches 0..3 from the committed view
+    val rollup = s"${RollupPrefix}3"
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, rollup), true)
     try out.write((0L to 3L).map(id => s"$id:${id * 10},${id + 1}")
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
     val log = new StreamingOps.CommitLog(spark, root)
-    val before = log.committed()
-    assert((0L to 3L).forall(before.contains) && before.maxId == 3L)
-    assert(before.deltaSums.sameElements(Array(60L, 10L)))
-    // grow a marker tail past the hysteresis and compact: the legacy
-    // entries must fold into the epoch-0 watermark, sums unchanged
+    val e = intercept[IllegalStateException](log.committed())
+    assert(e.getMessage.contains(rollup), e.getMessage)
+    // compaction refuses too, and deletes nothing
     (4L until 4L + 2L * keep).foreach(id => log.commit(id, Array(id * 10, id + 1)))
-    log.compact(keep)
-    val after = log.committed()
-    assert(after.wm.contains(0L), s"legacy entries not folded: ${after.wm}")
-    assert((0L until 4L + 2L * keep).forall(after.contains))
-    val want = (0L until 4L + 2L * keep).map(id => Array(id * 10, id + 1))
-      .foldLeft(Array.empty[Long])(StreamingOps.CommitLog.addDeltas)
-    assert(after.deltaSums.sameElements(want))
-    // the legacy roll-up is superseded by a higher generation and deleted
-    val rolls = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith(RollupPrefix)).toSeq
-    assert(rolls == Seq(s"${RollupPrefix}4"), s"roll-ups: $rolls")
+    val before = fs.listStatus(dir).map(_.getPath.getName).toSet
+    val c = intercept[IllegalStateException](log.compact(keep))
+    assert(c.getMessage.contains(rollup), c.getMessage)
+    assert(fs.listStatus(dir).map(_.getPath.getName).toSet == before)
   }
 
   test("output compaction bin-packs committed batch dirs into per-epoch ranges; view identical; debris self-heals") {
@@ -1443,21 +1334,22 @@ class StreamingOpsSpec extends SparkSpec {
     assert(view == before)
   }
 
-  test("pre-epoch checkpoint (offsets, no _graft_epoch) continues under epoch 0") {
-    val out = tmpDir("legacyepoch")
+  test("a checkpoint with offsets but no epoch file fails loudly") {
+    val out = tmpDir("noepoch")
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a commit log written by the pre-epoch protocol: bare epoch-0 ids
     val log = new StreamingOps.CommitLog(spark, s"$out/kept")
     (0L to 3L).foreach(id => log.commit(id, Array(1L)))
-    // a checkpoint with Spark stream state but no _graft_epoch marker
+    // Spark stream state without the `_graft_epoch` the stream start
+    // publishes first: any epoch claimed here could replay a committed
+    // batch under an id its marker does not match
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$out/ckpt/offsets"))
-    val e = StreamingOps.CommitLog.resolveEpoch(spark, s"$out/ckpt", s"$out/kept")
-    assert(e == 0L, s"legacy checkpoint re-epoched to $e — its replayed " +
-      "batches would miss their committed markers and reprocess")
-    // persisted: stable on re-resolution
-    assert(StreamingOps.CommitLog.resolveEpoch(
-      spark, s"$out/ckpt", s"$out/kept") == 0L)
+    val epochFile = new org.apache.hadoop.fs.Path(s"$out/ckpt/_graft_epoch")
+    val e = intercept[IllegalStateException] {
+      StreamingOps.CommitLog.resolveEpoch(spark, s"$out/ckpt", s"$out/kept")
+    }
+    assert(e.getMessage.contains(epochFile.toString), e.getMessage)
+    assert(!fs.exists(epochFile), "the refused checkpoint was re-epoched")
     // a genuinely fresh checkpoint still claims a new epoch
     assert(StreamingOps.CommitLog.resolveEpoch(
       spark, s"$out/ckpt2", s"$out/kept") == 1L)
@@ -1591,102 +1483,5 @@ class StreamingOpsSpec extends SparkSpec {
     assert(StreamingOps.committedTrips(spark, trips).count() == 2)
     val dupCsv = spark.read.option("header", "true").csv(dups)
     assert(dupCsv.count() == 1)
-  }
-
-  test("stream-static enrichment joins the dimension without shuffling the stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val dim = Seq(("a", "Alpha"), ("b", "Beta")).toDF("k", "name")
-    val enriched = StreamingOps.enrichStream(input.toDS().toDF("k", "v"), dim, "k")
-    val q = enriched.writeStream.format("memory")
-      .queryName("enrich_out").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(("a", 1), ("c", 2))
-      q.processAllAvailable()
-      val out = spark.table("enrich_out").as[(String, Int, String)]
-        .collect().sortBy(_._1)
-      assert(out.toSeq == Seq(("a", 1, "Alpha"), ("c", 2, null)))
-      assert(q.lastProgress == null ||
-        !spark.table("enrich_out").queryExecution.executedPlan.toString
-          .contains("CartesianProduct"))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches purchases to clicks across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp, String)]
-    val purchases = MemoryStream[(Long, Timestamp, Double)]
-    val joined = StreamingOps.intervalJoinStreams(
-      clicks.toDS().toDF("user_id", "click_ts", "click_id"),
-      purchases.toDS().toDF("user_id", "purchase_ts", "amount"))
-    val q = joined.writeStream.format("memory")
-      .queryName("ssj_out").outputMode(OutputMode.Append()).start()
-    try {
-      // batch 1: two clicks, one same-batch purchase for u1
-      clicks.addData((1L, ts("2024-01-01 10:00:00"), "c1"),
-        (2L, ts("2024-01-01 10:00:00"), "c2"))
-      purchases.addData((1L, ts("2024-01-01 10:05:00"), 50.0))
-      q.processAllAvailable()
-      // batch 2: u2's purchase arrives a batch LATE (click held in state);
-      // u1's second purchase is past the 10-minute horizon — no match
-      purchases.addData((2L, ts("2024-01-01 10:08:00"), 30.0),
-        (1L, ts("2024-01-01 10:20:00"), 99.0))
-      q.processAllAvailable()
-      val out = spark.table("ssj_out")
-        .select("click_id", "user_id", "amount").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(out == Set(("c1", 1L, 50.0), ("c2", 2L, 30.0)))
-    } finally q.stop()
-  }
-
-  test("trending tokens: windows finalize once at watermark close, exact top-k") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Long, Long)]
-    val q = StreamingOps.runTrendingTokens(
-      input.toDS().toDF("ts", "token"), "10 minutes", "5 minutes", k = 2) {
-      batch =>
-        got ++= batch.collect().map(r => (
-          r.getStruct(0).getTimestamp(0).toString, r.getString(1),
-          r.getLong(2), r.getLong(3)))
-    }
-    try {
-      // window [10:00, 10:10): a x3, b x1, c x2
-      input.addData(
-        (ts("2024-01-01 10:01:00"), "a"), (ts("2024-01-01 10:02:00"), "a"),
-        (ts("2024-01-01 10:03:00"), "b"), (ts("2024-01-01 10:04:00"), "c"),
-        (ts("2024-01-01 10:05:00"), "c"), (ts("2024-01-01 10:06:00"), "a"))
-      q.processAllAvailable()
-      // nothing finalized yet — watermark has not passed 10:10
-      assert(got.isEmpty)
-      // advance event time past 10:10 + 5 min lateness -> window closes
-      input.addData((ts("2024-01-01 10:16:00"), "z"))
-      q.processAllAvailable()
-      val w1 = got.filter(_._1.startsWith("2024-01-01 10:00")).toSeq
-      // top-2 of {a:3, c:2, b:1} with count-desc/token tie-break
-      assert(w1.map(r => (r._2, r._3, r._4)).sorted ===
-        Seq(("a", 3L, 1L), ("c", 2L, 2L)))
-      assert(got.size === w1.size, s"unfinalized windows leaked: $got")
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState keeps running per-key stats across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Double)]
-    val stats = StreamingOps.runningStats(input.toDS())
-    val q = stats.writeStream.format("memory")
-      .queryName("stats_out").outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(("a", 1.0), ("a", 2.0), ("b", 10.0))
-      q.processAllAvailable()
-      input.addData(("a", 3.0))
-      q.processAllAvailable()
-      val latest = spark.table("stats_out")
-        .as[StreamingOps.KeyedCount].collect()
-        .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n) }
-      assert(latest("a").n == 3 && latest("a").total == 6.0)
-      assert(latest("b").n == 1 && latest("b").total == 10.0)
-    } finally q.stop()
   }
 }
