@@ -10,8 +10,9 @@ import graft.Tables
   * has no text ops, SURVEY §2.3).
   *
   * Everything is built from codegen'd Column expressions (split / filter /
-  * transform / aggregate) — no UDFs — so each op is a single scan with no
-  * shuffle: embarrassingly parallel at 100 TB.
+  * transform / aggregate) — no UDFs. The per-row ops are a single scan
+  * with no shuffle; the corpus-statistic ops (vocabulary, n-gram counts,
+  * dedup) add map-side-combined aggregates and keyed joins over them.
   */
 object TextOps {
 
@@ -798,41 +799,107 @@ object TextOps {
     * repetition filters (a doc that repeats its own n-grams is boilerplate
     * or spam, however good its other quality signals): duplicate-bigram
     * fraction and the share of the single most frequent token. Exact
-    * integer ratios cast to double, so cross-engine hash-stable.
+    * integer ratios cast to double, so cross-engine hash-stable. Docs
+    * with < 2 tokens have no bigrams: ratio 0 by definition; tokenless
+    * docs emit no row. A projection of the session-cached
+    * [[qualitySignals]] frame. */
+  def docRepetition(spark: SparkSession, sfDir: String): DataFrame =
+    qualitySignals(spark, sfDir).filter(col("n_tokens").isNotNull)
+      .select(col("doc_id"), col("n_tokens"), col("top_token_share"),
+        col("dup_bigram_ratio"))
+      .orderBy("doc_id")
+
+  /** Per-document quality signals cached per (session, sfDir) — the ONE
+    * build behind [[qualityMixer]], [[qualityPrunePerSource]],
+    * [[docRepetition]], [[docOovRate]] and [[lmLikelihood]]; evicts on
+    * session end. */
+  private val signalCache = new graft.SessionFrameCache[String]
+
+  private def qualitySignals(spark: SparkSession, sfDir: String): DataFrame =
+    signalCache.getOrElseUpdate(spark, sfDir) {
+      qualitySignalsUncached(spark, sfDir)
+    }
+
+  /** One row per document: `doc_id`, `source`, the gopher verdict
+    * `r_gopher`, the repetition signals (`n_tokens`, `top_token_share`,
+    * `dup_bigram_ratio`), the OOV signals against the top-`vocabK` corpus
+    * tokens (`n_oov`, `oov_bp`) and the bigram-LM signals (`n_bigrams`,
+    * `lm_sum`, `lm_score`). A tokenless doc has NULL token, OOV and LM
+    * signals; a one-token doc has NULL LM signals and ratio 0.
     *
-    * Plan (r17): ONE corpus scan + ONE tokenize feeds BOTH statistics.
-    * Tokens and bigrams explode together as a single tagged gram stream —
-    * a whitespace token can never contain ' ' and an adjacent-token
-    * bigram always does, so the gram string itself is the tag and the
-    * union is collision-free within a document. The stream aggregates on
-    * the high-cardinality (doc_id, gram) pair (never per-doc arrays
-    * folded interpreted per row, the PERF.md lesson), then folds to the
-    * per-doc token and bigram statistics in ONE conditional aggregate.
-    * This replaces the previous two-pipeline shape (token explode +
-    * bigram explode + doc_id left join): the shuffled rows are the same
-    * gram occurrences, but the corpus is scanned and tokenized ONCE
-    * instead of twice and the join is gone (guide §2.3/§2.4) — at 100 TB
-    * the saved pass is a full corpus read + tokenize. Docs with < 2
-    * tokens have no bigrams: ratio 0 by definition (their bigram sums
-    * aggregate to NULL/0, exactly the values the old left join produced). */
-  def docRepetition(spark: SparkSession, sfDir: String): DataFrame = {
+    * Plan: ONE documents scan feeds the gopher projection
+    * ([[gopherAnnotated]], case-sensitive over the raw text) and ONE
+    * explode of the lowercase tokens and bigrams as a single gram stream
+    * — a whitespace token never contains ' ' and an adjacent-token
+    * bigram always does, so the gram string is its own tag. The source
+    * and the gopher verdict ride the grouping keys (doc_id is unique), so
+    * nothing joins back to the documents. `explode_outer` keeps tokenless
+    * docs as one NULL gram. The stream aggregates to (doc, gram, c); the
+    * corpus statistics come from ONE gram-keyed re-aggregate of it —
+    * token counts, bigram counts c2, and c1 (bigram occurrences per
+    * prefix token) as a window sum over that vocabulary-bounded frame,
+    * never the occurrence stream. V (the distinct-token count) and the
+    * top-k vocabulary come from the same table as ONE 1-row aggregate (a
+    * bounded heap per partition, merged), broadcast onto it. Each
+    * statistics row carries its vocabulary flag and its smoothed LM
+    * probability, and joins back to the (doc, gram) table once; ONE
+    * conditional per-doc aggregate folds every signal. The statistics
+    * join is shuffled-hash on purpose: its post-aggregate size estimate
+    * reads broadcastable at every scale (the [[lmLikelihoodTri]] note). */
+  private[graft] def qualitySignalsUncached(spark: SparkSession, sfDir: String,
+      vocabK: Int = OovVocabK): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
     val isBigram = col("gram").contains(" ")
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), explode(concat(col("toks"), bigramsExpr)).as("gram"))
-      .groupBy(col("doc_id"), col("gram"))
+    val isToken = !isBigram
+    val grams = gopherAnnotated(Tables.documents(spark, sfDir))
+      .select(col("doc_id"), col("source"), col("keep").as("r_gopher"),
+        tokens(lower(col("text"))).as("toks"))
+      .select(col("doc_id"), col("source"), col("r_gopher"),
+        explode_outer(concat(col("toks"), bigramsExpr)).as("gram"))
+      .groupBy(col("doc_id"), col("source"), col("r_gopher"), col("gram"))
       .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
+    // both statistics legs read `corpus` through the same columns and no
+    // filter, so the optimizer rewrites neither and the explode stage
+    // under it runs once, reused (a filter or a pruned column would give
+    // a leg its own scan + explode)
+    val corpus = grams.groupBy(col("gram")).agg(sum(col("c")).as("cc"))
+    // V and the top-k vocabulary in ONE 1-row aggregate: a bounded heap
+    // per partition, merged — TakeOrdered's plan as an aggregate. The heap
+    // keeps the k smallest (−cc, token): count desc, ties by token. The
+    // flag below is an O(k) array probe per statistics row — sized for a
+    // small k; a production vocabulary joins as a given artifact instead.
+    val topK = org.apache.spark.sql.catalyst.expressions.aggregate.GraftTopK.smallest(
+      when(isToken, struct((-col("cc")).as("neg_c"), col("gram").as("token"))),
+      vocabK)
+    val corpusTotals = corpus.agg(count(when(isToken, col("cc"))).as("v"),
+      transform(topK, t => t.getField("token")).as("vocab"))
+    val stats = corpus
+      .withColumn("c1", sum(when(isBigram, col("cc")))
+        .over(W.partitionBy(substring_index(col("gram"), " ", 1))))
+      .crossJoin(broadcast(corpusTotals))
+      .select(col("gram").as("s_gram"),
+        array_contains(col("vocab"), col("gram")).as("in_vocab"),
+        // (c2+1)·LmScale in DECIMAL(38,0): the [[lmLikelihood]] overflow note
+        when(isBigram,
+          expr(s"(CAST(cc + 1 AS DECIMAL(38,0)) * $LmScale) div (c1 + v)"))
+          .as("p_scaled"))
+    grams.join(stats.hint("shuffle_hash"), col("gram") === col("s_gram"), "left")
+      .groupBy(col("doc_id"), col("source"), col("r_gopher"))
       .agg(
-        sum(when(!isBigram, col("c"))).as("n_tokens"),
-        max(when(!isBigram, col("c"))).as("top_c"),
+        sum(when(isToken, col("c"))).as("n_tokens"),
+        max(when(isToken, col("c"))).as("top_c"),
         sum(when(isBigram, col("c"))).as("n_bigrams"),
-        count(when(isBigram, lit(1))).as("n_distinct"))
-      .select(col("doc_id"), col("n_tokens"),
+        count(when(isBigram, lit(1))).as("n_distinct"),
+        sum(when(isToken, when(col("in_vocab"), 0L).otherwise(col("c"))))
+          .as("n_oov"),
+        sum(col("c") * col("p_scaled")).as("lm_sum"))
+      .select(col("doc_id"), col("source"), col("r_gopher"), col("n_tokens"),
         (col("top_c").cast("double") / col("n_tokens")).as("top_token_share"),
         coalesce(lit(1.0) - col("n_distinct").cast("double") / col("n_bigrams"),
-          lit(0.0)).as("dup_bigram_ratio"))
-      .orderBy("doc_id")
+          lit(0.0)).as("dup_bigram_ratio"),
+        col("n_oov"), expr("(10000 * n_oov) div n_tokens").as("oov_bp"),
+        col("n_bigrams"), col("lm_sum"),
+        expr("lm_sum div n_bigrams").as("lm_score"))
   }
 
   /** Quality-mixer thresholds (shared with the oracle). Chosen to BIND on
@@ -848,7 +915,7 @@ object TextOps {
     * "mixer" / RefinedWeb pipeline stage): every per-document quality
     * signal the engine computes — the Gopher rule gate ([[gopherFilter]]),
     * within-doc repetition ([[docRepetition]]), OOV rate ([[docOovRate]]),
-    * and bigram-LM likelihood ([[lmLikelihood]]) — joined into ONE row per
+    * and bigram-LM likelihood ([[lmLikelihood]]) — in ONE row per
     * document with each rule's verdict, the final `keep`, and a
     * first-failing-rule `drop_reason` in a FIXED precedence (gopher →
     * rep_bigram → rep_top → oov → lm — cheapest-signal-first, the same
@@ -858,39 +925,17 @@ object TextOps {
     * swallowed by precedence still has its semantics hash-checked.
     *
     * Signals missing by construction pass their rule: a doc with < 2
-    * tokens has no bigram/LM row, but the gopher 50-word floor already
+    * tokens has no bigram/LM signal, but the gopher 50-word floor already
     * fails it, so the null-passes coalesce can never decide a keep.
     *
-    * Plan: four doc_id-keyed equi-joins of per-doc aggregate outputs —
-    * each signal is one scan + map-side-combined aggregate of its own (no
-    * new pass over text here), and the join key is the unique doc id, so
-    * no skew. At 100 TB this is the standard signals-then-policy shape:
-    * signals computed once, policy a cheap join — re-thresholding is a
-    * policy-only rerun, which is the operational reason mixers separate
-    * the two. */
-  /** Mixer verdict frame cached per (session, sfDir) — the scaladoc's
-    * own "signals computed once, policy a cheap join" statement made
-    * operational: THREE registered consumers (the quality_mixer row and
-    * both order-free curation capstones) each re-derived the gopher,
-    * repetition and OOV signal passes per invocation (the LM signal was
-    * already cached). One row per doc of booleans + a reason string;
-    * evicts on session end. */
-  private val mixerCache = new graft.SessionFrameCache[String]
-
+    * Plan: a projection of the session-cached [[qualitySignals]] frame —
+    * one documents scan, one gram explode, one per-doc aggregate, no
+    * per-signal join. At 100 TB this is the standard signals-then-policy
+    * shape: signals computed once, policy a cheap projection —
+    * re-thresholding is a policy-only rerun, which is the operational
+    * reason mixers separate the two. */
   def qualityMixer(spark: SparkSession, sfDir: String): DataFrame =
-    mixerCache.getOrElseUpdate(spark, sfDir) {
-      qualityMixerUncached(spark, sfDir)
-    }.orderBy("doc_id")
-
-  private def qualityMixerUncached(spark: SparkSession, sfDir: String): DataFrame = {
-    val g = gopherFilter(spark, sfDir).select(col("doc_id"), col("keep").as("r_gopher"))
-    val rep = docRepetition(spark, sfDir)
-      .select(col("doc_id"), col("dup_bigram_ratio"), col("top_token_share"))
-    val oov = docOovRate(spark, sfDir).select(col("doc_id"), col("oov_bp"))
-    val lm = lmLikelihood(spark, sfDir).select(col("doc_id"), col("lm_score"))
-    g.join(rep, Seq("doc_id"), "left")
-      .join(oov, Seq("doc_id"), "left")
-      .join(lm, Seq("doc_id"), "left")
+    qualitySignals(spark, sfDir)
       .select(col("doc_id"), col("r_gopher"),
         coalesce(col("dup_bigram_ratio") <= MixerMaxDupBigram, lit(true))
           .as("r_rep_bigram"),
@@ -906,7 +951,6 @@ object TextOps {
           .when(!col("r_lm"), "lm"))
       .withColumn("keep", col("drop_reason").isNull)
       .orderBy("doc_id")
-  }
 
   /** Score scale (milli) and decision threshold of the LEARNED quality
     * classifier: [[qualityLearned]] emits the mean per-token class
@@ -1157,15 +1201,13 @@ object TextOps {
     * (the same keep-windows-off-corpus-sized-frames discipline as
     * seq_pack_global and lang_profiles). The ≤ #sources cut table then
     * broadcast-joins back to the score frame; documents never shuffle
-    * for the decision. */
+    * for the decision. The source and the score both come from the
+    * session-cached [[qualitySignals]] frame: no documents scan here. */
   /** Prune verdict frame cached per (session, sfDir, keepPct) — FOUR
     * registered consumers (the prune row itself, both order-free
     * curation capstones, and the staged capstone's survivor build) each
-    * re-derived the score attach and the histogram-cut decision per
-    * invocation, and [[pruneBySource]]'s score frame sits on BOTH sides
-    * of its cut join (hist build + keep probe), so each invocation paid
-    * the documents ⋈ lm-score join twice. One row per doc; evicts on
-    * session end (the mixerCache convention). */
+    * re-derived the histogram-cut decision per invocation. One row per
+    * doc, unsorted (the accessor sorts); evicts on session end. */
   private val prunePerSourceCache = new graft.SessionFrameCache[(String, Int)]
 
   def qualityPrunePerSource(spark: SparkSession, sfDir: String,
@@ -1178,9 +1220,7 @@ object TextOps {
     * runs here (the plan that actually builds the verdict). */
   private[graft] def qualityPrunePerSourceUncached(spark: SparkSession,
       sfDir: String, keepPct: Int = PruneKeepPct): DataFrame = {
-    val sc = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
-      .join(lmLikelihood(spark, sfDir).select(col("doc_id"), col("lm_score")),
-        Seq("doc_id"), "left")
+    val sc = qualitySignals(spark, sfDir)
       .select(col("doc_id"), col("source"),
         coalesce(col("lm_score"), lit(0L)).as("lm_score"))
     pruneBySource(sc, "lm_score", keepPct)
@@ -1201,6 +1241,7 @@ object TextOps {
       Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
         .join(qualityLearnedScored(spark, sfDir), Seq("doc_id")),
       "score_milli", keepPct)
+      .orderBy("doc_id")
 
   /** The per-source keep-top-share decision over an arbitrary
     * `(doc_id, source, <scoreCol>)` frame — the histogram-cut machinery
@@ -1224,7 +1265,6 @@ object TextOps {
     sc.join(broadcast(cuts), "source")
       .select(col("doc_id"), col("source"), col(scoreCol),
         (col(scoreCol) >= col("cut")).as("keep"))
-      .orderBy("doc_id")
   }
 
   /** END-TO-END curation pipeline — the capstone composition row: one
@@ -1305,8 +1345,8 @@ object TextOps {
     * on the harness corpus (asserted in ExtOpsSpec), which is what
     * makes the row non-vacuous.
     *
-    * Plan: the quality stages are the same cached signal joins as the
-    * order-free row; the dedup stages semi-join the session-cached
+    * Plan: the quality stages read the same session-cached signal frame
+    * as the order-free row; the dedup stages semi-join the session-cached
     * corpus shingle/band frames down to survivors, so the 128-perm
     * signature pass is shared with minhash_near_dup and staging costs
     * only survivor-sized joins — at 100 TB the staged pipeline is
@@ -2810,38 +2850,22 @@ object TextOps {
     * rare tokens. `oov_bp = (10000 · n_oov) div n_tokens` is exact
     * integer basis points; tokenless docs emit no row (no denominator).
     *
-    * Scale shape: the vocabulary is a corpus-level top-k heap
-    * (TakeOrdered over the token aggregate) broadcast to a left join —
-    * the per-doc aggregate is one map-side-combined shuffle on doc_id.
-    * In production the vocab list is a given artifact (the tokenizer's
-    * vocabulary); deriving it from the corpus here exercises the same
-    * plan plus the top-k.
-    *
-    * The plan DOES pay two corpus explodes per invocation (the vocab leg
-    * and the scoring leg sit on different join branches and Spark does no
-    * CSE across them). r17 session 3 tried re-aggregating the
-    * session-cached [[docTf]] artifact on both legs instead (n_tokens =
-    * Σ tf, n_oov = Σ tf over OOV tokens, vocab = top-k of Σ tf —
-    * identical integers) and MEASURED IT WORSE: materialized_secs 0.58 →
-    * 1.07 and the count-consumer bench row 0.26 → 0.33, both on a
-    * faster epoch (artifacts bench_20260820_042231 vs _045217; plan of
-    * the attempt kept as plans/r17/doc_oov_rate_attempt.txt) — at this
-    * tf-table-to-occurrence ratio the two InMemoryRelation scans cost
-    * more than the two codegen'd explode pipelines they replace.
-    * Reverted per the measure-first discipline (guide §1.1: the "ideal"
-    * fewer-passes plan lost to the empirical loop). */
+    * Scale shape: the vocabulary is a corpus-level top-k heap over the
+    * token counts (a bounded heap per partition, merged), broadcast in
+    * one row onto the vocabulary-sized statistics table; in production
+    * the vocab list is a given artifact (the tokenizer's vocabulary), and
+    * deriving it from the corpus here exercises the same plan plus the
+    * top-k. The default `vocabK`
+    * projects the session-cached [[qualitySignals]] frame, which shares
+    * its one token explode with the repetition and LM signals; any other
+    * `vocabK` runs the same builder uncached. */
   def docOovRate(spark: SparkSession, sfDir: String,
       vocabK: Int = OovVocabK): DataFrame = {
-    val tok = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(tokens(lower(col("text")))).as("token"))
-    val vocab = tok.groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("token")).limit(vocabK)
-      .select(col("token"), lit(1L).as("in_vocab"))
-    tok.join(broadcast(vocab), Seq("token"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
-      .withColumn("oov_bp", expr("(10000 * n_oov) div n_tokens"))
+    val sig =
+      if (vocabK == OovVocabK) qualitySignals(spark, sfDir)
+      else qualitySignalsUncached(spark, sfDir, vocabK)
+    sig.filter(col("n_tokens").isNotNull)
+      .select(col("doc_id"), col("n_tokens"), col("n_oov"), col("oov_bp"))
       .orderBy(col("doc_id"))
   }
 
@@ -2870,74 +2894,21 @@ object TextOps {
     * fewer than 2 tokens emit no row (no denominator), like
     * [[docOovRate]]'s tokenless docs.
     *
-    * Scale shape: a per-doc distinct-bigram pre-aggregate so the count
-    * join carries one row per (doc, bigram) — the 1:N fanout is on the
-    * doc side only, no skew amplification — one vocabulary-bounded
-    * corpus statistics table (c2 by bigram, the prefix total c1 riding
-    * it as a window sum over the aggregated frame), a broadcast 1-row
-    * vocabulary count, and a final doc_id aggregate. Nothing quadratic; the bigram count table
-    * is the only super-linear-in-vocab state (standard n-gram pruning
-    * applies at 100 TB). The (c2+1)·LmScale product is computed in
-    * DECIMAL(38,0) (r7 ADVICE: as a bare int64 it wraps SILENTLY past
-    * ~9.2e9 occurrences of one bigram under non-ANSI Spark while the
-    * DuckDB oracle errors loudly — the two engines failed in different
-    * modes); the decimal grid is exact to 1e38, and the quotient
-    * ≤ LmScale always fits the result's int64. */
-  /** LM score frame cached per (session, sfDir): THREE consumers — the
-    * lm_likelihood row itself, [[qualityMixer]]'s r_lm rule, and
-    * [[qualityPrunePerSource]]'s per-source cut — each otherwise repays
-    * the two corpus bigram aggregates (~1.5 s at sf0.1, the measured
-    * driver of the prune row's 3 s cold time). One row per doc of four
-    * longs; evicts on session end. */
-  private val lmCache = new graft.SessionFrameCache[String]
-
+    * Scale shape: a projection of the session-cached [[qualitySignals]]
+    * frame, whose one vocabulary-bounded statistics table carries c2 per
+    * bigram, c1 as a window sum per prefix token, and V from a broadcast
+    * 1-row count of the token rows of the same table. Nothing quadratic;
+    * the bigram count table is the only super-linear-in-vocab state
+    * (standard n-gram pruning applies at 100 TB). The (c2+1)·LmScale
+    * product is computed in DECIMAL(38,0) (r7 ADVICE: as a bare int64 it
+    * wraps SILENTLY past ~9.2e9 occurrences of one bigram under non-ANSI
+    * Spark while the DuckDB oracle errors loudly — the two engines failed
+    * in different modes); the decimal grid is exact to 1e38, and the
+    * quotient ≤ LmScale always fits the result's int64. */
   def lmLikelihood(spark: SparkSession, sfDir: String): DataFrame =
-    lmCache.getOrElseUpdate(spark, sfDir) {
-      lmLikelihoodUncached(spark, sfDir)
-    }.orderBy(col("doc_id"))
-
-  private def lmLikelihoodUncached(spark: SparkSession, sfDir: String): DataFrame = {
-    // The statistics branches re-run their explode subtrees physically
-    // (no cross-branch CSE in Spark), so the corpus statistics collapse
-    // into ONE vocabulary-bounded table: c2(bigram) = Σ_doc c_doc
-    // (count-per-group equals the sum of per-doc counts) and c1(t1) =
-    // Σ_{bigrams with prefix t1} c2 rides it as a WINDOW SUM over the
-    // already-aggregated frame (partition = distinct bigrams per prefix
-    // token — vocabulary-bounded, never the occurrence stream; the
-    // lmLikelihoodTri skew note). One join carries both statistics, and
-    // the vocabulary count projects off the session-cached docTf
-    // artifact (guide §2.3/§2.4: fewer corpus passes, fewer joins,
-    // shuffle pre-aggregated counts).
-    val W = org.apache.spark.sql.expressions.Window
-    val perDoc = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), explode(bigramsExpr).as("bigram"))
-      .groupBy(col("doc_id"), col("bigram"))
-      .agg(count(lit(1)).as("c_doc"))
-    val bg = perDoc
-      // whitespace tokens cannot contain spaces, so the prefix token is
-      // recoverable from the shared bigram encoding itself — ONE bigram
-      // definition across ops and oracle
-      .withColumn("t1", substring_index(col("bigram"), " ", 1))
-      .groupBy(col("t1"), col("bigram"))
-      .agg(sum(col("c_doc")).as("c2"))
-      .withColumn("c1", sum(col("c2")).over(W.partitionBy(col("t1"))))
-      .select(col("bigram").as("s_bigram"), col("c2"), col("c1"))
-    val v = docTf(spark, sfDir)
-      .agg(countDistinct(col("token")).as("v"))
-    // merge-hinted for the same reason as lmLikelihoodTri's statistics
-    // joins: the bigram table grows with the corpus but its post-
-    // aggregate size estimate reads broadcastable at every scale
-    perDoc.join(bg.hint("shuffle_hash"), col("bigram") === col("s_bigram"))
-      .crossJoin(broadcast(v))
-      .select(col("doc_id"), col("c_doc"),
-        expr(s"(CAST(c2 + 1 AS DECIMAL(38,0)) * $LmScale) div (c1 + v)")
-          .as("p_scaled"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c_doc")).as("n_bigrams"),
-        sum(col("c_doc") * col("p_scaled")).as("lm_sum"))
-      .withColumn("lm_score", expr("lm_sum div n_bigrams"))
-  }
+    qualitySignals(spark, sfDir).filter(col("n_bigrams").isNotNull)
+      .select(col("doc_id"), col("n_bigrams"), col("lm_sum"), col("lm_score"))
+      .orderBy(col("doc_id"))
 
   /** Stupid-backoff pruning threshold and backoff factor for
     * [[lmLikelihoodTri]] (shared with the oracle): a corpus trigram seen

@@ -141,10 +141,28 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("quality mixer joins signals on doc_id only; no cross product") {
-    // BroadcastNestedLoopJoin IS expected once: lmLikelihood's 1-row
-    // broadcast vocabulary total (the documented justified pattern) —
-    // what must never appear is an unpartitioned cartesian
+    // BroadcastNestedLoopJoin IS expected once: the signal build's 1-row
+    // broadcast of V and the top-k vocabulary, crossed onto the
+    // vocabulary-sized statistics table (the documented justified
+    // pattern) — what must never appear is an unpartitioned cartesian
     val p = plan(TextOps.qualityMixer(spark, sfDir))
+    assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("quality signals: one documents scan and one gram explode") {
+    // the final adaptive plan, after execution, prints each reused stage
+    // as a ReusedExchange instead of its subtree: every signal and corpus
+    // statistic must derive from the one scan + explode stage. A fresh
+    // copy of the corpus, so no session cache stands in for the build.
+    val dir = java.nio.file.Files.createTempDirectory("signals").toString
+    graft.Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    val df = TextOps.qualitySignalsUncached(spark, dir)
+    df.collect()
+    val p = plan(df).split("== Initial Plan ==")(0)
+    assert(p.contains("isFinalPlan=true") && p.contains("ReusedExchange"), p)
+    def occurrences(s: String) = p.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    assert(occurrences("documents.parquet") == 1, p)
+    assert(occurrences("Generate ") == 1, p)
     assert(!p.contains("CartesianProduct"), p)
   }
 

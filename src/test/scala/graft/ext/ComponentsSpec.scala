@@ -10,7 +10,8 @@ import graft.SparkSpec
 
 /** The two closes of [[DedupOps.connectedComponents]] (driver union-find
   * up to [[DedupOps.DriverCloseEdgeCap]] edges, star rounds above it) and
-  * the Spark job budget of the staged curation build that calls it. */
+  * the Spark job budgets of the staged curation build that calls it and
+  * of the cold quality mixer ahead of it. */
 class ComponentsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -82,6 +83,21 @@ class ComponentsSpec extends SparkSpec {
     // jobs per round, and the chain needs several rounds
     assert(99 <= DedupOps.DriverCloseEdgeCap)
     assert(nStar >= nDriver + 8, s"driver $nDriver, star $nStar jobs")
+  }
+
+  test("cold quality mixer build runs a bounded number of Spark jobs") {
+    // a fresh copy of the harness corpus: every session cache is cold
+    val dir = tmpDir("mixer")
+    graft.Tables.documents(spark, "/root/testdata/sf0.001")
+      .write.parquet(s"$dir/documents.parquet")
+    var rows = 0
+    val n = jobs { rows = TextOps.qualityMixer(spark, dir).collect().length }
+    assert(rows == graft.Tables.documents(spark, dir).count())
+    // 26 jobs when each of the four signals scanned and tokenized on its
+    // own; 13 with one scan, one gram explode and one per-doc aggregate
+    // (the schema read and the accessor's sort included; a few jobs of
+    // margin for AQE's stage order)
+    assert(n <= 16, s"$n jobs")
   }
 
   test("cold staged curation build runs a bounded number of Spark jobs") {
