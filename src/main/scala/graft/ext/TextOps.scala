@@ -812,46 +812,54 @@ object TextOps {
   /** Per-document quality signals cached per (session, sfDir) — the ONE
     * build behind [[qualityMixer]], [[qualityPrunePerSource]],
     * [[docRepetition]], [[docOovRate]] and [[lmLikelihood]]; evicts on
-    * session end. */
+    * session end. Cached sorted by doc_id: a cached relation keeps its
+    * plan's range partitioning and order, so the five accessors' own
+    * `orderBy("doc_id")` costs nothing on a warm read. */
   private val signalCache = new graft.SessionFrameCache[String]
 
   private def qualitySignals(spark: SparkSession, sfDir: String): DataFrame =
     signalCache.getOrElseUpdate(spark, sfDir) {
-      qualitySignalsUncached(spark, sfDir)
+      qualitySignalsUncached(spark, sfDir).orderBy("doc_id")
     }
 
   /** One row per document: `doc_id`, `source`, the gopher verdict
     * `r_gopher`, the repetition signals (`n_tokens`, `top_token_share`,
-    * `dup_bigram_ratio`), the OOV signals against the top-`vocabK` corpus
-    * tokens (`n_oov`, `oov_bp`) and the bigram-LM signals (`n_bigrams`,
-    * `lm_sum`, `lm_score`). A tokenless doc has NULL token, OOV and LM
-    * signals; a one-token doc has NULL LM signals and ratio 0.
+    * `dup_bigram_ratio`), the OOV signals against the top-[[OovVocabK]]
+    * corpus tokens (`n_oov`, `oov_bp`) and the bigram-LM signals
+    * (`n_bigrams`, `lm_sum`, `lm_score`). A tokenless doc has NULL token,
+    * OOV and LM signals; a one-token doc has NULL LM signals and ratio 0.
     *
-    * Plan: ONE documents scan feeds the gopher projection
-    * ([[gopherAnnotated]], case-sensitive over the raw text) and ONE
-    * explode of the lowercase tokens and bigrams as a single gram stream
-    * — a whitespace token never contains ' ' and an adjacent-token
-    * bigram always does, so the gram string is its own tag. The source
-    * and the gopher verdict ride the grouping keys (doc_id is unique), so
-    * nothing joins back to the documents. `explode_outer` keeps tokenless
-    * docs as one NULL gram. The stream aggregates to (doc, gram, c); the
-    * corpus statistics come from ONE gram-keyed re-aggregate of it —
-    * token counts, bigram counts c2, and c1 (bigram occurrences per
-    * prefix token) as a window sum over that vocabulary-bounded frame,
-    * never the occurrence stream. V (the distinct-token count) and the
-    * top-k vocabulary come from the same table as ONE 1-row aggregate (a
-    * bounded heap per partition, merged), broadcast onto it. Each
-    * statistics row carries its vocabulary flag and its smoothed LM
-    * probability, and joins back to the (doc, gram) table once; ONE
-    * conditional per-doc aggregate folds every signal. The statistics
-    * join is shuffled-hash on purpose: its post-aggregate size estimate
-    * reads broadcastable at every scale (the [[lmLikelihoodTri]] note). */
-  private[graft] def qualitySignalsUncached(spark: SparkSession, sfDir: String,
-      vocabK: Int = OovVocabK): DataFrame = {
+    * Plan: ONE documents scan, dealt round-robin over the cores, feeds the
+    * gopher projection ([[gopherAnnotated]], case-sensitive over the raw
+    * text) and ONE explode of the lowercase tokens and bigrams as a
+    * single gram stream — a whitespace token never contains ' ' and an
+    * adjacent-token bigram always does, so the gram string is its own
+    * tag. The deal is there because a documents file is often one
+    * parquet row group, i.e. one scan task, while the per-row work (the
+    * gopher rules, the tokenize, the bigram build) is the bulk of the
+    * build. The source and the gopher verdict ride the grouping keys
+    * (doc_id is unique), so nothing joins back to the documents. `explode_outer` keeps tokenless docs as one NULL
+    * gram. The stream aggregates to (doc, gram, c); the corpus statistics
+    * come from ONE gram-keyed re-aggregate of it — token counts, bigram
+    * counts c2, and c1 (bigram occurrences per prefix token) as a window
+    * sum over that vocabulary-bounded frame, never the occurrence stream.
+    * V (the distinct-token count) and the top-k vocabulary come from the
+    * same table as ONE 1-row aggregate (a bounded heap per partition,
+    * merged), broadcast onto it. Each statistics row carries its
+    * vocabulary flag and its smoothed LM probability, and joins back to
+    * the (doc, gram) table once; ONE conditional per-doc aggregate folds
+    * every signal. The statistics join is shuffled-hash on purpose: its
+    * post-aggregate size estimate reads broadcastable at every scale (the
+    * [[lmLikelihoodTri]] note). */
+  private[graft] def qualitySignalsUncached(spark: SparkSession,
+      sfDir: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val isBigram = col("gram").contains(" ")
     val isToken = !isBigram
-    val grams = gopherAnnotated(Tables.documents(spark, sfDir))
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("source"), col("text"))
+      .repartition(spark.sparkContext.defaultParallelism)
+    val grams = gopherAnnotated(docs)
       .select(col("doc_id"), col("source"), col("keep").as("r_gopher"),
         tokens(lower(col("text"))).as("toks"))
       .select(col("doc_id"), col("source"), col("r_gopher"),
@@ -870,7 +878,7 @@ object TextOps {
     // small k; a production vocabulary joins as a given artifact instead.
     val topK = org.apache.spark.sql.catalyst.expressions.aggregate.GraftTopK.smallest(
       when(isToken, struct((-col("cc")).as("neg_c"), col("gram").as("token"))),
-      vocabK)
+      OovVocabK)
     val corpusTotals = corpus.agg(count(when(isToken, col("cc"))).as("v"),
       transform(topK, t => t.getField("token")).as("vocab"))
     val stats = corpus
@@ -1207,7 +1215,8 @@ object TextOps {
     * registered consumers (the prune row itself, both order-free
     * curation capstones, and the staged capstone's survivor build) each
     * re-derived the histogram-cut decision per invocation. One row per
-    * doc, unsorted (the accessor sorts); evicts on session end. */
+    * doc, sorted by doc_id (the accessor's sort then costs nothing);
+    * evicts on session end. */
   private val prunePerSourceCache = new graft.SessionFrameCache[(String, Int)]
 
   def qualityPrunePerSource(spark: SparkSession, sfDir: String,
@@ -1241,7 +1250,6 @@ object TextOps {
       Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
         .join(qualityLearnedScored(spark, sfDir), Seq("doc_id")),
       "score_milli", keepPct)
-      .orderBy("doc_id")
 
   /** The per-source keep-top-share decision over an arbitrary
     * `(doc_id, source, <scoreCol>)` frame — the histogram-cut machinery
@@ -1265,6 +1273,7 @@ object TextOps {
     sc.join(broadcast(cuts), "source")
       .select(col("doc_id"), col("source"), col(scoreCol),
         (col(scoreCol) >= col("cut")).as("keep"))
+      .orderBy("doc_id")
   }
 
   /** END-TO-END curation pipeline — the capstone composition row: one
@@ -2855,19 +2864,13 @@ object TextOps {
     * one row onto the vocabulary-sized statistics table; in production
     * the vocab list is a given artifact (the tokenizer's vocabulary), and
     * deriving it from the corpus here exercises the same plan plus the
-    * top-k. The default `vocabK`
-    * projects the session-cached [[qualitySignals]] frame, which shares
-    * its one token explode with the repetition and LM signals; any other
-    * `vocabK` runs the same builder uncached. */
-  def docOovRate(spark: SparkSession, sfDir: String,
-      vocabK: Int = OovVocabK): DataFrame = {
-    val sig =
-      if (vocabK == OovVocabK) qualitySignals(spark, sfDir)
-      else qualitySignalsUncached(spark, sfDir, vocabK)
-    sig.filter(col("n_tokens").isNotNull)
+    * top-k. A projection of the session-cached [[qualitySignals]] frame,
+    * which shares its one token explode with the repetition and LM
+    * signals. */
+  def docOovRate(spark: SparkSession, sfDir: String): DataFrame =
+    qualitySignals(spark, sfDir).filter(col("n_tokens").isNotNull)
       .select(col("doc_id"), col("n_tokens"), col("n_oov"), col("oov_bp"))
       .orderBy(col("doc_id"))
-  }
 
   /** Integer scale for smoothed bigram probabilities (shared with the
     * oracle): p_scaled = ((c2+1)·LmScale) div (c1+V) ∈ [0, LmScale]. */

@@ -18,6 +18,30 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** A fresh copy of the corpus: no session cache built for `sfDir` by an
+    * earlier test stands in for the plan that builds it (a persisted
+    * frame replaces every plan that matches its own). */
+  private def freshCorpus(name: String): String = {
+    val dir = tmpDir(name)
+    graft.Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** A printed plan without the build subtrees of its cached relations:
+    * the lines nested deeper than an `InMemoryRelation` line. */
+  private def outsideCached(p: String): String = {
+    def depth(line: String) = line.indexWhere(ch => !" :+-".contains(ch))
+    var cut = Int.MaxValue
+    p.split("\n").filter { line =>
+      val d = depth(line)
+      if (d > cut) false
+      else {
+        cut = if (line.contains("InMemoryRelation")) d else Int.MaxValue
+        true
+      }
+    }.mkString("\n")
+  }
+
   test("unpartitioned windows are pinned to the bounded-frame class") {
     // A Window with an empty partitionSpec funnels its input through ONE
     // reducer — fatal on a corpus-sized frame, deliberate and harmless on
@@ -152,11 +176,8 @@ class PlanAuditSpec extends SparkSpec {
   test("quality signals: one documents scan and one gram explode") {
     // the final adaptive plan, after execution, prints each reused stage
     // as a ReusedExchange instead of its subtree: every signal and corpus
-    // statistic must derive from the one scan + explode stage. A fresh
-    // copy of the corpus, so no session cache stands in for the build.
-    val dir = java.nio.file.Files.createTempDirectory("signals").toString
-    graft.Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
-    val df = TextOps.qualitySignalsUncached(spark, dir)
+    // statistic must derive from the one scan + explode stage
+    val df = TextOps.qualitySignalsUncached(spark, freshCorpus("signals"))
     df.collect()
     val p = plan(df).split("== Initial Plan ==")(0)
     assert(p.contains("isFinalPlan=true") && p.contains("ReusedExchange"), p)
@@ -170,14 +191,17 @@ class PlanAuditSpec extends SparkSpec {
     // r17: the registered row serves the session-cached verdict frame,
     // so the shape gate runs on the UNCACHED builder — the plan that
     // actually builds it (the embLshNearDupUncached convention)
-    val p = plan(TextOps.qualityPrunePerSourceUncached(spark, sfDir))
-    assert(!p.contains("CartesianProduct"), p)
+    val raw = plan(TextOps.qualityPrunePerSourceUncached(spark, freshCorpus("prune")))
+    assert(!raw.contains("CartesianProduct"), raw)
+    val p = outsideCached(raw)
     // the ≤ #sources cut table must come back as a broadcast join — the
     // doc-sized score frame never shuffles for the keep decision
     assert(p.contains("BroadcastHashJoin"), p)
     // the rank window's input is the (source, lm_score) histogram
     // aggregate, never the doc frame: the aggregate keyed on lm_score
-    // must sit below the Window
+    // must sit below the Window. The score frame is a cached relation
+    // whose printed build holds windows of its own, so the order is
+    // read off the prune's plan with those builds cut out.
     val w = p.indexOf("Window")
     assert(w >= 0 && p.indexOf("HashAggregate(keys=[source", w) >= 0, p)
   }

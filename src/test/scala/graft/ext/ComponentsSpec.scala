@@ -94,9 +94,9 @@ class ComponentsSpec extends SparkSpec {
     val n = jobs { rows = TextOps.qualityMixer(spark, dir).collect().length }
     assert(rows == graft.Tables.documents(spark, dir).count())
     // 26 jobs when each of the four signals scanned and tokenized on its
-    // own; 13 with one scan, one gram explode and one per-doc aggregate
-    // (the schema read and the accessor's sort included; a few jobs of
-    // margin for AQE's stage order)
+    // own; 14 with one scan, one round-robin deal, one gram explode and
+    // one per-doc aggregate (the schema read and the cached frame's sort
+    // included; two jobs of margin for AQE's stage order)
     assert(n <= 16, s"$n jobs")
   }
 

@@ -1759,12 +1759,18 @@ class ExtOpsSpec extends SparkSpec {
   }
 
   test("oov rate: exact basis points against the top-k vocab, tokenless docs dropped") {
+    // k-1 tokens seen at least twice, then p, q, z seen once each: the
+    // top-k vocabulary (count desc, token) is the k-1 frequent tokens
+    // plus p, the tie at count 1 going to the smallest token
+    val k = TextOps.OovVocabK
+    val twice = (0 until k - 1).map(i => f"t$i%02d")
     val dir = docsFixture(Seq(
-      (1L, "a a b", "en"), (2L, "a c d", "en"), (3L, "   ", "en")))
-    // counts a:3 b:1 c:1 d:1 -> top-2 vocab (count desc, token) = {a, b}
-    val got = TextOps.docOovRate(spark, dir, vocabK = 2).collect()
+      (1L, (twice ++ twice).mkString(" "), "en"), (2L, "p", "en"),
+      (3L, "   ", "en"), (4L, "q z t00", "en")))
+    val got = TextOps.docOovRate(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(got === Seq((1L, 3L, 0L, 0L), (2L, 3L, 2L, 6666L)))
+    assert(got === Seq((1L, 2L * (k - 1), 0L, 0L), (2L, 1L, 0L, 0L),
+      (4L, 3L, 2L, 6666L)))
   }
 
   test("source drift: hand-computed TV on overlapping and disjoint vocabularies") {
