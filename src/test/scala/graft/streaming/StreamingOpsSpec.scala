@@ -735,6 +735,95 @@ class StreamingOpsSpec extends SparkSpec {
       batchVerdicts(14L) == "dropped_batch")
   }
 
+  test("media ingest stream keeps what a driver-side brute force over the dense dHash keeps") {
+    import graft.functions.MediaBytes
+    import graft.ext.JsonMediaOps.{MediaBandsDense, MediaHammingMaxDense}
+    // the pigeonhole contract of hammingBands: a pair within
+    // MediaHammingMaxDense bits disagrees on at most that many of the
+    // MediaBandsDense disjoint bands, so it shares one and the stream's
+    // band joins meet every pair the brute force counts
+    assert(MediaBandsDense > MediaHammingMaxDense)
+    val rnd = new scala.util.Random(29)
+    def payload() = Array.fill(400)((32 + rnd.nextInt(95)).toByte)
+    // k re-drawn bytes move the gradient bits of their segments only:
+    // one byte is at most 2 bits, eight usually land past the threshold
+    def edit(p: Array[Byte], k: Int): Array[Byte] = {
+      val q = p.clone()
+      (0 until k).foreach(_ => q(rnd.nextInt(q.length)) = (32 + rnd.nextInt(95)).toByte)
+      q
+    }
+    val containers = Seq[Array[Byte] => Array[Byte]](
+      MediaBytes.png(33, 44, _), MediaBytes.bmp(33, 44, _), MediaBytes.wav(_))
+    val roots = Seq.fill(6)(payload())
+    var next = 0L
+    def blobs(ps: Seq[Array[Byte]]): Seq[(Long, Array[Byte])] = ps.map { p =>
+      next += 1
+      (next, containers((next % 3).toInt)(p))
+    }
+    // batch 0: roots 0-3, each with a 1-, 3- and 8-byte edit;
+    // batch 1: further edits of roots 0-3 against the kept ones, and
+    // roots 4-5 with their own edit families
+    val batches = Seq(
+      blobs(roots.take(4).flatMap(r => Seq(r, edit(r, 1), edit(r, 3), edit(r, 8)))),
+      blobs(roots.take(4).flatMap(r => Seq(edit(r, 1), edit(r, 2), edit(r, 8))) ++
+        roots.drop(4).flatMap(r => Seq(r, edit(r, 1), edit(r, 1), edit(r, 6)))))
+
+    val out = tmpDir("mediabrute")
+    val sink = StreamingOps.mediaSink(s"$out/state", s"$out/kept", MediaHammingMaxDense)
+    batches.zipWithIndex.foreach { case (rows, b) => sink.apply(rows.toDF("doc_id", "blob"), b) }
+    val streamKept = StreamingOps.committedKept(spark, s"$out/kept")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+    // brute force: drop a blob near any kept blob, then keep the minimum
+    // id of each in-batch component of the survivors
+    def near(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b) <= MediaHammingMaxDense
+    var kept = Map.empty[Long, Long]
+    var crossDrops, inBatchLosers = 0
+    for (rows <- batches) {
+      val hashes = rows.map { case (id, blob) => id -> MediaBytes.dhashDense64(blob) }
+      val survivors = hashes.filter { case (_, h) => !kept.values.exists(near(h, _)) }
+      crossDrops += hashes.size - survivors.size
+      val label = scala.collection.mutable.Map(survivors.map { case (id, _) => id -> id }: _*)
+      var changed = true
+      while (changed) {
+        changed = false
+        for ((a, ha) <- survivors; (b, hb) <- survivors; if a != b && near(ha, hb);
+             if label(b) < label(a)) { label(a) = label(b); changed = true }
+      }
+      val keepers = survivors.filter { case (id, _) => label(id) == id }
+      inBatchLosers += survivors.size - keepers.size
+      kept ++= keepers
+    }
+    // the fixture reaches both drop paths and has edits past the threshold
+    val far = batches.flatten.combinations(2).count { case Seq((_, x), (_, y)) =>
+      !near(MediaBytes.dhashDense64(x), MediaBytes.dhashDense64(y)) }
+    assert(crossDrops > 0 && inBatchLosers > 0 && far > 0,
+      s"cross $crossDrops, in-batch $inBatchLosers, far pairs $far")
+    assert(streamKept == kept.keySet,
+      s"stream kept ${streamKept.toSeq.sorted}, brute force ${kept.keySet.toSeq.sorted}")
+  }
+
+  test("a minhash micro-batch above the hot-key cap keeps what the batch policy keeps") {
+    import graft.ext.DedupOps
+    // 600 identical docs and 500 distinct ones: 1100 docs exceed
+    // MinHashBandDfCap, so the in-batch self-join runs through
+    // subSaltHotKeys, which incrIngestDedup's self-join always runs
+    val same = (1 to 40).map(i => s"w$i").mkString(" ")
+    val rows = (1 to 600).map(i => (i.toLong, same)) ++ (601 to 1100).map(i =>
+      (i.toLong, (0 until 12).map(j => s"d${i}t$j").mkString(" ")))
+    assert(rows.size > DedupOps.MinHashBandDfCap)
+    val batch = rows.toDF("doc_id", "text")
+    val out = tmpDir("mhhotkey")
+    StreamingOps.minhashSink(s"$out/state", s"$out/kept", 0.6).apply(batch, 0L)
+    val streamKept = StreamingOps.committedKept(spark, s"$out/kept")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val batchKept = DedupOps.incrIngestDedup(batch.limit(0), batch)
+      .filter($"status" === "kept").select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(streamKept == batchKept,
+      s"stream kept ${streamKept.size} docs, batch policy ${batchKept.size}")
+    assert(streamKept == Set(1L) ++ (601L to 1100L))
+  }
+
   test("streaming embedding ingest dedup drops vector near-dups across batches") {
     implicit val sqlCtx = spark.sqlContext
     // unit-direction fixtures in 8 dims: v2 = scaled v1 (cosine 1.0),
@@ -945,98 +1034,61 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
-  test("minhash ingest is exactly-once: crash at every boundary, replay converges") {
-    import spark.implicits._
+  /** One ingest stream's exactly-once fixture: a sink factory over
+    * (state path, kept path, fault hook), three micro-batches that hold
+    * an in-batch loser, cross-batch dups of kept rows and novelty, the id
+    * column, the kept ids after the three batches, and a probe batch with
+    * the ids of it that a fresh sink over the same state keeps. */
+  private final case class IngestFixture(
+      name: String,
+      sink: (String, String, String => Unit) => StreamingOps.ExactlyOnceSink,
+      batches: Seq[(Long, org.apache.spark.sql.DataFrame)],
+      idCol: String,
+      expected: Set[Long],
+      probe: org.apache.spark.sql.DataFrame,
+      probeKept: Set[Long])
+
+  private def minhashFixture: IngestFixture = {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val near = (1 to 38).map(i => s"w$i").mkString(" ") + " x1 x2"
     val other = (100 to 140).map(i => s"v$i").mkString(" ")
     val nearOther = (100 to 138).map(i => s"v$i").mkString(" ") + " y1"
     val third = (200 to 240).map(i => s"u$i").mkString(" ")
     // in-batch loss (2→1), cross-batch dup-of-kept (3→1, 5→4), novelty (4, 6)
-    val mkBatches = Seq(
-      0L -> Seq((1L, base), (2L, near)),
-      1L -> Seq((3L, near), (4L, other)),
-      2L -> Seq((5L, nearOther), (6L, third)))
-    def frames = mkBatches.map { case (b, rows) => (b, rows.toDF("doc_id", "text")) }
-    val expected = Set(1L, 4L, 6L)
-    val sites = Seq("after-kept", "after-state", "after-marker")
-
-    // uncrashed reference run
-    val ref = tmpDir("mhrefrun")
-    val refProc = StreamingOps.minhashSink(
-      s"$ref/state", s"$ref/kept", 0.6)
-    frames.foreach { case (b, df) => refProc.apply(df, b) }
-    val refKept = StreamingOps.committedKept(spark, s"$ref/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(refKept.toSet == expected)
-
-    // crashed run: every boundary of every batch, restart + replay
-    val out = tmpDir("mhcrash")
-    crashReplayDrive[StreamingOps.ExactlyOnceSink](
-      frames, sites,
-      fp => StreamingOps.minhashSink(
-        s"$out/state", s"$out/kept", 0.6, faultPoint = fp))(
-      (p, b, df) => p.apply(df, b))
-    val kept = StreamingOps.committedKept(spark, s"$out/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(kept.toSet == expected, s"crashed run diverged: $kept")
-    assert(kept.length == kept.toSet.size, s"double-applied batch: $kept")
-
-    // state converged too: a fresh processor (bootstrap from changelog)
-    // must still catch a near-dup of each kept doc and admit novelty
-    val p2 = StreamingOps.minhashSink(
-      s"$out/state", s"$out/kept", 0.6)
-    p2.apply(Seq((7L, near), (8L, nearOther),
-      (9L, (300 to 340).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text"), 3L)
-    val kept2 = StreamingOps.committedKept(spark, s"$out/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept2 == expected + 9L)
+    IngestFixture("mh",
+      (st, kept, fp) => StreamingOps.minhashSink(st, kept, 0.6, faultPoint = fp),
+      Seq(
+        0L -> Seq((1L, base), (2L, near)),
+        1L -> Seq((3L, near), (4L, other)),
+        2L -> Seq((5L, nearOther), (6L, third)))
+        .map { case (b, rows) => (b, rows.toDF("doc_id", "text")) },
+      "doc_id", Set(1L, 4L, 6L),
+      Seq((7L, near), (8L, nearOther),
+        (9L, (300 to 340).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text"),
+      Set(9L))
   }
 
-  test("embedding ingest is exactly-once: crash at every boundary, replay converges") {
-    import spark.implicits._
+  private def embFixture: IngestFixture = {
     val v1 = Array(1f, 2f, 3f, 4f, 0f, 0f, 0f, 0f)
     val v2 = v1.map(_ * 2.5f) // cosine 1.0 vs v1 — in-batch loser
     val v3 = Array(0f, 0f, 0f, 0f, 1f, 2f, 3f, 4f) // orthogonal — novel
     val v4 = Array(1.05f, 2.05f, 2.95f, 4.02f, 0.1f, 0f, 0f, 0f) // ~v1 — cross-batch dup
     val v5 = Array(1f, 0f, 1f, 0f, 1f, 0f, 1f, 0f) // novel direction
-    val mkBatches = Seq(
-      0L -> Seq((1L, v1), (2L, v2)),
-      1L -> Seq((3L, v3), (4L, v4)),
-      2L -> Seq((5L, v5)))
-    def frames = mkBatches.map { case (b, rows) => (b, rows.toDF("vec_id", "embedding")) }
-    val expected = Set(1L, 3L, 5L)
-    val sites = Seq("after-kept", "after-state", "after-marker")
-
-    val ref = tmpDir("embrefrun")
-    val refProc = StreamingOps.embSink(
-      s"$ref/state", s"$ref/kept", 0.8, 32, 8, 42L)
-    frames.foreach { case (b, df) => refProc.apply(df, b) }
-    assert(StreamingOps.committedKept(spark, s"$ref/kept")
-      .select("vec_id").collect().map(_.getLong(0)).toSet == expected)
-
-    val out = tmpDir("embcrash")
-    crashReplayDrive[StreamingOps.ExactlyOnceSink](
-      frames, sites,
-      fp => StreamingOps.embSink(
-        s"$out/state", s"$out/kept", 0.8, 32, 8, 42L, faultPoint = fp))(
-      (p, b, df) => p.apply(df, b))
-    val kept = StreamingOps.committedKept(spark, s"$out/kept")
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(kept.toSet == expected, s"crashed run diverged: $kept")
-    assert(kept.length == kept.toSet.size, s"double-applied batch: $kept")
-
-    // bootstrap-convergence probe: near-dup of kept 1 dropped, novelty kept
-    val p2 = StreamingOps.embSink(
-      s"$out/state", s"$out/kept", 0.8, 32, 8, 42L)
-    p2.apply(Seq((6L, v4), (7L, Array(0f, 1f, 0f, -1f, 0f, 1f, 0f, -1f)))
-      .toDF("vec_id", "embedding"), 3L)
-    assert(StreamingOps.committedKept(spark, s"$out/kept")
-      .select("vec_id").collect().map(_.getLong(0)).toSet == expected + 7L)
+    IngestFixture("emb",
+      (st, kept, fp) => StreamingOps.embSink(st, kept, 0.8, 32, 8, 42L, faultPoint = fp),
+      Seq(
+        0L -> Seq((1L, v1), (2L, v2)),
+        1L -> Seq((3L, v3), (4L, v4)),
+        2L -> Seq((5L, v5)))
+        .map { case (b, rows) => (b, rows.toDF("vec_id", "embedding")) },
+      "vec_id", Set(1L, 3L, 5L),
+      // near-dup of kept 1 dropped, novelty kept
+      Seq((6L, v4), (7L, Array(0f, 1f, 0f, -1f, 0f, 1f, 0f, -1f)))
+        .toDF("vec_id", "embedding"),
+      Set(7L))
   }
 
-  test("media ingest is exactly-once: crash at every boundary, replay converges") {
-    import spark.implicits._
+  private def mediaFixture: IngestFixture = {
     import graft.functions.MediaBytes
     val rnd = new scala.util.Random(13)
     def payload() = Array.fill(400)((32 + rnd.nextInt(95)).toByte)
@@ -1046,42 +1098,106 @@ class StreamingOpsSpec extends SparkSpec {
     // blob 2: same payload as 1 in a DIFFERENT container — in-batch
     // loser (the hash sees through the format); blob 3: trailing-append
     // near-dup of 1 — cross-batch dup-of-kept; blob 5: near-dup of 4
-    val mkBatches = Seq(
+    val batches = Seq(
       0L -> Seq((1L, MediaBytes.png(33, 44, p1)), (2L, MediaBytes.wav(p1))),
       1L -> Seq((3L, MediaBytes.bmp(33, 44, p1 ++ " dup".getBytes("UTF-8"))),
         (4L, MediaBytes.wav(p4))),
       2L -> Seq((5L, MediaBytes.png(33, 44, p4 ++ " x".getBytes("UTF-8"))),
         (6L, MediaBytes.bmp(33, 44, p6))))
-    def frames = mkBatches.map { case (b, rows) => (b, rows.toDF("doc_id", "blob")) }
-    val expected = Set(1L, 4L, 6L)
+      .map { case (b, rows) => (b, rows.toDF("doc_id", "blob")) }
+    IngestFixture("media",
+      (st, kept, fp) => StreamingOps.mediaSink(st, kept, 2, faultPoint = fp),
+      batches, "doc_id", Set(1L, 4L, 6L),
+      // a near-dup of kept 6 is dropped; a novel blob is kept
+      Seq((7L, MediaBytes.wav(p6 ++ " y".getBytes("UTF-8"))),
+        (8L, MediaBytes.png(33, 44, payload()))).toDF("doc_id", "blob"),
+      Set(8L))
+  }
+
+  /** The exactly-once contract of one ingest sink: an uncrashed reference
+    * run keeps `expected`; a run crashed at every fault point of every
+    * batch, restarted and replayed keeps the same set, each id once; and a
+    * fresh sink bootstrapped from that run's changelog still drops the
+    * probe's near-dups of kept rows and keeps its novelty. */
+  private def assertExactlyOnce(fx: IngestFixture): Unit = {
     val sites = Seq("after-kept", "after-state", "after-marker")
+    def kept(root: String): Seq[Long] = StreamingOps.committedKept(spark, s"$root/kept")
+      .select(fx.idCol).collect().map(_.getLong(0)).toSeq
 
-    val ref = tmpDir("mediarefrun")
-    val refProc = StreamingOps.mediaSink(
-      s"$ref/state", s"$ref/kept", 2)
-    frames.foreach { case (b, df) => refProc.apply(df, b) }
-    assert(StreamingOps.committedKept(spark, s"$ref/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expected)
+    val ref = tmpDir(s"${fx.name}refrun")
+    val refSink = fx.sink(s"$ref/state", s"$ref/kept", _ => ())
+    fx.batches.foreach { case (b, df) => refSink.apply(df, b) }
+    assert(kept(ref).toSet == fx.expected)
 
-    val out = tmpDir("mediacrash")
+    val out = tmpDir(s"${fx.name}crash")
     crashReplayDrive[StreamingOps.ExactlyOnceSink](
-      frames, sites,
-      fp => StreamingOps.mediaSink(
-        s"$out/state", s"$out/kept", 2, faultPoint = fp))(
+      fx.batches, sites, fp => fx.sink(s"$out/state", s"$out/kept", fp))(
       (p, b, df) => p.apply(df, b))
-    val kept = StreamingOps.committedKept(spark, s"$out/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(kept.toSet == expected, s"crashed run diverged: $kept")
-    assert(kept.length == kept.toSet.size, s"double-applied batch: $kept")
+    val crashed = kept(out)
+    assert(crashed.toSet == fx.expected, s"crashed run diverged: $crashed")
+    assert(crashed.length == crashed.toSet.size, s"double-applied batch: $crashed")
 
-    // bootstrap-convergence probe: a near-dup of kept 6 is dropped by a
-    // FRESH processor over the same state; a novel blob is kept
-    val p2 = StreamingOps.mediaSink(s"$out/state", s"$out/kept", 2)
-    p2.apply(Seq(
-      (7L, MediaBytes.wav(p6 ++ " y".getBytes("UTF-8"))),
-      (8L, MediaBytes.png(33, 44, payload()))).toDF("doc_id", "blob"), 3L)
-    assert(StreamingOps.committedKept(spark, s"$out/kept")
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expected + 8L)
+    fx.sink(s"$out/state", s"$out/kept", _ => ()).apply(fx.probe, fx.batches.size.toLong)
+    assert(kept(out).toSet == fx.expected ++ fx.probeKept)
+  }
+
+  test("minhash ingest is exactly-once: crash at every boundary, replay converges") {
+    assertExactlyOnce(minhashFixture)
+  }
+
+  test("embedding ingest is exactly-once: crash at every boundary, replay converges") {
+    assertExactlyOnce(embFixture)
+  }
+
+  test("media ingest is exactly-once: crash at every boundary, replay converges") {
+    assertExactlyOnce(mediaFixture)
+  }
+
+  /** Spark jobs `body` starts, counted by job group so no other thread's
+    * jobs are included (broadcast jobs inherit the group). */
+  private def jobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"streaming-spec-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      body
+      ListenerBus.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("ingest micro-batches run a bounded number of Spark jobs") {
+    // jobs per `apply` over the exactly-once fixtures' three batches, on
+    // the broadcast, unsalted branch that StreamBench's micro-batches
+    // take. Each bound is the count measured when every stream still had
+    // its own per-batch function: MinHash 28/36/36, embeddings 23/24/15,
+    // media 20/19/19
+    val budgets = Seq(
+      minhashFixture -> Seq(28, 36, 36),
+      embFixture -> Seq(23, 24, 15),
+      mediaFixture -> Seq(20, 19, 19))
+    for ((fx, budget) <- budgets) {
+      val out = tmpDir(s"${fx.name}jobs")
+      val sink = fx.sink(s"$out/state", s"$out/kept", _ => ())
+      val counts = fx.batches.map { case (b, df) => jobs(sink.apply(df, b)) }
+      println(s"JOBCOUNT ${fx.name} ${counts.mkString(",")}")
+      assert(counts.zip(budget).forall { case (n, cap) => n <= cap },
+        s"${fx.name} jobs per batch $counts, budget $budget")
+      assert(StreamingOps.committedKept(spark, s"$out/kept")
+        .select(fx.idCol).collect().map(_.getLong(0)).toSet == fx.expected)
+    }
   }
 
   /** One novel doc per batch — every batch kept, every append non-empty,
