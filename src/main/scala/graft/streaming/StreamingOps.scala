@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The four exactly-once micro-batch streams: the taxi ETL
@@ -1046,24 +1046,175 @@ object StreamingOps {
         scheme: Option[String] = None)
   }
 
-  /** Streaming MinHash near-dup INGEST dedup — the stream-shape of the
+  /** The parts in which the near-dup ingest streams differ; [[ingestStep]]
+    * runs the rest. Candidate pairs are (doc_a, doc_b) id pairs whatever
+    * the stream's id column.
+    *
+    * @param idCol the id column of the batch, its frames and the state
+    * @param keptCols the batch columns written to the kept output
+    * @param bandCols the band-key columns that band joins match on
+    * @param hotKeyCap the band-key df cap of the in-batch self-join; a
+    *        batch with more ids than this salts it
+    *        ([[graft.ext.DedupOps.subSaltHotKeys]])
+    * @param bandRowsPerId banded rows per id at most; the broadcast gate
+    *        of a band-sized frame multiplies the batch's id count by it
+    * @param frames a batch's one-row-per-id frame and banded frame, each
+    *        materialized through `hold`, which releases it when the batch
+    *        ends
+    * @param crossBatch the ids of batch rows that near-dup a kept row,
+    *        from the (batch, kept) band-join candidates; None when no
+    *        candidate survives
+    * @param inBatch the verified pairs among the in-batch band-join
+    *        candidates, given the per-id rows left after the cross-batch
+    *        drop and the batch-sized broadcast gate
+    * @param stateRows the state tables' rows from the per-id and banded
+    *        frames; the step appends their kept share
+    * @param pairCond the rest of a band join's condition, between its
+    *        `x` and `y` sides */
+  private[streaming] final case class NearDupIngest(
+      idCol: String,
+      keptCols: Seq[String],
+      bandCols: Seq[String],
+      hotKeyCap: Int,
+      bandRowsPerId: Int,
+      frames: (DataFrame, DataFrame => DataFrame) => (DataFrame, DataFrame),
+      crossBatch: (DataFrame, IngestBatch) => Option[DataFrame],
+      inBatch: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame,
+      stateRows: (DataFrame, DataFrame) => Map[String, DataFrame],
+      pairCond: (String, String) => Column = (_, _) => lit(true))
+
+  /** A micro-batch as a cross-batch verification reads it: the per-id
+    * frame, the keyed state, the broadcast gate of batch-sized frames and
+    * the release registrar. */
+  private[streaming] final class IngestBatch(val ids: DataFrame,
+      val state: KeyedStreamState, val bc: DataFrame => DataFrame,
+      val hold: DataFrame => DataFrame)
+
+  /** An [[ExactlyOnceSink]] that runs [[ingestStep]] on every non-empty
+    * micro-batch and commits its kept count. */
+  private def ingestSink(keptPath: String, layout: KeyedStreamState.Layout,
+      epoch: Long, faultPoint: String => Unit, ingest: NearDupIngest): ExactlyOnceSink =
+    new ExactlyOnceSink(keptPath, Some(layout), epoch, faultPoint)(
+        (batch, batchId, sink) =>
+      if (batch.isEmpty) None
+      else Some(Array(
+        ingestStep(ingest, batch, batchId, sink.state, keptPath, faultPoint))))
+
+  /** Free a per-batch frame: a persisted frame's cache entry, a local
+    * checkpoint's blocks. */
+  private def release(df: DataFrame): Unit =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df.unpersist()
+    else org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(df)
+
+  /** One near-dup ingest micro-batch: a row is kept iff it near-dups no
+    * kept row of an earlier batch and is the minimum id of its in-batch
+    * near-dup cluster. Writes the kept rows and the state increment and
+    * returns the kept count. In order (the `faultPoint` after a step in
+    * brackets):
+    *  1. `frames` builds the per-id and banded frames; one count of the
+    *     per-id frame sets the broadcast and hot-key gates, and is the
+    *     kept count when nothing is dropped;
+    *  2. cross-batch: the banded batch joins the state's `bands` table
+    *     and `crossBatch` verifies the candidates; the verified ids are
+    *     dropped from both frames;
+    *  3. in-batch: the remaining banded rows self-join, salted above
+    *     `hotKeyCap`; `inBatch` verifies the pairs and connected
+    *     components drop every id but each cluster's minimum;
+    *  4. the kept rows are written to `batch_id=<b>` under `keptPath`
+    *     (a batch that keeps nothing writes no directory) [after-kept],
+    *     and the kept share of `stateRows` is appended [after-state].
+    *
+    * Batch-sized join sides are broadcast, so the state streams through
+    * each join as a scan; above [[StreamBroadcastCap]] rows (band-sized
+    * frames count `bandRowsPerId` rows per id) — a backlogged source's
+    * catch-up batch — the planner's shuffle joins run instead. The
+    * cross-batch join is left unsalted: its output per band key is linear
+    * in the batch, and the state holds at most ~ceil(m/cap) members of a
+    * degenerate group, since the group's first batch collapses it to its
+    * per-shard keepers. Each verified frame is local-checkpointed, because
+    * every later frame references it and a lazy tree would re-run and
+    * re-plan it per action; a verified frame with no rows is dropped, so
+    * a batch with no dups skips the anti-joins, connected components and
+    * the kept semi-joins. Repeated ids or pairs from multi-band
+    * collisions are harmless here: anti- and semi-joins ignore them and
+    * connected components distincts its edges. Every frame that `frames`
+    * or the step materialized is released when the batch ends. */
+  private[streaming] def ingestStep(ingest: NearDupIngest, batch: DataFrame,
+      batchId: Long, state: KeyedStreamState, keptPath: String,
+      faultPoint: String => Unit): Long = {
+    import graft.ext.DedupOps
+    import ingest._
+    val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df; df }
+    try {
+      val (ids, banded) = frames(batch, hold)
+      val nBatch = ids.count()
+      def bc(df: DataFrame): DataFrame =
+        if (nBatch <= StreamBroadcastCap) broadcast(df) else df
+      def bcBands(df: DataFrame): DataFrame =
+        if (nBatch * bandRowsPerId <= StreamBroadcastCap) broadcast(df) else df
+      def bandJoin(x: DataFrame, y: DataFrame, cond: Column): DataFrame =
+        x.as("x").join(y.as("y"),
+            bandCols.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
+              cond && pairCond("x", "y"))
+          .select(col(s"x.$idCol").as("doc_a"), col(s"y.$idCol").as("doc_b"))
+      def checkpointNonEmpty(df: DataFrame): Option[DataFrame] = {
+        val c = hold(df.localCheckpoint())
+        if (c.isEmpty) None else Some(c)
+      }
+      val dupOfKept =
+        if (state.isEmpty) None
+        else crossBatch(bandJoin(bcBands(banded), state.table("bands"), lit(true)),
+          new IngestBatch(ids, state, bc, hold)).flatMap(checkpointNonEmpty)
+      // a verified id can repeat once per colliding band
+      def dropDups(df: DataFrame): DataFrame =
+        dupOfKept.fold(df)(d => df.join(bcBands(d), Seq(idCol), "left_anti"))
+      val freshBands =
+        if (nBatch <= hotKeyCap) dropDups(banded).withColumn("shard", lit(0L))
+        else DedupOps.subSaltHotKeys(dropDups(banded), idCol, hotKeyCap, bandCols)
+      val inBatchPairs = checkpointNonEmpty(inBatch(
+        bandJoin(freshBands, freshBands, col("x.shard") === col("y.shard") &&
+          col(s"x.$idCol") < col(s"y.$idCol")),
+        dropDups(ids), bc))
+      val losers = inBatchPairs.map(p =>
+        hold(DedupOps.connectedComponents(p)).filter(col("doc_id") =!= col("label"))
+          .select(col("doc_id").as(idCol)))
+      def dropLosers(df: DataFrame): DataFrame =
+        losers.fold(df)(l => df.join(bc(l), Seq(idCol), "left_anti"))
+      val keptIds =
+        if (dupOfKept.isEmpty && losers.isEmpty) None // the whole batch is kept
+        else Some(hold(dropDups(dropLosers(ids.select(col(idCol)))).localCheckpoint()))
+      def keptOnly(df: DataFrame): DataFrame =
+        keptIds.fold(df)(k => df.join(bc(k), Seq(idCol), "left_semi"))
+      // exactly-once write order: kept rows → state changelog → the
+      // sink's marker, every write an overwrite of a per-batch directory
+      val nKept = keptIds.fold(nBatch)(_.count())
+      if (nKept > 0)
+        keptOnly(batch.select(keptCols.map(col): _*))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$keptPath/batch_id=$batchId")
+      faultPoint("after-kept")
+      state.append(batchId,
+        stateRows(ids, banded).map { case (t, df) => t -> keptOnly(df) })
+      faultPoint("after-state")
+      nKept
+    } finally held.foreach(release)
+  }
+
+  /** Streaming MinHash near-dup INGEST dedup, the stream shape of the
     * corpus dedup an LLM pipeline runs at ingestion time: documents
     * arrive in micro-batches, and a document is kept iff it is not a
-    * near-duplicate (verified Jaccard >= `threshold`) of any PREVIOUSLY
-    * KEPT document, nor a loser inside its own batch's near-dup clusters
-    * (min doc_id wins per cluster).
+    * near-duplicate (verified Jaccard >= `threshold`) of any previously
+    * kept document, nor a loser inside its own batch's near-dup clusters
+    * (min doc_id wins per cluster): the policy of
+    * [[graft.ext.DedupOps.incrIngestDedup]].
     *
-    * Per micro-batch, using the SAME building blocks as the batch path:
-    * shingle the batch (one projection), band it (32x4 MinHash LSH),
-    * equi-join bands against the kept-document band STATE
-    * ([[KeyedStreamState]] — keyed state kept as a parquet changelog)
-    * for cross-batch candidates, verify candidates only
-    * (candidate-driven inverted-index Jaccard over the batch shingles
-    * plus the CANDIDATE kept docs' shingles — semi-join scoped, so
-    * verification work tracks candidate volume, not state size), then
-    * cluster the surviving batch's internal pairs (large-star/small-star)
-    * and keep each cluster's min id. Kept docs append their (doc_id,
-    * text) to the kept sink and their shingles + bands to the state.
+    * Each micro-batch runs [[ingestStep]] with the batch path's building
+    * blocks: the batch is shingled and banded (32×4 MinHash LSH), its
+    * bands join the kept documents' band state, and a counting Jaccard
+    * verifies the candidates over the batch's shingles and the candidate
+    * kept documents' shingles only, so verification tracks candidate
+    * volume, not state size. State: (bands, shingles).
     *
     * A quality or safety gate composes ahead of the sink
     * (`runMinhashDedupStream(TextOps.gopherPrefilter(docs), …)`): a
@@ -1082,204 +1233,65 @@ object StreamingOps {
     start(docs, checkpointDir, keptPath)(
       minhashSink(statePath, keptPath, threshold, _))
 
-  /** The MinHash stream's [[ExactlyOnceSink]]: kept docs land in the
-    * `batch_id=<b>` directory [after-kept], the band/shingle state
-    * increment is appended [after-state], and the kept count is
-    * committed. The state is stamped with the MinHash permutation family
+  /** The MinHash stream's [[ingestSink]]. The shingle and band frames are
+    * persisted: the count materializes the shingles, and the first band
+    * join the 128-perm signatures, the dominant cost. The counting
+    * Jaccard counts intersection rows per (doc_a, doc_b), so both its
+    * candidate frames keep their distinct(): a pair colliding in k bands
+    * would count its shingles k times. A doc too short to shingle (< 3
+    * tokens) has no band rows, so it can never be a candidate; it is kept
+    * without state rows, which keeps the two tables' emptiness equal. The
+    * state is stamped with the MinHash permutation family
     * ([[graft.functions.MinHashSignature.SchemeId]]) its band keys were
     * computed under, and a state from another family is refused. */
   private[streaming] def minhashSink(
       statePath: String, keptPath: String, threshold: Double,
-      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
-    new ExactlyOnceSink(keptPath, Some(KeyedStreamState.Layout(statePath,
-        Seq("bands", "shingles"), Some(graft.functions.MinHashSignature.SchemeId))),
-        epoch, faultPoint)(
-        (batch, batchId, sink) =>
-      if (batch.isEmpty) None
-      else Some(Array(minhashDedupBatch(batch, batchId, sink.state, keptPath,
-        threshold, faultPoint))))
-
-  /** One MinHash micro-batch: writes the kept docs and the state
-    * increment, returns the kept count. */
-  private[streaming] def minhashDedupBatch(
-      batch: DataFrame, batchId: Long, state: KeyedStreamState,
-      keptPath: String, threshold: Double,
-      faultPoint: String => Unit): Long = {
+      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
     import graft.ext.DedupOps
-    val sh = DedupOps.shingleFrame(batch.select(col("doc_id"), col("text"))).persist()
-    // bands persist too: the 128-perm signature pass is the dominant cost
-    // of the MinHash path, and bands feed the state join, the in-batch
-    // self-join (both sides), and the state append
-    val bands = DedupOps.bandFrame(sh).persist()
-    // one count up front serves the broadcast gate, the hot-key gate,
-    // and the kept-count fallback (it also materializes the persists)
-    val nBatch = sh.count()
-    // batch-sized join sides broadcast only in the normal micro-batch
-    // regime — a jumbo catch-up batch takes the shuffle plan instead.
-    // The cap is calibrated for ONE-row-per-doc frames; the band frame
-    // carries Bands (32) rows per doc, so it gets its own gate on the
-    // banded row count — a cap-sized catch-up batch must not push ~6.4M
-    // band rows through the driver to every executor
-    def bc(df: DataFrame): DataFrame =
-      if (nBatch <= StreamBroadcastCap) broadcast(df) else df
-    def bcBands(df: DataFrame): DataFrame =
-      if (nBatch * DedupOps.Bands <= StreamBroadcastCap) broadcast(df) else df
-    var keptIds: DataFrame = null
-    var labels: DataFrame = null
-    // per-batch local checkpoints released at batch end (a long-running
-    // stream must not strand blocks per micro-batch)
-    val scratch = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // r10: the same per-batch fixed-cost surgery the emb processor got in
-    // r7 — micro-batch join sides broadcast (the state side streams
-    // through as a scan, no exchange), empty fast paths for the
-    // no-dup common case, and the hot-key guard gated on batch size. ONE
-    // deliberate difference from the emb path: every candidate-pair frame
-    // keeps its distinct() — jaccardForCandidates COUNTS intersection
-    // rows per (doc_a, doc_b), so duplicate candidate pairs would inflate
-    // `inter` and misreport jaccard (the emb path's per-row dot product
-    // tolerates repeats; a counting verifier does not).
-    try {
-      // cross-batch: batch docs banded-matching any KEPT doc -> verify.
-      // localCheckpointed (it is doc_ids only): every downstream frame —
-      // fresh, freshBands, the in-batch candidate self-join, keptIds —
-      // references it, and as a lazy tree each downstream ACTION would
-      // re-run the state join + verification AND re-optimize the whole
-      // union-of-checkpoints tree (measured ~3 s of re-planning +
-      // re-execution per action, ~6 references per batch)
-      val dupOfKept: DataFrame =
-        if (state.isEmpty) null
-        else {
-          val cand = bcBands(bands).as("x").join(state.table("bands").as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.band_key") === col("y.band_key"))
-            .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-            .distinct()
-            .localCheckpoint()
-          scratch += cand
-          if (cand.isEmpty) null
+    def verified(shingled: DataFrame, cand: DataFrame): DataFrame =
+      DedupOps.jaccardForCandidates(shingled, cand).filter(col("jaccard") >= threshold)
+    ingestSink(keptPath, KeyedStreamState.Layout(statePath, Seq("bands", "shingles"),
+        Some(graft.functions.MinHashSignature.SchemeId)), epoch, faultPoint,
+      NearDupIngest(idCol = "doc_id", keptCols = Seq("doc_id", "text"),
+        bandCols = Seq("band", "band_key"), hotKeyCap = DedupOps.MinHashBandDfCap,
+        bandRowsPerId = DedupOps.Bands,
+        frames = (batch, hold) => {
+          val sh = hold(DedupOps.shingleFrame(
+            batch.select(col("doc_id"), col("text"))).persist())
+          (sh, hold(DedupOps.bandFrame(sh).persist()))
+        },
+        crossBatch = (cand, b) => {
+          val c = b.hold(cand.distinct().localCheckpoint())
+          if (c.isEmpty) None
           else {
-            // only the CANDIDATE kept docs' shingles enter verification —
-            // without the semi-join the inverted-index explode is O(state)
-            // per batch even when nothing matches
-            val candSh = state.table("shingles").join(
-              bc(cand.select(col("doc_b").as("doc_id")).distinct()),
+            // only the candidate kept docs' shingles enter verification
+            val candSh = b.state.table("shingles").join(
+              b.bc(c.select(col("doc_b").as("doc_id")).distinct()),
               Seq("doc_id"), "left_semi")
-            val d = DedupOps.jaccardForCandidates(sh.unionAll(candSh), cand)
-              .filter(col("jaccard") >= threshold)
-              .select(col("doc_a").as("doc_id")).distinct()
-              .localCheckpoint()
-            scratch += d
-            if (d.isEmpty) null else d
+            Some(verified(b.ids.unionAll(candSh), c)
+              .select(col("doc_a").as("doc_id")).distinct())
           }
-        }
-      def dropDups(df: DataFrame): DataFrame =
-        if (dupOfKept == null) df
-        else df.join(bc(dupOfKept), Seq("doc_id"), "left_anti")
-      val fresh = dropDups(sh)
-      // within-batch: cluster the surviving docs' near-dup pairs, min wins.
-      // Survivors' bands come from an anti-join on the ALREADY-computed
-      // band frame — re-running bandFrame(fresh) would recompute every
-      // signature. The self-join carries the same hot-key guard as the
-      // batch path (DedupOps.subSaltHotKeys): a batch of boilerplate docs
-      // sharing one signature must not emit m² in-batch candidates — but
-      // the guard's count-aggregate + broadcast-back only engage when the
-      // batch itself could exceed the band-df cap (the emb gate). (The
-      // cross-batch join above is m_batch × m_state per degenerate key —
-      // linear in the batch, and kept-state holds at most ~ceil(m/cap)
-      // members of a degenerate group ever: the group's FIRST batch
-      // collapses it to its per-shard keepers, and every later arrival
-      // is dropped as a dup-of-kept before reaching the state appends.)
-      val freshBands =
-        if (nBatch <= DedupOps.MinHashBandDfCap)
-          dropDups(bands).withColumn("shard", lit(0L))
-        else DedupOps.subSaltHotKeys(
-          dropDups(bands), "doc_id", DedupOps.MinHashBandDfCap)
-      val inBatchCand = freshBands.as("x").join(freshBands.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_key") === col("y.band_key") &&
-            col("x.shard") === col("y.shard") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-      // checkpointed: connectedComponents takes a convergence signature
-      // AND runs round 1 over its input — a lazy pair tree would execute
-      // the in-batch Jaccard verification twice
-      val inBatchPairs = DedupOps.jaccardForCandidates(fresh, inBatchCand)
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-      scratch += inBatchPairs
-      val losers =
-        if (inBatchPairs.isEmpty) null
-        else {
-          labels = DedupOps.connectedComponents(inBatchPairs)
-          labels.filter(col("doc_id") =!= col("label"))
-            .select(col("doc_id"))
-        }
-      keptIds =
-        if (dupOfKept == null && losers == null) null // whole batch kept
-        else {
-          val k0 = fresh.select(col("doc_id"))
-          val k = (if (losers == null) k0
-                   else k0.join(bc(losers), Seq("doc_id"), "left_anti"))
-            .localCheckpoint()
-          scratch += k
-          k
-        }
-      def keptOnly(df: DataFrame): DataFrame =
-        if (keptIds == null) df
-        else df.join(bc(keptIds), Seq("doc_id"), "left_semi")
-      // exactly-once write order: kept (per-batch dir, overwrite) → state
-      // changelog (per-batch dirs, overwrite) → marker (atomic, LAST).
-      // A batch that keeps nothing writes no kept directory — absence is
-      // deterministic, so replay converges on it too.
-      val nKept = if (keptIds == null) nBatch else keptIds.count()
-      if (nKept > 0) {
-        keptOnly(batch.select(col("doc_id"), col("text")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$keptPath/batch_id=$batchId")
-      }
-      faultPoint("after-kept")
-      // state holds only BANDED docs: a doc too short to shingle (< 3
-      // tokens) emits no band rows, can never surface as a candidate
-      // (candidates come from band joins; verification shingles are
-      // candidate-scoped), and must not enter the shingles table — a
-      // kept-but-unbandable doc would otherwise append a non-empty
-      // shingles increment beside an empty bands one and trip append's
-      // emptiness invariant (tables cover the same docs ⟺ the invariant
-      // holds)
-      state.append(batchId, Map(
-        "bands" -> keptOnly(bands),
-        "shingles" -> keptOnly(sh.filter(size(col("sh")) > 0))))
-      faultPoint("after-state")
-      nKept
-    } finally {
-      sh.unpersist()
-      bands.unpersist()
-      // the per-batch component labels are a local checkpoint — release
-      // its blocks or a long-running stream strands one per micro-batch
-      if (labels != null)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(labels)
-      scratch.foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(_))
-    }
+        },
+        inBatch = (cand, fresh, _) =>
+          verified(fresh, cand.distinct()).select(col("doc_a"), col("doc_b")),
+        stateRows = (sh, bands) =>
+          Map("bands" -> bands, "shingles" -> sh.filter(size(col("sh")) > 0))))
   }
 
-  /** Streaming EMBEDDING near-dup ingest dedup — the vector-space
-    * sibling of [[runMinhashDedupStream]]: vectors arrive in
-    * micro-batches, and a vector is kept iff its cosine to every
-    * PREVIOUSLY KEPT vector is below `threshold` and it is not a loser
-    * of its own batch's near-dup clusters (min vec_id wins). Candidates
-    * come from the production-regime hyperplane LSH banding
-    * ([[graft.ext.SimilarityOps.embLshNearDupHi]]'s 32×8 operating
-    * point — the SAME seeded hyperplane matrix as the batch path, so a
-    * streamed corpus and its batch replay band identically); only
-    * banded candidates pay exact cosine verification, scoped by
-    * semi-join to the candidate kept vectors.
+  /** Streaming EMBEDDING near-dup ingest dedup, the vector-space sibling
+    * of [[runMinhashDedupStream]]: vectors arrive in micro-batches, and a
+    * vector is kept iff its cosine to every previously kept vector is
+    * below `threshold` and it is not a loser of its own batch's near-dup
+    * clusters (min vec_id wins): the policy of
+    * [[graft.ext.SimilarityOps.incrIngestSemDedup]].
     *
-    * State = [[KeyedStreamState]] with (bands, units) tables — the same
-    * LSM increments + changelog + restart bootstrap as the MinHash
-    * stream; the hot-key guard on the in-batch self-join is the batch
-    * family's subSaltHotKeys.
+    * Each micro-batch runs [[ingestStep]]. Candidates come from the
+    * production hyperplane LSH banding
+    * ([[graft.ext.SimilarityOps.embLshNearDupHi]]'s 32×8 operating point,
+    * the same seeded hyperplane matrix as the batch path, so a streamed
+    * corpus and its batch replay band identically); only banded
+    * candidates pay an exact cosine, and only the candidate kept vectors'
+    * units are read. State: (bands, units).
     *
     * @param vectors streaming frame with (vec_id, embedding)
     * @return the started query; kept vectors land in per-batch
@@ -1296,207 +1308,68 @@ object StreamingOps {
     start(vectors, checkpointDir, keptPath)(
       embSink(statePath, keptPath, threshold, bands, rowsPerBand, seed, _))
 
-  /** The embedding stream's [[ExactlyOnceSink]] — the MinHash sink's
-    * write order over (bands, units) state tables. The hyperplane matrix
-    * is built on the first non-empty batch, from its dimension. */
+  /** The embedding stream's [[ingestSink]]. The hyperplane matrix is
+    * built on the first non-empty batch, from its dimension. The unit and
+    * band frames are local-checkpointed, not persisted: banding is a
+    * large expression tree (bands × rowsPerBand hyperplane dots), which
+    * every consumer of a persisted frame would re-run Catalyst over,
+    * while a checkpoint is a leaf planned once. Verification is an exact
+    * dot of unit vectors, joined by id to both sides of each pair; no
+    * candidate frame is distinct()ed, since a repeated pair only costs a
+    * repeated dot. */
   private[streaming] def embSink(
       statePath: String, keptPath: String, threshold: Double,
       bands: Int, rowsPerBand: Int, seed: Long,
       epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
+    import graft.ext.SimilarityOps
+    def unitsAs(units: DataFrame, side: String): DataFrame =
+      units.select(col("vec_id").as(s"doc_$side"), col("unit").as(s"u_$side"))
+    def verified(pairs: DataFrame): DataFrame = pairs.filter(
+      graft.functions.VectorFunctions.vecDot(col("u_a"), col("u_b")) >= threshold)
     var hps: Array[Array[Double]] = null
-    new ExactlyOnceSink(keptPath,
-        Some(KeyedStreamState.Layout(statePath, Seq("bands", "units"))),
-        epoch, faultPoint)((batch, batchId, sink) =>
-      if (batch.isEmpty) None
-      else {
-        if (hps == null) {
-          // dimension probe — one O(1) driver action on the first batch
-          val dim = batch.select(size(col("embedding"))).head().getInt(0)
-          hps = graft.ext.SimilarityOps.hyperplaneMatrix(
-            dim, bands, rowsPerBand, seed)
-        }
-        Some(Array(embDedupBatch(batch, batchId, sink.state, keptPath,
-          threshold, hps, bands, rowsPerBand, faultPoint)))
-      })
+    ingestSink(keptPath, KeyedStreamState.Layout(statePath, Seq("bands", "units")),
+        epoch, faultPoint,
+      NearDupIngest(idCol = "vec_id", keptCols = Seq("vec_id", "embedding"),
+        bandCols = Seq("band", "band_key"), hotKeyCap = SimilarityOps.EmbLshBandDfCap,
+        bandRowsPerId = bands,
+        frames = (batch, hold) => {
+          if (hps == null) {
+            val dim = batch.select(size(col("embedding"))).head().getInt(0)
+            hps = SimilarityOps.hyperplaneMatrix(dim, bands, rowsPerBand, seed)
+          }
+          val units = hold(SimilarityOps.unitize(
+            batch.select(col("vec_id"), col("embedding"))).localCheckpoint())
+          (units, hold(SimilarityOps.hyperplaneBandFrame(
+            units, hps, bands, rowsPerBand).localCheckpoint()))
+        },
+        crossBatch = (cand, b) => Some(verified(
+            unitsAs(b.state.table("units"), "b")
+              .join(b.bc(cand), "doc_b")
+              .join(b.bc(unitsAs(b.ids, "a")), "doc_a"))
+          .select(col("doc_a").as("vec_id"))),
+        inBatch = (cand, fresh, bc) => verified(cand
+            .join(bc(unitsAs(fresh, "a")), "doc_a")
+            .join(bc(unitsAs(fresh, "b")), "doc_b"))
+          .select(col("doc_a"), col("doc_b")),
+        stateRows = (units, banded) =>
+          Map("bands" -> banded, "units" -> units.select(col("vec_id"), col("unit")))))
   }
 
-  /** One embedding micro-batch: writes the kept vectors and the state
-    * increment, returns the kept count. */
-  private[streaming] def embDedupBatch(
-      batch: DataFrame, batchId: Long, state: KeyedStreamState,
-      keptPath: String, threshold: Double, hps: Array[Array[Double]],
-      bands: Int, rowsPerBand: Int,
-      faultPoint: String => Unit): Long = {
-    import graft.ext.{DedupOps, SimilarityOps}
-    // localCheckpoint, NOT persist: the banding projection is a large
-    // expression tree (bands × rowsPerBand hyperplane dots over the
-    // embedding array), and a persisted frame's consumers each re-run
-    // Catalyst over the FULL tree before cache substitution — measured
-    // ~2.3 s/batch of driver-side planning gaps against ~1.8 s of actual
-    // job time with ~8 consumers per batch. A checkpointed frame is a
-    // LogicalRDD leaf: the tree is analyzed, optimized, and codegen'd
-    // exactly once per batch.
-    val units = SimilarityOps.unitize(
-      batch.select(col("vec_id"), col("embedding"))).localCheckpoint()
-    val banded = SimilarityOps.hyperplaneBandFrame(
-      units, hps, bands, rowsPerBand).localCheckpoint()
-    // one count up front serves the broadcast gate, the hot-key gate,
-    // and the kept-count fallback
-    val nBatch = units.count()
-    // batch-sized join sides broadcast only in the normal micro-batch
-    // regime -- a jumbo catch-up batch takes the shuffle plan instead
-    def bc(df: DataFrame): DataFrame =
-      if (nBatch <= StreamBroadcastCap) broadcast(df) else df
-    def dot(a: org.apache.spark.sql.Column,
-        b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      graft.functions.VectorFunctions.vecDot(a, b)
-    var keptIds: DataFrame = null
-    var labels: DataFrame = null
-    val scratch = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // Per-batch cost is dominated by DRIVER-SIDE fixed overhead — each
-    // action is a job (scheduling + planning + a 32-task shuffle round
-    // even on 400-row frames), and the r6 shape paid ~12 of them per
-    // batch (measured ~3 s/batch at sf0.1 with ZERO duplicates found).
-    // Three cuts applied here, all semantics-preserving:
-    //  1. the batch side of every join is micro-batch-sized — broadcast
-    //     it, so candidate generation/verification plans as broadcast
-    //     joins (no exchange stages) while the STATE side still only
-    //     streams through as a scan;
-    //  2. the cross-batch candidate frame is consumed inside one action
-    //     (no separate cand checkpoint);
-    //  3. empty fast paths: an ingest batch with no cross-batch dups
-    //     and/or no in-batch pairs (the common case for fresh content)
-    //     skips the anti-joins, the connected-components rounds, and the
-    //     kept-side semi-joins entirely — isEmpty on an already
-    //     checkpointed frame is one cheap block-scan head().
-    try {
-      // cross-batch: batch vectors banding with any KEPT vector → verify
-      val dupOfKept =
-        if (state.isEmpty) null
-        else {
-          // no distinct() anywhere on this path: a pair colliding in k
-          // bands is verified k times (dots are cheap; collisions are
-          // band-bounded) and duplicate vec_ids in the result are
-          // harmless to BOTH consumers (left_anti ignores right-side
-          // duplicates, isEmpty doesn't count) — while each distinct()
-          // was a full shuffle + an extra stage in every micro-batch
-          val cand = banded.as("x").join(state.table("bands").as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.band_key") === col("y.band_key"))
-            .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-          // verification scoped to the CANDIDATE kept vectors: the state
-          // side is pruned by the (broadcast) candidate ids, so work
-          // tracks candidate volume, not state size
-          val d = state.table("units").select(
-              col("vec_id").as("vec_b"), col("unit").as("u_b"))
-            .join(bc(cand), "vec_b")
-            .join(bc(units.select(
-              col("vec_id").as("vec_a"), col("unit").as("u_a"))), "vec_a")
-            .filter(dot(col("u_a"), col("u_b")) >= threshold)
-            .select(col("vec_a").as("vec_id"))
-            .localCheckpoint()
-          scratch += d
-          if (d.isEmpty) null else d
-        }
-      // dupOfKept can hold up to `bands` rows per vec (multi-band
-      // collisions verified k times, no distinct — see above), so its
-      // broadcast gate uses the band-multiplied bound, not the vec count
-      def dropDups(df: DataFrame): DataFrame =
-        if (dupOfKept == null) df
-        else df.join(
-          if (nBatch * bands <= StreamBroadcastCap) broadcast(dupOfKept)
-          else dupOfKept,
-          Seq("vec_id"), "left_anti")
-      val freshUnits = dropDups(units)
-      // the in-batch hot-key guard can only bind when the batch itself
-      // exceeds the band-df cap — for smaller batches (the normal
-      // micro-batch regime) its count-aggregate + broadcast-back are a
-      // per-batch no-op tax; one cheap count on the checkpointed units
-      // decides. Degenerate jumbo batches still get the full guard.
-      val freshBands =
-        if (nBatch <= SimilarityOps.EmbLshBandDfCap)
-          dropDups(banded).withColumn("shard", lit(0L))
-        else DedupOps.subSaltHotKeys(
-          dropDups(banded), "vec_id", SimilarityOps.EmbLshBandDfCap)
-      // as above: no distinct — connectedComponents distincts its edge
-      // input, so multi-band collisions only cost repeat (cheap) dots
-      val inBatchCand = freshBands.as("x").join(freshBands.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_key") === col("y.band_key") &&
-            col("x.shard") === col("y.shard") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      val inBatchPairs = inBatchCand
-        .join(bc(freshUnits.select(
-          col("vec_id").as("vec_a"), col("unit").as("u_a"))), "vec_a")
-        .join(bc(freshUnits.select(
-          col("vec_id").as("vec_b"), col("unit").as("u_b"))), "vec_b")
-        .filter(dot(col("u_a"), col("u_b")) >= threshold)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-        .localCheckpoint()
-      scratch += inBatchPairs
-      val losers =
-        if (inBatchPairs.isEmpty) null
-        else {
-          labels = DedupOps.connectedComponents(inBatchPairs)
-          labels.filter(col("doc_id") =!= col("label"))
-            .select(col("doc_id").as("vec_id"))
-        }
-      def dropLosers(df: DataFrame): DataFrame =
-        if (losers == null) df
-        else df.join(bc(losers), Seq("vec_id"), "left_anti")
-      keptIds =
-        if (dupOfKept == null && losers == null) null // whole batch kept
-        else {
-          val k = dropDups(dropLosers(units.select(col("vec_id"))))
-            .localCheckpoint()
-          scratch += k; k
-        }
-      def keptOnly(df: DataFrame): DataFrame =
-        if (keptIds == null) df
-        else df.join(bc(keptIds), Seq("vec_id"), "left_semi")
-      // exactly-once write order: kept → state changelog → marker (LAST);
-      // all per-batch-directory overwrites, as in minhashDedupBatch
-      val nKept = if (keptIds == null) nBatch else keptIds.count()
-      if (nKept > 0) {
-        keptOnly(batch.select(col("vec_id"), col("embedding")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$keptPath/batch_id=$batchId")
-      }
-      faultPoint("after-kept")
-      state.append(batchId, Map(
-        "bands" -> keptOnly(banded),
-        "units" -> keptOnly(units.select(col("vec_id"), col("unit")))))
-      faultPoint("after-state")
-      nKept
-    } finally {
-      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(units)
-      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(banded)
-      if (labels != null)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(labels)
-      scratch.foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(_))
-    }
-  }
-
-  /** Streaming MEDIA ingest dedup — the multimodal sibling of the
-    * MinHash and embedding ingest streams: media blobs arrive in
-    * micro-batches as (doc_id, blob), and a blob is kept iff its 64-bit
-    * DENSE-grid payload dHash
-    * ([[graft.functions.MediaBytes.dhashDense64]] — the production
-    * hash since the r13 promotion, see mediaDedupClusters' decision
-    * note) is more than `maxHamming` bits from every PREVIOUSLY KEPT
-    * blob's hash and it is not a loser of its own batch's near-dup
-    * clusters (min doc_id wins). Candidates come from the production
-    * operating point of the batch row
-    * ([[graft.ext.JsonMediaOps.mediaNearDupDense]] — the same hash and
-    * banding constants, so stream and batch cannot fork).
+  /** Streaming MEDIA ingest dedup, the multimodal sibling of the MinHash
+    * and embedding ingest streams: media blobs arrive in micro-batches as
+    * (doc_id, blob), and a blob is kept iff its 64-bit dense-grid payload
+    * dHash ([[graft.functions.MediaBytes.dhashDense64]]) is more than
+    * `maxHamming` bits from every previously kept blob's hash and it is
+    * not a loser of its own batch's near-dup clusters (min doc_id wins).
     *
-    * SIMPLER state than both siblings: the banded frame carries the
-    * full signature, so verification is an inline bit_count on the band
-    * join itself — ONE state table, no second verify join, no shingle /
-    * unit tables. Exactly-once protocol identical (per-batch overwrite
-    * dirs, marker last, epoch-scoped ids, commit-filtered bootstrap,
-    * state + output compaction). */
+    * Each micro-batch runs [[ingestStep]]. Candidates come from the
+    * batch row's operating point ([[graft.ext.JsonMediaOps.mediaNearDupDense]]:
+    * the same hash and banding constants, so stream and batch cannot
+    * fork). State: one `bands` table whose rows carry the full hash.
+    *
+    * @param docs streaming frame with (doc_id, blob)
+    * @return the started query; kept blobs land in per-batch directories
+    *         under `keptPath` — read via [[committedKept]] */
   def runMediaDedupStream(
       docs: DataFrame,
       statePath: String,
@@ -1507,122 +1380,32 @@ object StreamingOps {
     start(docs, checkpointDir, keptPath)(
       mediaSink(statePath, keptPath, maxHamming, _))
 
-  /** The media stream's [[ExactlyOnceSink]] — the MinHash sink's write
-    * order over one `bands` state table. */
+  /** The media stream's [[ingestSink]]. One codegen'd scan computes the
+    * dHash, and the banded frame, local-checkpointed, is the only
+    * per-batch frame: every doc has one row per band with the hash
+    * riding along, so band 0 is the per-id frame, and verification is
+    * an inline `bit_count` in the band joins' own condition. */
   private[streaming] def mediaSink(
       statePath: String, keptPath: String, maxHamming: Int,
-      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink =
-    new ExactlyOnceSink(keptPath,
-        Some(KeyedStreamState.Layout(statePath, Seq("bands"))), epoch,
-        faultPoint)((batch, batchId, sink) =>
-      if (batch.isEmpty) None
-      else Some(Array(mediaDedupBatch(batch, batchId, sink.state, keptPath,
-        maxHamming, faultPoint))))
-
-  /** One media micro-batch: writes the kept blobs and the state
-    * increment, returns the kept count. */
-  private[streaming] def mediaDedupBatch(
-      batch: DataFrame, batchId: Long, state: KeyedStreamState,
-      keptPath: String, maxHamming: Int,
-      faultPoint: String => Unit): Long = {
+      epoch: Long = 0L, faultPoint: String => Unit = _ => ()): ExactlyOnceSink = {
     import graft.ext.{DedupOps, JsonMediaOps}
-    // one codegen'd scan computes the dHash; the banded frame (3 rows
-    // per doc at the production point, signature riding along) is the
-    // ONLY per-batch frame — localCheckpoint so its ~6 consumers plan
-    // once (the embDedupBatch rationale)
-    val banded = DedupOps.hammingBands(
-      batch.select(col("doc_id"),
-        graft.functions.MediaFunctions.mediaDhashDense(col("blob")).as("phash")),
-      "phash", nBands = JsonMediaOps.MediaBandsDense,
-      cover = JsonMediaOps.MediaBandCoverDense).localCheckpoint()
-    val nBatch = banded.count() / JsonMediaOps.MediaBandsDense
-    // broadcast gates sized on what actually crosses the driver: the
-    // banded frame carries MediaBandsDense rows per doc
-    def bc(df: DataFrame): DataFrame =
-      if (nBatch <= StreamBroadcastCap) broadcast(df) else df
-    def bcBands(df: DataFrame): DataFrame =
-      if (nBatch * JsonMediaOps.MediaBandsDense <= StreamBroadcastCap)
-        broadcast(df) else df
-    def ham(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      bit_count(x.bitwiseXOR(y)) <= maxHamming
-    var keptIds: DataFrame = null
-    var labels: DataFrame = null
-    val scratch = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    try {
-      // cross-batch: verification is INLINE — the band frames carry the
-      // signatures, so the join condition is the whole near-dup test
-      // (duplicate doc_ids from multi-band agreement are harmless to
-      // left_anti / isEmpty, the no-distinct discipline)
-      val dupOfKept =
-        if (state.isEmpty) null
-        else {
-          val d = bcBands(banded).as("x")
-            .join(state.table("bands").as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.band_bits") === col("y.band_bits") &&
-                ham(col("x.phash"), col("y.phash")))
-            .select(col("x.doc_id"))
-            .localCheckpoint()
-          scratch += d
-          if (d.isEmpty) null else d
-        }
-      // dupOfKept can hold up to MediaBandsDense rows per doc (multi-band
-      // agreement, no distinct — the no-distinct discipline), so its
-      // broadcast gate is the band-multiplied bound, not the doc count
-      def dropDups(df: DataFrame): DataFrame =
-        if (dupOfKept == null) df
-        else df.join(bcBands(dupOfKept), Seq("doc_id"), "left_anti")
-      // in-batch: banded self-join, hot-key guard gated on batch size
-      val freshBands =
-        if (nBatch <= DedupOps.SimhashBandDfCap)
-          dropDups(banded).withColumn("shard", lit(0L))
-        else DedupOps.subSaltHotKeys(dropDups(banded), "doc_id",
-          DedupOps.SimhashBandDfCap, bandCols = Seq("band", "band_bits"))
-      val inBatchPairs = freshBands.as("x").join(freshBands.as("y"),
-          col("x.band") === col("y.band") &&
-            col("x.band_bits") === col("y.band_bits") &&
-            col("x.shard") === col("y.shard") &&
-            col("x.doc_id") < col("y.doc_id") &&
-            ham(col("x.phash"), col("y.phash")))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .localCheckpoint() // connectedComponents distincts its edges
-      scratch += inBatchPairs
-      val losers =
-        if (inBatchPairs.isEmpty) null
-        else {
-          labels = DedupOps.connectedComponents(inBatchPairs)
-          labels.filter(col("doc_id") =!= col("label"))
-            .select(col("doc_id"))
-        }
-      def dropLosers(df: DataFrame): DataFrame =
-        if (losers == null) df
-        else df.join(bc(losers), Seq("doc_id"), "left_anti")
-      keptIds =
-        if (dupOfKept == null && losers == null) null // whole batch kept
-        else {
-          val k = dropDups(dropLosers(
-            banded.select(col("doc_id")).distinct())).localCheckpoint()
-          scratch += k; k
-        }
-      def keptOnly(df: DataFrame): DataFrame =
-        if (keptIds == null) df
-        else df.join(bc(keptIds), Seq("doc_id"), "left_semi")
-      // exactly-once write order: kept → state changelog → marker (LAST)
-      val nKept = if (keptIds == null) nBatch else keptIds.count()
-      if (nKept > 0) {
-        keptOnly(batch.select(col("doc_id"), col("blob")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$keptPath/batch_id=$batchId")
-      }
-      faultPoint("after-kept")
-      state.append(batchId, Map("bands" -> keptOnly(banded)))
-      faultPoint("after-state")
-      nKept
-    } finally {
-      org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(banded)
-      if (labels != null)
-        org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(labels)
-      scratch.foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint(_))
-    }
+    ingestSink(keptPath, KeyedStreamState.Layout(statePath, Seq("bands")),
+        epoch, faultPoint,
+      NearDupIngest(idCol = "doc_id", keptCols = Seq("doc_id", "blob"),
+        bandCols = Seq("band", "band_bits"), hotKeyCap = DedupOps.SimhashBandDfCap,
+        bandRowsPerId = JsonMediaOps.MediaBandsDense,
+        frames = (batch, hold) => {
+          val banded = hold(DedupOps.hammingBands(
+            batch.select(col("doc_id"),
+              graft.functions.MediaFunctions.mediaDhashDense(col("blob")).as("phash")),
+            "phash", nBands = JsonMediaOps.MediaBandsDense,
+            cover = JsonMediaOps.MediaBandCoverDense).localCheckpoint())
+          (banded.filter(col("band") === 0), banded)
+        },
+        crossBatch = (cand, _) => Some(cand.select(col("doc_a").as("doc_id"))),
+        inBatch = (cand, _, _) => cand,
+        stateRows = (_, banded) => Map("bands" -> banded),
+        pairCond = (x, y) =>
+          bit_count(col(s"$x.phash").bitwiseXOR(col(s"$y.phash"))) <= maxHamming))
   }
 }
