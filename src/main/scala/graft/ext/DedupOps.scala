@@ -507,9 +507,12 @@ object DedupOps {
   /** INCREMENTAL-ingest near-dup dedup — the batch face of the daily
     * delta an LLM pipeline actually runs at 100 TB: the accepted corpus
     * (`base`) is never re-deduped against itself; only the new batch
-    * (`incr`) pays work. Verdict per increment doc, mirroring
-    * [[graft.streaming.StreamingOps.runMinhashDedupStream]]'s policy
-    * EXACTLY (the batch/stream equivalence is spec-asserted):
+    * (`incr`) pays work. Verdict per increment doc, the policy of the
+    * MinHash ingest stream
+    * ([[graft.streaming.StreamingOps.runMinhashDedupStream]]) EXACTLY;
+    * StreamingOpsSpec checks that the stream keeps what this function
+    * keeps, both below the hot-key cap and above it, where both salt
+    * the in-batch self-join with the same shards:
     *
     *  - `dropped_base`: verified near-dup (Jaccard >= `threshold`) of ANY
     *    base doc; `dup_of` = the smallest such base id;

@@ -719,7 +719,7 @@ object SimilarityOps {
     val (_, _, assigned) = kmeansRun(spark, sfDir, KmeansK, KmeansRounds)
     // score on the shared unit frame — the SAME cosine evaluation order
     // (fdot of unit vectors) as the exact semDedup pair stage
-    // (embNearDup) and the streaming embDedupBatch, so the "clustered
+    // (embNearDup) and the embedding ingest stream, so the "clustered
     // pairs ⊆ exact pairs" refinement ExtOpsSpec asserts holds
     // structurally, not just empirically: a threshold-boundary pair
     // cannot land on different sides of 0.8 from a 1-ulp difference in
@@ -1323,11 +1323,9 @@ object SimilarityOps {
   val IncrSemIngestMod = 2
 
   /** INCREMENTAL-ingest SEMANTIC dedup — the embedding face of
-    * [[graft.ext.DedupOps.incrIngestDedup]], completing the
-    * incremental family across modalities (text MinHash: the batch row +
-    * ingest stream; media dHash: the ingest stream; embeddings: the
-    * streaming [[graft.streaming.StreamingOps.runEmbDedupStream]]
-    * processor and now its oracle-checkable batch face). The accepted
+    * [[graft.ext.DedupOps.incrIngestDedup]] and the batch policy of the
+    * embedding ingest stream
+    * ([[graft.streaming.StreamingOps.runEmbDedupStream]]). The accepted
     * corpus (`base`) is never re-paired with itself; verdict per
     * increment vector, the stream's policy EXACTLY:
     *
@@ -1342,11 +1340,10 @@ object SimilarityOps {
     * whole verdict table is oracle-replayable at the 0.47 threshold
     * where harness pairs exist — the registered division of labor of
     * this family (emb_near_dup exact at 0.47 vs emb_lsh_near_dup_hi
-    * banded at 0.8). At the 0.8 production point the cross stage's
-    * candidates come from the hyperplane band INDEX instead — that
-    * incremental state machine is implemented and crash-tested in the
-    * streaming processor; the batch≡stream law ties this row's policy
-    * to it on planted geometry.
+    * banded at 0.8). At the 0.8 production point the stream takes its
+    * cross-stage candidates from the hyperplane band state instead, and
+    * StreamingOpsSpec checks that it keeps what this function keeps on
+    * planted geometry.
     *
     * Cross-stage plan: the BATCH side replicates across `crossBlocks`
     * base blocks and meets the base in one equi-join on the block id —

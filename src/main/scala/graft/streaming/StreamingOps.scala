@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * for the taxi stream, [[KeyedStreamState]] tables for the ingest
   * streams. A [[CommitLog]] beside the output makes each batch visible
   * exactly once under crash and replay. State lookups are joins against
-  * that parquet, so no driver-side HashSet holds the keys.
+  * that parquet, so no driver-side HashSet holds the keys. The three
+  * ingest streams run one per-batch near-dup step ([[ingestStep]]); each
+  * passes in only what differs ([[NearDupIngest]]).
   */
 object StreamingOps {
 
@@ -1084,11 +1086,12 @@ object StreamingOps {
       pairCond: (String, String) => Column = (_, _) => lit(true))
 
   /** A micro-batch as a cross-batch verification reads it: the per-id
-    * frame, the keyed state, the broadcast gate of batch-sized frames and
-    * the release registrar. */
+    * frame, the keyed state, the broadcast gate of batch-sized frames,
+    * and `checkpointed`, which local-checkpoints a frame until the batch
+    * ends and returns None when it has no rows. */
   private[streaming] final class IngestBatch(val ids: DataFrame,
       val state: KeyedStreamState, val bc: DataFrame => DataFrame,
-      val hold: DataFrame => DataFrame)
+      val checkpointed: DataFrame => Option[DataFrame])
 
   /** An [[ExactlyOnceSink]] that runs [[ingestStep]] on every non-empty
     * micro-batch and commits its kept count. */
@@ -1158,21 +1161,21 @@ object StreamingOps {
             bandCols.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
               cond && pairCond("x", "y"))
           .select(col(s"x.$idCol").as("doc_a"), col(s"y.$idCol").as("doc_b"))
-      def checkpointNonEmpty(df: DataFrame): Option[DataFrame] = {
+      def checkpointed(df: DataFrame): Option[DataFrame] = {
         val c = hold(df.localCheckpoint())
         if (c.isEmpty) None else Some(c)
       }
       val dupOfKept =
         if (state.isEmpty) None
         else crossBatch(bandJoin(bcBands(banded), state.table("bands"), lit(true)),
-          new IngestBatch(ids, state, bc, hold)).flatMap(checkpointNonEmpty)
+          new IngestBatch(ids, state, bc, checkpointed)).flatMap(checkpointed)
       // a verified id can repeat once per colliding band
       def dropDups(df: DataFrame): DataFrame =
         dupOfKept.fold(df)(d => df.join(bcBands(d), Seq(idCol), "left_anti"))
       val freshBands =
         if (nBatch <= hotKeyCap) dropDups(banded).withColumn("shard", lit(0L))
         else DedupOps.subSaltHotKeys(dropDups(banded), idCol, hotKeyCap, bandCols)
-      val inBatchPairs = checkpointNonEmpty(inBatch(
+      val inBatchPairs = checkpointed(inBatch(
         bandJoin(freshBands, freshBands, col("x.shard") === col("y.shard") &&
           col(s"x.$idCol") < col(s"y.$idCol")),
         dropDups(ids), bc))
@@ -1260,17 +1263,12 @@ object StreamingOps {
             batch.select(col("doc_id"), col("text"))).persist())
           (sh, hold(DedupOps.bandFrame(sh).persist()))
         },
-        crossBatch = (cand, b) => {
-          val c = b.hold(cand.distinct().localCheckpoint())
-          if (c.isEmpty) None
-          else {
-            // only the candidate kept docs' shingles enter verification
-            val candSh = b.state.table("shingles").join(
-              b.bc(c.select(col("doc_b").as("doc_id")).distinct()),
-              Seq("doc_id"), "left_semi")
-            Some(verified(b.ids.unionAll(candSh), c)
-              .select(col("doc_a").as("doc_id")).distinct())
-          }
+        crossBatch = (cand, b) => b.checkpointed(cand.distinct()).map { c =>
+          // only the candidate kept docs' shingles enter verification
+          val candSh = b.state.table("shingles").join(
+            b.bc(c.select(col("doc_b").as("doc_id")).distinct()),
+            Seq("doc_id"), "left_semi")
+          verified(b.ids.unionAll(candSh), c).select(col("doc_a").as("doc_id")).distinct()
         },
         inBatch = (cand, fresh, _) =>
           verified(fresh, cand.distinct()).select(col("doc_a"), col("doc_b")),

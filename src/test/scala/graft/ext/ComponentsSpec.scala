@@ -1,9 +1,5 @@
 package graft.ext
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -15,30 +11,6 @@ import graft.SparkSpec
 class ComponentsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  /** Spark jobs `body` starts, counted by job group so no other thread's
-    * jobs are included. */
-  private def jobs(body: => Unit): Int = {
-    val group = s"components-spec-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      body
-      ListenerBus.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
 
   private def labels(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

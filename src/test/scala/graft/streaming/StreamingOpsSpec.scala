@@ -1153,31 +1153,6 @@ class StreamingOpsSpec extends SparkSpec {
     assertExactlyOnce(mediaFixture)
   }
 
-  /** Spark jobs `body` starts, counted by job group so no other thread's
-    * jobs are included (broadcast jobs inherit the group). */
-  private def jobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"streaming-spec-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      body
-      ListenerBus.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("ingest micro-batches run a bounded number of Spark jobs") {
     // jobs per `apply` over the exactly-once fixtures' three batches, on
     // the broadcast, unsalted branch that StreamBench's micro-batches
@@ -1192,7 +1167,6 @@ class StreamingOpsSpec extends SparkSpec {
       val out = tmpDir(s"${fx.name}jobs")
       val sink = fx.sink(s"$out/state", s"$out/kept", _ => ())
       val counts = fx.batches.map { case (b, df) => jobs(sink.apply(df, b)) }
-      println(s"JOBCOUNT ${fx.name} ${counts.mkString(",")}")
       assert(counts.zip(budget).forall { case (n, cap) => n <= cap },
         s"${fx.name} jobs per batch $counts, budget $budget")
       assert(StreamingOps.committedKept(spark, s"$out/kept")
