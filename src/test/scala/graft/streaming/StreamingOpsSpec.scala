@@ -737,7 +737,7 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("media ingest stream keeps what a driver-side brute force over the dense dHash keeps") {
     import graft.functions.MediaBytes
-    import graft.ext.JsonMediaOps.{MediaBandsDense, MediaHammingMaxDense}
+    import graft.ext.JsonMediaOps.{MediaBandCoverDense, MediaBandsDense, MediaHammingMaxDense}
     // the pigeonhole contract of hammingBands: a pair within
     // MediaHammingMaxDense bits disagrees on at most that many of the
     // MediaBandsDense disjoint bands, so it shares one and the stream's
@@ -794,11 +794,18 @@ class StreamingOpsSpec extends SparkSpec {
       inBatchLosers += survivors.size - keepers.size
       kept ++= keepers
     }
-    // the fixture reaches both drop paths and has edits past the threshold
-    val far = batches.flatten.combinations(2).count { case Seq((_, x), (_, y)) =>
-      !near(MediaBytes.dhashDense64(x), MediaBytes.dhashDense64(y)) }
-    assert(crossDrops > 0 && inBatchLosers > 0 && far > 0,
-      s"cross $crossDrops, in-batch $inBatchLosers, far pairs $far")
+    // the fixture reaches both drop paths, and its band joins meet pairs
+    // past the threshold, which the inline verification must reject
+    def bands(h: Long): Seq[Long] = (0 until MediaBandsDense).map { i =>
+      val lo = i * MediaBandCoverDense / MediaBandsDense
+      val hi = (i + 1) * MediaBandCoverDense / MediaBandsDense
+      (h >>> lo) & ((1L << (hi - lo)) - 1)
+    }
+    val bandedFar = batches.flatten.map { case (_, blob) => MediaBytes.dhashDense64(blob) }
+      .combinations(2).count { case Seq(x, y) =>
+        !near(x, y) && bands(x).zip(bands(y)).exists { case (a, b) => a == b } }
+    assert(crossDrops > 0 && inBatchLosers > 0 && bandedFar > 0,
+      s"cross $crossDrops, in-batch $inBatchLosers, band-sharing far pairs $bandedFar")
     assert(streamKept == kept.keySet,
       s"stream kept ${streamKept.toSeq.sorted}, brute force ${kept.keySet.toSeq.sorted}")
   }
