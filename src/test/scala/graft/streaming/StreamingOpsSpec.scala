@@ -1013,31 +1013,30 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
-  /** Drive a processor through (batchId, frame) pairs, crashing once at
-    * every armed boundary before the committing attempt — each "crash"
-    * kills the processor and "restarts" it via `fresh()` (a new instance =
+  /** Drive a sink through (batchId, frame) pairs, crashing once at every
+    * armed boundary before the committing attempt — each "crash" kills
+    * the sink and "restarts" it via `fresh()` (a new instance =
     * checkpoint-recovery bootstrap from the commit log + state changelog),
     * then REPLAYS the same batch, exactly as a restarted stream would. */
-  private def crashReplayDrive[P](
+  private def crashReplayDrive(
       batches: Seq[(Long, org.apache.spark.sql.DataFrame)],
       sites: Seq[String],
-      fresh: (String => Unit) => P)(
-      apply: (P, Long, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+      fresh: (String => Unit) => StreamingOps.ExactlyOnceSink): Unit = {
     var armed: Option[String] = None
     val fault: String => Unit = p => if (armed.contains(p)) {
       armed = None
       throw new RuntimeException(s"injected crash $p")
     }
-    var proc = fresh(fault)
+    var sink = fresh(fault)
     batches.foreach { case (b, df) =>
       sites.foreach { site =>
         armed = Some(site)
-        try { apply(proc, b, df); armed = None } catch {
+        try { sink.apply(df, b); armed = None } catch {
           case e: RuntimeException if e.getMessage.startsWith("injected") =>
-            proc = fresh(fault)
+            sink = fresh(fault)
         }
       }
-      apply(proc, b, df) // converging replay (no-op if the marker landed)
+      sink.apply(df, b) // converging replay (no-op if the marker landed)
     }
   }
 
@@ -1137,9 +1136,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(kept(ref).toSet == fx.expected)
 
     val out = tmpDir(s"${fx.name}crash")
-    crashReplayDrive[StreamingOps.ExactlyOnceSink](
-      fx.batches, sites, fp => fx.sink(s"$out/state", s"$out/kept", fp))(
-      (p, b, df) => p.apply(df, b))
+    crashReplayDrive(fx.batches, sites, fp => fx.sink(s"$out/state", s"$out/kept", fp))
     val crashed = kept(out)
     assert(crashed.toSet == fx.expected, s"crashed run diverged: $crashed")
     assert(crashed.length == crashed.toSet.size, s"double-applied batch: $crashed")
